@@ -74,8 +74,8 @@ import org.apache.spark.sql.SparkSession
   * PINNED ARTIFACTS (r14): cross-query derivations (co-purchase edges,
   * near-dup pair tables, the curated remnant — see graft.Caches.pinned)
   * are built once, in the FIRST consumer's cold run, and reused by later
-  * queries and reps; Caches.releaseAll does not drop them. Per-query
-  * numbers for pin consumers are therefore INCREMENTAL cost given the
+  * queries and reps; a query's Caches.scoped exit does not drop them.
+  * Per-query numbers for pin consumers are therefore INCREMENTAL cost given the
   * materialized artifact — the production reading, where shared tables
   * are written once, not re-derived per query. The build cost stays
   * visible in the first consumer's cold number, and every pin's hit
@@ -148,8 +148,8 @@ object Bench {
     // (storage level becomes invalid). The listener bus is async, so the
     // per-run window is approximate — good enough to tell "cache was
     // under eviction pressure" from "plan is slow". Counted only inside
-    // the timed region (the finally-releaseAll's own unpersists land
-    // after the snapshot).
+    // the timed region (the query scope's own unpersists land after the
+    // snapshot).
     val dropped = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -234,7 +234,8 @@ object Bench {
         // toRdd is a raw RDD action, which bypasses the
         // QueryExecutionListener — log observed graft_* counts directly
         // so candidate-set sizes stay visible next to the timings.
-        try {
+        // The query scope drops operator-persisted intermediates on exit.
+        try Caches.scoped {
           val qe = fn(spark, sfDir).queryExecution
           qe.toRdd.foreach(_ => ())
           Metrics.logObserved(qe)
@@ -243,7 +244,6 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
-        finally Caches.releaseAll() // drop operator-persisted intermediates
       val sec = (System.nanoTime() - t0) / 1e9
       repLogs.getOrElseUpdate(name,
         scala.collection.mutable.ListBuffer.empty[Double]) +=

@@ -2,96 +2,95 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Registry for DataFrames an operator persisted mid-plan (e.g. the shingle
-  * stage inside Dedup.nearDupMinhash). Operators register the handle; the
-  * harness (Verify/Bench) — or any long-lived session — calls releaseAll()
-  * once the query's result is materialized, so repeated invocations never
-  * accumulate cached blocks and spill files for the life of the context.
+/** Lifetimes for DataFrames an operator persists mid-plan (e.g. the
+  * shingle stage inside Dedup.nearDupMinhash) and for session-lifetime
+  * pinned artifacts.
   *
-  * CONTRACT: releaseAll() is one-query-at-a-time — it unpersists EVERY
-  * registered frame, so two queries running concurrently in one session
-  * would unpersist each other's in-flight intermediates (silent
-  * recomputation; for pid-pinned frames like prefixSumCdf's, silent
-  * wrong answers). scoped {} does NOT share that restriction: it tracks
-  * only the frames ITS OWN THREAD registers while the block runs, so
-  * concurrent queries on other threads are untouched — but two scopes
-  * interleaving on ONE thread (hand-rolled async on a shared thread)
-  * still see each other. A caller who wants fully manual lifetime passes
+  * CONTRACT — scope-only: an operator [[register]]s the frames it
+  * persists; the innermost [[scoped]] block of the registering thread
+  * owns them and unpersists them when it exits. Registrations made on a
+  * [[Par]] thread belong to the scope of the thread that called Par.
+  * Each query's caller (Verify, Bench, the tool mains, a long-lived
+  * service) runs the query inside its own scope, so repeated invocations
+  * never accumulate cached blocks, and concurrent queries in one session
+  * never release each other's intermediates — which matters most for
+  * pid-pinned frames like prefixSumCdf's, whose silent recomputation
+  * would be a wrong answer. There is no global release: a frame
+  * registered outside any scope is untracked and stays the caller's to
+  * unpersist. A caller who wants fully manual lifetime passes
   * `cacheIntermediate = false` where offered and persists at the call
-  * site.
+  * site. Only scopes interleaving on ONE thread (hand-rolled async on a
+  * shared thread) can see each other's frames.
   */
 object Caches {
-  private val handles = scala.collection.mutable.ListBuffer.empty[DataFrame]
-  private val scopes =
-    new ThreadLocal[List[scala.collection.mutable.ListBuffer[DataFrame]]] {
-      override def initialValue: List[scala.collection.mutable.ListBuffer[DataFrame]] = Nil
-    }
+  private[graft] type Scopes = List[scala.collection.mutable.ListBuffer[DataFrame]]
+  private val scopes = ThreadLocal.withInitial[Scopes](() => Nil)
+  private var held = 0 // frames tracked by live scopes
 
-  /** Track a persisted frame; returns it for inline use. If the calling
-    * thread is inside a [[scoped]] block, the innermost scope also claims
-    * the frame for its own cleanup.
+  /** Track a persisted frame in the calling thread's innermost [[scoped]]
+    * block; returns it for inline use. Outside any scope it is untracked.
     */
   def register(df: DataFrame): DataFrame = synchronized {
     // a PINNED artifact flowing back through an operator's internal
     // register-persist (shortestHops & co. persist their input edges;
     // Dataset.persist returns the same instance, so the pinned frame
-    // itself lands here when a query passes it in) must NOT enter the
-    // per-query registry: releaseAll would unpersist the
-    // session-lifetime pin out from under every later consumer — the
-    // pin would keep reporting hits while each consumer silently
-    // recomputed the build (measured: q_graph_degrees steady 2.1 s
-    // before this guard, 0.2 s after).
+    // itself lands here when a query passes it in) must NOT enter a
+    // query scope: the scope exit would unpersist the session-lifetime
+    // pin out from under every later consumer — the pin would keep
+    // reporting hits while each consumer silently recomputed the build
+    // (measured: q_graph_degrees steady 2.1 s before this guard, 0.2 s
+    // after).
     val isPin = pins.values.exists {
       case r: Ready => r.df eq df
       case _ => false
     }
-    if (!isPin) {
-      handles += df
-      scopes.get() match {
-        case innermost :: _ => innermost += df
-        case Nil =>
-      }
+    if (!isPin) scopes.get() match {
+      case innermost :: _ =>
+        innermost += df
+        held += 1
+      case Nil =>
     }
     df
   }
 
-  /** Number of frames currently registered (test/diagnostic hook). */
-  def registeredCount: Int = synchronized(handles.length)
+  /** Number of frames held by live scopes (test/diagnostic hook). */
+  def registeredCount: Int = synchronized(held)
 
-  /** Unpersist (non-blocking) every tracked frame and clear the registry. */
-  def releaseAll(): Unit = synchronized {
-    handles.foreach(_.unpersist(false))
-    handles.clear()
-  }
-
-  /** Scoped lifecycle for long-lived sessions: frames this thread
-    * registers while `body` runs are unpersisted when it exits — normally
-    * OR by exception (try/finally) — without touching frames registered
-    * outside the block or by other threads (per-thread tracking, so a
-    * concurrent query's registrations never land in this scope's
-    * cleanup). Nesting-safe: an inner scope claims and cleans its own
-    * frames first. The body MUST materialize everything it needs
-    * (collect/write/count/localCheckpoint) — the returned value may not
-    * hold a lazy plan over the scope's intermediates, or re-evaluation
-    * recomputes them unpersisted (for prefixSumCdf that also re-samples
-    * range bounds, which its pid-stability contract forbids). Library
-    * callers who invoke exactQuantiles/valueCdf repeatedly wrap each
-    * compute-and-materialize step here instead of calling releaseAll()
-    * (which would clobber concurrent queries' intermediates).
+  /** Query lifetime: frames this thread (or a [[Par]] task it runs)
+    * registers while `body` runs are unpersisted (non-blocking) when it
+    * exits — normally OR by exception — without touching frames of
+    * enclosing scopes or of other threads' scopes. Nesting-safe: an
+    * inner scope claims and cleans its own frames first. The body MUST
+    * materialize everything it needs (collect/write/count/
+    * localCheckpoint) — the returned value may not hold a lazy plan over
+    * the scope's intermediates, or re-evaluation recomputes them
+    * unpersisted (for prefixSumCdf that also re-samples range bounds,
+    * which its pid-stability contract forbids).
     */
   def scoped[T](body: => T): T = {
     val mine = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    scopes.set(mine :: scopes.get())
+    val outer = scopes.get()
+    scopes.set(mine :: outer)
     try body
     finally {
-      scopes.set(scopes.get().tail)
+      scopes.set(outer)
       synchronized {
-        mine.foreach { df =>
-          df.unpersist(false)
-          handles -= df // reference identity: the exact registered handle
-        }
+        mine.foreach(_.unpersist(false))
+        held -= mine.size
       }
     }
+  }
+
+  /** The calling thread's scope stack, for [[withScopes]] on another. */
+  private[graft] def currentScopes: Scopes = scopes.get()
+
+  /** Run `body` with registrations landing in `s` (a [[Par]] thread
+    * adopting its caller's scopes).
+    */
+  private[graft] def withScopes[T](s: Scopes)(body: => T): T = {
+    val saved = scopes.get()
+    scopes.set(s)
+    try body finally scopes.set(saved)
   }
 
   // ---- pinned (cross-query) artifacts -----------------------------------
@@ -105,8 +104,8 @@ object Caches {
 
   /** Session-lifetime materialized artifact, keyed by a caller-chosen
     * string (convention: "what|dataDir") — the cross-QUERY complement to
-    * [[register]]'s per-query lifecycle. [[releaseAll]] does NOT touch
-    * pins: a pinned frame survives the harness's per-query cleanup so N
+    * [[register]]'s per-query lifecycle. A scope exit does NOT touch
+    * pins: a pinned frame survives every query's scope so N
     * queries over the same derivation (the co-purchase edge list, a
     * near-dup pair table, the curated corpus remnant) share ONE build —
     * which is also the correct production shape: a real pipeline
@@ -126,13 +125,13 @@ object Caches {
     * and materialized EAGERLY inside a
     * [[scoped]] block, so intermediates the build itself registers (e.g.
     * nearDupMinhash's shingle stage) are unpersisted the moment the pin
-    * is materialized instead of leaking until the next releaseAll. Keys
+    * is materialized instead of leaking for the pin's lifetime. Keys
     * are scoped to the owning SparkContext: an entry whose session has
     * stopped is rebuilt, never served stale.
     *
     * LOCKING: the key is RESERVED under the monitor but the build (a
     * full Spark job — persist + count) runs OUTSIDE it, so concurrent
-    * register/releaseAll/scoped calls never stall behind a multi-second
+    * register calls and scope exits never stall behind a multi-second
     * materialization. A second caller of the same in-flight key parks on
     * that key's latch, not on the global monitor, and retries once the
     * build publishes (or fails — a failed build clears the reservation

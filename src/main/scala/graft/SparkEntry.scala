@@ -82,44 +82,6 @@ object SparkEntry {
     }
   }
 
-  /** Parallel recursive copy of a fixture artifact — replaces the serial
-    * `FileUtil.copy` tree walk (r21, guide §7.3: ~150 files of pure
-    * driver-side FS metadata work per rep). Deletes `dst`, lists every
-    * file under `src`, copies each on a bounded pool; empty directories
-    * carry no table data so only files are reproduced.
-    */
-  private def copyDirParallel(src: String, dst: String): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-    val files = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.Path]
-    val it = fs.listFiles(srcPath, true)
-    while (it.hasNext) files += it.next().getPath
-    val srcRoot = fs.makeQualified(srcPath).toString
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, files.size)))
-    try {
-      val futs = files.map { f =>
-        val rel = fs.makeQualified(f).toString.stripPrefix(srcRoot)
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
-            org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
-              new org.apache.hadoop.fs.Path(dst + rel), false, conf)
-            ()
-          }
-        })
-      }
-      futs.foreach { fu =>
-        try fu.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-      }
-    } finally pool.shutdownNow()
-  }
-
   /** Exact-quantile GRID over lineitem's measure columns at the UNION of
     * every percentile the registered describe/scale/clamp consumers
     * request — the r14-verdict fix for the exact-CDF family: five
@@ -4206,29 +4168,10 @@ object SparkEntry {
           nCells = 4, graphK = 8, baseDir)
       }
       val work = s"${fixDir(dir)}/ann_index_hier_ins"
-      // r21 (guide §2.6): the artifact copy is pure driver-side FS work
-      // with zero Spark jobs — run it on a thread while the main thread
-      // collects the centroid set from the SOURCE artifact (byte-
-      // identical to the copy's by construction) and the insert runs its
-      // batch-assignment jobs; insertIndexHier parks on the copy barrier
-      // only at its first access to the work dir.
-      val copyTask = new java.util.concurrent.FutureTask[Unit](() =>
-        copyDirParallel(baseDir, work))
-      val copyThread = new Thread(copyTask, "graft-ann-artifact-copy")
-      copyThread.setDaemon(true)
-      copyThread.start()
-      val cents = Similarity.readCentroidsHier(s, baseDir)
-      // readFrom = the immutable base artifact: the merge computes
-      // entirely from it (byte-identical to the in-flight copy), so the
-      // copy barrier is only taken at the first mutation of the work dir
+      // copy-then-insert: the copy overlaps the insert's compute phase,
+      // which reads the immutable base artifact
       Similarity.insertIndexHier(base, batch, "vec_id", "e",
-        graphK = 8, work, preCentroids = Some(cents),
-        awaitArtifact = () =>
-          try copyTask.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException => throw e.getCause
-          },
-        readFrom = Some(baseDir))
+        graphK = 8, work, copyFrom = Some(baseDir))
       val ix = Similarity.loadIndexHier(s, work)
       Similarity.beamSearchKnnHier(emb, "vec_id", "e", ix,
         col("vec_id") >= 10 && col("vec_id") < 20,

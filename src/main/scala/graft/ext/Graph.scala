@@ -142,8 +142,8 @@ object Graph {
     }
     // the loop's last localCheckpoint(true) materialized `ranks`, so the
     // loop-invariant edge cache is no longer needed; release it here so
-    // library callers outside the harness (which calls Caches.releaseAll
-    // between queries) don't accumulate an |E|-row cache per invocation
+    // callers that run many invocations inside one Caches.scoped block
+    // don't accumulate an |E|-row cache per invocation
     e.unpersist(false)
     ranks
   }

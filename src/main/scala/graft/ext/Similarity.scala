@@ -915,9 +915,10 @@ object Similarity {
     *   the production reading, where the kNN graph is BUILT ONCE at
     *   ingest and every search serves from it. When None (library
     *   default) the edge table is per-query persisted via
-    *   [[graft.Caches.register]] and dropped at releaseAll. The
-    *   effective pin key is SUFFIXED internally with graphK and a hash
-    *   of the centroids (r14 ADVICE): two call sites reusing a
+    *   [[graft.Caches.register]] and dropped when the caller's
+    *   [[graft.Caches.scoped]] block exits. The effective pin key is
+    *   SUFFIXED internally with graphK and a hash of the centroids
+    *   (r14 ADVICE): two call sites reusing a
     *   caller-chosen key with different graph parameters must get
     *   different pins, never silently share the wrong edge table.
     */
@@ -946,36 +947,6 @@ object Similarity {
       .distinct()
   }
 
-  /** Start an artifact-write block on a daemon driver thread (guide
-    * §2.6) — the persist/insert lifecycles' writes land in DISJOINT
-    * directories with no cross-dependencies, so their jobs and commit
-    * tails overlap instead of serializing on the driver.
-    */
-  private def startTask(b: => Unit): java.util.concurrent.FutureTask[Unit] = {
-    val t = new java.util.concurrent.FutureTask[Unit](() => b)
-    val th = new Thread(t, "graft-ann-writer")
-    th.setDaemon(true)
-    th.start()
-    t
-  }
-
-  /** Await every task; rethrow the FIRST failure in input order (the
-    * parMap discipline: deterministic attribution, nothing interrupted
-    * mid-write).
-    */
-  private def awaitAll(
-      tasks: Seq[java.util.concurrent.FutureTask[Unit]]): Unit = {
-    var err: Throwable = null
-    tasks.foreach { t =>
-      try t.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          if (err == null) err = e.getCause
-      }
-    }
-    if (err != null) throw err
-  }
-
   def persistIndex(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Long, Seq[Double])], graphK: Int,
       dir: String): Unit = {
@@ -990,13 +961,13 @@ object Similarity {
     // r21 §2.6: the two writes are independent (disjoint dirs) — the
     // tiny centroid commit overlaps the edge build instead of
     // serializing in front of it.
-    val centTask = startTask(graft.sources.AvroSink.write(
-      centRows.toDF("cid", "pos", "val").coalesce(1),
-      s"$dir/centroids", overwrite = true))
-    try graft.sources.AvroSink.write(
-      symmetrizedKnnEdges(df, idCol, vecCol, centroids, graphK),
-      s"$dir/edges", overwrite = true)
-    finally awaitAll(Seq(centTask))
+    graft.Par.all(
+      () => graft.sources.AvroSink.write(
+        centRows.toDF("cid", "pos", "val").coalesce(1),
+        s"$dir/centroids", overwrite = true),
+      () => graft.sources.AvroSink.write(
+        symmetrizedKnnEdges(df, idCol, vecCol, centroids, graphK),
+        s"$dir/edges", overwrite = true))
   }
 
   /** Reload a [[persistIndex]] artifact: (centroids, edges). The
@@ -1232,7 +1203,7 @@ object Similarity {
     // small-files anti-pattern, paid again by every reload, artifact
     // copy and fixture scan). One file is the right layout at any scale:
     // these tables are bounded by the centroid count, not the corpus.
-    // (Written in the §2.6-overlapped earlyTasks below, r21.)
+    // (Written in the §2.6-overlapped Par.all below, r21.)
     val ev = VectorOps.toDouble(col(vecCol))
     val assignEntries = centroids.map { case (cid, cv) =>
       val c = typedLit(cv)
@@ -1258,11 +1229,25 @@ object Similarity {
     //
     // r21 §2.6: the five writes land in DISJOINT directories. The
     // bounded metadata writes and the assign write are independent of
-    // the kNN graph build, so they run on driver threads while the main
-    // thread materializes the graph; the two adjacency writes then
-    // overlap each other (both read the built kg + assignDf caches).
-    val earlyTasks = Seq(
-      startTask {
+    // the kNN graph build, so they run while a third task materializes
+    // the graph; the two adjacency writes then overlap each other (both
+    // read the built kg + assignDf caches).
+    //
+    // r19: the DIRECTED graph (src, rn, dst, cos) persists too, CLUSTER-
+    // PARTITIONED (every kNN edge is intra-cluster by construction) —
+    // what [[insertIndexHier]] needs to merge-and-retrim exactly, laid
+    // out so an insert refreshes ONLY the touched clusters' directories
+    // and every other cluster's files stay byte-identical. The
+    // symmetrized serve edges take the same layout for the same reason.
+    val kg = graft.Caches.register(
+      knnGraph(df, idCol, vecCol, centroids, graphK)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val srcCid = assignDf.select(col("id").as("src"), col("cid"))
+    val sym = kg.select(col("src"), col("dst"))
+      .union(kg.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+    graft.Par.all(
+      () => {
         graft.sources.AvroSink.write(
           cells.flatMap { case (cell, v, r) =>
             v.zipWithIndex.map { case (x, i) => (cell, i, x, r) }
@@ -1274,39 +1259,54 @@ object Similarity {
           }.toDF("cid", "cell", "pos", "val").coalesce(1),
           s"$dir/centroids", overwrite = true)
       },
-      startTask(graft.sources.AvroSink.writePartitioned(assignDf,
-        s"$dir/assign", Seq("cid"), overwrite = true)))
-    // r19: the DIRECTED graph (src, rn, dst, cos) persists too, CLUSTER-
-    // PARTITIONED (every kNN edge is intra-cluster by construction) —
-    // what [[insertIndexHier]] needs to merge-and-retrim exactly, laid
-    // out so an insert refreshes ONLY the touched clusters' directories
-    // and every other cluster's files stay byte-identical. The
-    // symmetrized serve edges take the same layout for the same reason.
-    val kg = graft.Caches.register(
-      knnGraph(df, idCol, vecCol, centroids, graphK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val srcCid = assignDf.select(col("id").as("src"), col("cid"))
-    val lateTasks =
-      try {
-        kg.count() // overlapped with the early writes
-        Seq(startTask(graft.sources.AvroSink.writePartitioned(
-          kg.join(srcCid, Seq("src")).select("src", "rn", "dst", "cos", "cid"),
-          s"$dir/graph", Seq("cid"), overwrite = true)))
-      } catch {
-        case e: Throwable =>
-          try awaitAll(earlyTasks) catch { case _: Throwable => }
-          throw e
+      () => graft.sources.AvroSink.writePartitioned(assignDf,
+        s"$dir/assign", Seq("cid"), overwrite = true),
+      () => {
+        kg.count() // overlapped with the metadata and assign writes
+        graft.Par.all(
+          () => graft.sources.AvroSink.writePartitioned(
+            kg.join(srcCid, Seq("src")).select("src", "rn", "dst", "cos", "cid"),
+            s"$dir/graph", Seq("cid"), overwrite = true),
+          () => graft.sources.AvroSink.writePartitioned(
+            sym.join(srcCid, Seq("src")).select("src", "dst", "cid"),
+            s"$dir/edges", Seq("cid"), overwrite = true))
+      })
+  }
+
+  /** Collect a [[persistIndexHier]] artifact's centroid vectors
+    * (bounded: n_centroids × dims exploded rows).
+    */
+  private def readCentroidsHier(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[(Long, Seq[Double])] =
+    spark.read.format("graft-avro").load(s"$dir/centroids")
+      .select("cid", "pos", "val").collect()
+      .map(r => (r.getAs[Long]("cid"), r.getAs[Int]("pos"),
+        r.getAs[Double]("val")))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (cid, rows) =>
+        (cid, rows.sortBy(_._2).map(_._3).toIndexedSeq: Seq[Double])
       }
-    val sym = kg.select(col("src"), col("dst"))
-      .union(kg.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    var edgesErr: Throwable = null
-    try graft.sources.AvroSink.writePartitioned(
-      sym.join(srcCid, Seq("src")).select("src", "dst", "cid"),
-      s"$dir/edges", Seq("cid"), overwrite = true)
-    catch { case e: Throwable => edgesErr = e }
-    awaitAll(earlyTasks ++ lateTasks)
-    if (edgesErr != null) throw edgesErr
+
+  /** Recursive copy of an index artifact, one [[graft.Par]] task per
+    * file (r21, guide §7.3: ~150 files of pure driver-side FS metadata
+    * work per copy). Deletes `dst` first; empty directories carry no
+    * table data, so only files are reproduced.
+    */
+  private def copyDir(src: String, dst: String): Unit = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val srcPath = new org.apache.hadoop.fs.Path(src)
+    val fs = srcPath.getFileSystem(conf)
+    fs.delete(new org.apache.hadoop.fs.Path(dst), true)
+    val files = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.hadoop.fs.Path]
+    val it = fs.listFiles(srcPath, true)
+    while (it.hasNext) files += it.next().getPath
+    val srcRoot = fs.makeQualified(srcPath).toString
+    graft.Par.map(files.toSeq) { f =>
+      val rel = fs.makeQualified(f).toString.stripPrefix(srcRoot)
+      org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
+        new org.apache.hadoop.fs.Path(dst + rel), false, conf)
+    }
   }
 
   /** INCREMENTAL batch insert into a persisted two-level index (r19) —
@@ -1331,168 +1331,133 @@ object Similarity {
     * prior artifact after a crash, or enable the manifest log
     * ([[graft.sources.AvroVersions.enable]]) on the artifact
     * directories for fenced, snapshot-isolated commits.
-    */
-  /** Collect a [[persistIndexHier]] artifact's centroid vectors
-    * (bounded: n_centroids × dims exploded rows) — the shared reader of
-    * [[insertIndexHier]] and callers that overlap the collect with
-    * independent driver work (guide §2.6).
-    */
-  def readCentroidsHier(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(Long, Seq[Double])] =
-    spark.read.format("graft-avro").load(s"$dir/centroids")
-      .select("cid", "pos", "val").collect()
-      .map(r => (r.getAs[Long]("cid"), r.getAs[Int]("pos"),
-        r.getAs[Double]("val")))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (cid, rows) =>
-        (cid, rows.sortBy(_._2).map(_._3).toIndexedSeq: Seq[Double])
-      }
-
-  /** @param preCentroids the artifact's centroid set, if the caller
-    *   already collected it (e.g. from the source artifact of a copy,
-    *   overlapping the copy itself — the bytes are identical by
-    *   construction). None = read from the artifact here.
-    * @param awaitArtifact §2.6 overlap hook: invoked (idempotently)
-    *   before the first access to `dir`'s files. A caller that prepares
-    *   `dir` asynchronously (artifact copy) passes its barrier here, so
-    *   the batch-assignment jobs — which touch only `batch` and the
-    *   centroid literals — run while the copy is still in flight.
-    * @param readFrom when set, every PRE-INSERT read (centroids, the
-    *   assign table, the touched clusters' graph) comes from this
-    *   directory instead of `dir` — for the copy-then-insert lifecycle
-    *   where `dir` is an in-flight byte-identical copy of `readFrom`:
-    *   the merge then computes entirely from the (immutable) source
-    *   artifact, so the copy barrier moves past the merge
-    *   materialization to the first MUTATION of `dir` and the copy
-    *   overlaps the insert's whole compute phase. Only sound when
-    *   `readFrom`'s contents equal `dir`'s at call time and `readFrom`
-    *   is not mutated concurrently.
+    *
+    * @param copyFrom copy-then-insert: when set, `dir` is first
+    *   replaced by a copy of this artifact and the insert lands in the
+    *   copy, leaving `copyFrom` untouched. The copy (pure driver-side FS
+    *   work) and the insert's whole compute phase — centroid collect,
+    *   batch assignment, merge materialization, all read from the
+    *   immutable `copyFrom` — run as one [[graft.Par.all]], so both have
+    *   finished before the first mutation of `dir`, on every path
+    *   including the empty-batch return. `copyFrom` must not be mutated
+    *   concurrently.
     */
   def insertIndexHier(base: DataFrame, batch: DataFrame, idCol: String,
       vecCol: String, graphK: Int, dir: String,
-      preCentroids: Option[Seq[(Long, Seq[Double])]] = None,
-      awaitArtifact: () => Unit = () => (),
-      readFrom: Option[String] = None): Unit = {
+      copyFrom: Option[String] = None): Unit = {
     require(graphK > 0, "need graphK > 0")
     val spark = base.sparkSession
-    val src = readFrom.getOrElse(dir)
-    // reads that target `dir` itself must wait for the preparer; reads
-    // against a separate immutable source artifact need not
-    if (readFrom.isEmpty) awaitArtifact()
-    val centroids: Seq[(Long, Seq[Double])] =
-      preCentroids.getOrElse(readCentroidsHier(spark, src))
-    require(centroids.nonEmpty, s"$src/centroids is empty")
-    val ev = VectorOps.toDouble(col(vecCol))
-    val assignEntries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(col("v"), col("v")) -
-        lit(2.0) * VectorOps.dotNative(col("v"), c) + VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    // assignedBatch is read FOUR times per insert (touched collect, both
-    // refresh writes via srcCid, the assign append) — persist it (r21,
-    // guide §5); batch-sized and bounded, the touched collect below
-    // materializes it
-    val assignedBatch = graft.Caches.register(batch
-      .select(col(idCol).cast("long").as("id"), ev.as("v"))
-      .select(col("id"),
-        array_min(array(assignEntries: _*)).getField("cid").as("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val touched: Seq[Long] = assignedBatch.select("cid").distinct()
-      .collect().map(_.getLong(0)).sorted.toIndexedSeq
-    if (touched.isEmpty) {
-      // even the no-op insert must hand back a COMPLETE artifact: the
-      // caller reads `dir` next, so take the preparer barrier before
-      // returning
-      awaitArtifact()
-      return
-    }
-    val touchedLit = touched.map(java.lang.Long.valueOf)
-    // the assign table must carry the r20 cluster-partitioned layout — a
-    // legacy FLAT assign dir would read `cid` as a data column here but
-    // fail the partitioned append at the end (the sink's flat-append
-    // gate), leaving the graph/edges refresh half-committed. Fail BEFORE
-    // any mutation instead (r21 ADVICE).
-    require(graft.sources.AvroSink.hasPartitionSpec(s"$src/assign"),
-      s"$src/assign has no partition spec — a pre-r20 flat index " +
-        "artifact cannot take incremental inserts; rebuild it with " +
-        "persistIndexHier first")
-    val baseAssign = spark.read.format("graft-avro").load(s"$src/assign")
-      .select(col("id").cast("long").as("id"), col("cid").cast("long").as("cid"))
-    // base rows of the touched clusters only — the insert's working set
-    val baseTouched = base.join(
-      baseAssign.where(col("cid").isin(touchedLit: _*))
-        .select(col("id").as("__bid")),
-      col(idCol).cast("long") === col("__bid"))
-      .drop("__bid")
-    // the persisted directed graph, partition-pruned to touched clusters
-    val baseGraph = spark.read.format("graft-avro").load(s"$src/graph")
-      .where(col("cid").isin(touchedLit: _*))
-      .select("src", "rn", "dst", "cos")
-    val merged = graft.Caches.register(
-      knnGraphInsert(baseGraph, baseTouched, batch, idCol, vecCol,
-        centroids, graphK)
+    val src = copyFrom.getOrElse(dir)
+    // compute phase: reads `src` only, never mutates anything. Returns
+    // (touched clusters, assigned batch, base assign, merged adjacency),
+    // or None for a batch that touches no cluster.
+    def merge(): Option[(Seq[Long], DataFrame, DataFrame, DataFrame)] = {
+      val centroids = readCentroidsHier(spark, src)
+      require(centroids.nonEmpty, s"$src/centroids is empty")
+      val ev = VectorOps.toDouble(col(vecCol))
+      val assignEntries = centroids.map { case (cid, cv) =>
+        val c = typedLit(cv)
+        val d2 = VectorOps.dotNative(col("v"), col("v")) -
+          lit(2.0) * VectorOps.dotNative(col("v"), c) + VectorOps.dotNative(c, c)
+        struct(d2.as("d2"), lit(cid).as("cid"))
+      }
+      // assignedBatch is read FOUR times per insert (touched collect, both
+      // refresh writes via srcCid, the assign append) — persist it (r21,
+      // guide §5); batch-sized and bounded, the touched collect below
+      // materializes it
+      val assignedBatch = graft.Caches.register(batch
+        .select(col(idCol).cast("long").as("id"), ev.as("v"))
+        .select(col("id"),
+          array_min(array(assignEntries: _*)).getField("cid").as("cid"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // MATERIALIZE before the partition deletes below: with readFrom
-    // unset, merged's lineage READS the graph directory those deletes
-    // unlink — a lazy persist would recompute from vanished files. With
-    // readFrom set the lineage reads the immutable source artifact, but
-    // the eager build is still what lets the two refresh writes below
-    // share one materialization instead of racing to build the cache.
-    merged.count()
-    // first access to `dir` itself below (the deletes/appends): the
-    // async preparer must have finished — with readFrom set, the whole
-    // merge above overlapped the copy
-    awaitArtifact()
-    val srcCid = baseAssign.unionByName(assignedBatch)
-      .where(col("cid").isin(touchedLit: _*))
-      .select(col("id").as("src"), col("cid"))
-    // refresh = partition-grain delete (directory unlink, zero reads) +
-    // clustered append of the merged adjacency
-    def refreshPartDir(sub: String, out: DataFrame): Unit = {
-      graft.sources.AvroSink.deleteWhere(spark, s"$dir/$sub",
-        col("cid").isin(touchedLit: _*))
-      graft.sources.AvroSink.writePartitioned(out, s"$dir/$sub", Seq("cid"))
+      val touched: Seq[Long] = assignedBatch.select("cid").distinct()
+        .collect().map(_.getLong(0)).sorted.toIndexedSeq
+      if (touched.isEmpty) None
+      else {
+        val touchedLit = touched.map(java.lang.Long.valueOf)
+        // the assign table must carry the r20 cluster-partitioned layout —
+        // a legacy FLAT assign dir would read `cid` as a data column here
+        // but fail the partitioned append at the end (the sink's
+        // flat-append gate), leaving the graph/edges refresh
+        // half-committed. Fail BEFORE any mutation instead (r21 ADVICE).
+        require(graft.sources.AvroSink.hasPartitionSpec(s"$src/assign"),
+          s"$src/assign has no partition spec — a pre-r20 flat index " +
+            "artifact cannot take incremental inserts; rebuild it with " +
+            "persistIndexHier first")
+        val baseAssign = spark.read.format("graft-avro").load(s"$src/assign")
+          .select(col("id").cast("long").as("id"),
+            col("cid").cast("long").as("cid"))
+        // base rows of the touched clusters only — the insert's working set
+        val baseTouched = base.join(
+          baseAssign.where(col("cid").isin(touchedLit: _*))
+            .select(col("id").as("__bid")),
+          col(idCol).cast("long") === col("__bid"))
+          .drop("__bid")
+        // the persisted directed graph, partition-pruned to touched clusters
+        val baseGraph = spark.read.format("graft-avro").load(s"$src/graph")
+          .where(col("cid").isin(touchedLit: _*))
+          .select("src", "rn", "dst", "cos")
+        val merged = graft.Caches.register(
+          knnGraphInsert(baseGraph, baseTouched, batch, idCol, vecCol,
+            centroids, graphK)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        // MATERIALIZE before the partition deletes below: without
+        // copyFrom, merged's lineage READS the graph directory those
+        // deletes unlink — a lazy persist would recompute from vanished
+        // files. With copyFrom the eager build is still what lets the two
+        // refresh writes share one materialization instead of racing to
+        // build the cache.
+        merged.count()
+        Some((touched, assignedBatch, baseAssign, merged))
+      }
     }
-    val sym = merged.select(col("src"), col("dst"))
-      .union(merged.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    // r21 (guide §2.6 — overlap independent jobs): the graph and edges
-    // refreshes touch DISJOINT directories and read only materialized
-    // inputs (merged is cached and counted above; srcCid scans the
-    // pre-append assign table, which neither branch mutates), so their
-    // delete+write choreography runs concurrently — the edges jobs
-    // back-fill executors left idle by the graph commit's driver-side
-    // rename tail, halving this section's sequential driver-blocking
-    // decision points. Both branches are awaited before the assign
-    // append below, which stays LAST and serial (crash-ordering note).
-    val edgesTask = new java.util.concurrent.FutureTask[Unit](() =>
-      refreshPartDir("edges",
-        sym.join(srcCid, Seq("src")).select("src", "dst", "cid")))
-    val edgesThread = new Thread(edgesTask, "graft-ann-edges-refresh")
-    edgesThread.setDaemon(true)
-    edgesThread.start()
-    var refreshErr: Throwable = null
-    try refreshPartDir("graph",
-      merged.join(srcCid, Seq("src")).select("src", "rn", "dst", "cos", "cid"))
-    catch { case e: Throwable => refreshErr = e }
-    try edgesTask.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        if (refreshErr == null) refreshErr = e.getCause
+    val prepared = copyFrom match {
+      case None => merge()
+      case Some(from) =>
+        var m: Option[(Seq[Long], DataFrame, DataFrame, DataFrame)] = None
+        graft.Par.all(() => copyDir(from, dir), () => m = merge())
+        m
     }
-    if (refreshErr != null) throw refreshErr
-    // assignment append LAST: a crash above leaves the batch
-    // un-admitted to the corpus join — but NOT blindly re-runnable in
-    // place: a crash inside the graph/edges refresh leaves those
-    // directories partially swapped, and a re-run would merge against
-    // the polluted adjacency (duplicated or missing edges). Recover by
-    // restoring the prior artifact (a copy, or the manifest log per
-    // the method doc); only a crash BEFORE the first delete below is
-    // safely re-runnable in place. Partitioned append — assign is
-    // cluster-partitioned since r20 (see [[persistIndexHier]]).
-    graft.sources.AvroSink.writePartitioned(assignedBatch, s"$dir/assign",
-      Seq("cid"))
+    prepared.foreach { case (touched, assignedBatch, baseAssign, merged) =>
+      val touchedLit = touched.map(java.lang.Long.valueOf)
+      val srcCid = baseAssign.unionByName(assignedBatch)
+        .where(col("cid").isin(touchedLit: _*))
+        .select(col("id").as("src"), col("cid"))
+      // refresh = partition-grain delete (directory unlink, zero reads) +
+      // clustered append of the merged adjacency
+      def refreshPartDir(sub: String, out: DataFrame): Unit = {
+        graft.sources.AvroSink.deleteWhere(spark, s"$dir/$sub",
+          col("cid").isin(touchedLit: _*))
+        graft.sources.AvroSink.writePartitioned(out, s"$dir/$sub", Seq("cid"))
+      }
+      val sym = merged.select(col("src"), col("dst"))
+        .union(merged.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+      // r21 (guide §2.6 — overlap independent jobs): the graph and edges
+      // refreshes touch DISJOINT directories and read only materialized
+      // inputs (merged is cached and counted above; srcCid scans the
+      // pre-append assign table, which neither branch mutates), so their
+      // delete+write choreography runs concurrently — the edges jobs
+      // back-fill executors left idle by the graph commit's driver-side
+      // rename tail. Both finish before the assign append below, which
+      // stays LAST and serial (crash-ordering note).
+      graft.Par.all(
+        () => refreshPartDir("graph", merged.join(srcCid, Seq("src"))
+          .select("src", "rn", "dst", "cos", "cid")),
+        () => refreshPartDir("edges", sym.join(srcCid, Seq("src"))
+          .select("src", "dst", "cid")))
+      // assignment append LAST: a crash above leaves the batch
+      // un-admitted to the corpus join — but NOT blindly re-runnable in
+      // place: a crash inside the graph/edges refresh leaves those
+      // directories partially swapped, and a re-run would merge against
+      // the polluted adjacency (duplicated or missing edges). Recover by
+      // restoring the prior artifact (a copy, or the manifest log per
+      // the method doc); only a crash BEFORE the first delete above is
+      // safely re-runnable in place. Partitioned append — assign is
+      // cluster-partitioned since r20 (see [[persistIndexHier]]).
+      graft.sources.AvroSink.writePartitioned(assignedBatch, s"$dir/assign",
+        Seq("cid"))
+    }
   }
 
   /** Reload a [[persistIndexHier]] artifact. ONLY the cells collect

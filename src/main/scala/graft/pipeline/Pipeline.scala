@@ -99,7 +99,20 @@ object Pipeline {
       val std = Harmonize.standardizeColumns(df)
       std.withColumn(srcCol, lit(i)).withColumn(ordCol, orderKey(std))
     }
-    val unioned = Harmonize.unionByName(tagged)
+    // A column that is text in one source and numeric in another stays
+    // object dtype through the reference's pd.concat, and process_data's
+    // to_numeric(errors='coerce') then nulls its junk tokens element-wise.
+    // Spark's union would instead cast the text side strictly to double,
+    // which throws under ANSI — so coerce that text side per source first.
+    val numericSomewhere = tagged.flatMap(_.schema.fields.collect {
+      case f if f.dataType.isInstanceOf[NumericType] => f.name
+    }).toSet - srcCol - ordCol
+    val unioned = Harmonize.unionByName(tagged.map { df =>
+      val mixed = df.schema.fields.collect {
+        case f if f.dataType == StringType && numericSomewhere(f.name) => f.name
+      }.toSeq
+      if (mixed.isEmpty) df else Clean.coerceNumeric(df, mixed)
+    })
     val processed = process(unioned, ordCol, partitionCols = Seq(srcCol))
     preprocess(processed, excludeCols = Set(srcCol, ordCol))
   }

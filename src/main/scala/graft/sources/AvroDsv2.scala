@@ -131,7 +131,7 @@ class AvroDataSourceV2 extends TableProvider with DataSourceRegister {
         // header opens in bounded parallel (r20); the union itself runs
         // sequentially IN FILE ORDER below, so first-appearance column
         // order and first-conflict error attribution are unchanged
-        AvroDsv2.parMap(files)(f => (f._1, headerFields(f._1)))
+        graft.Par.map(files)(f => (f._1, headerFields(f._1)))
           .foreach { case (p, fields) =>
           fields.foreach { f =>
             merged.get(f.name) match {
@@ -197,46 +197,6 @@ class AvroDataSourceV2 extends TableProvider with DataSourceRegister {
 
 private[sources] object AvroDsv2 {
 
-  /** Bounded-parallel map for driver-side per-file work (r20): header
-    * opens, commit renames, overwrite deletes. These loops are pure
-    * per-file FS metadata operations with no cross-file dependencies,
-    * but they ran strictly serially on the driver — at a few ms per
-    * open/rename, a 64-file table paid hundreds of ms of driver wall
-    * per plan/commit (guide §7.3: driver-side stalls with zero running
-    * tasks). Results come back in input order, so callers' merge/
-    * append logic stays deterministic. Failures rethrow the original
-    * cause. Small inputs short-circuit to a plain map.
-    */
-  def parMap[A, B](xs: Seq[A], par: Int = 16)(f: A => B): Seq[B] =
-    if (xs.lengthCompare(2) < 0 || par <= 1) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(par, xs.size))
-      try {
-        val futs = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[B] {
-            override def call(): B = f(x)
-          })
-        }
-        // r21 ADVICE: await EVERY future before rethrowing — the failure
-        // reported is the first in INPUT order (deterministic
-        // attribution), and in-flight FS operations are never
-        // interrupted mid-rename/mid-write, so an aborted commit leaves
-        // only fully-completed per-file effects, exactly like the old
-        // serial loop up to its failure point.
-        val results: Seq[Either[Throwable, B]] = futs.map { fu =>
-          try Right(fu.get())
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              Left(e.getCause)
-          }
-        }
-        results.map {
-          case Right(b) => b
-          case Left(e) => throw e
-        }
-      } finally pool.shutdownNow()
-    }
   /** Name of the `_file` metadata column (path of the row's container). */
   val FileColumn = "_file"
 

@@ -740,7 +740,7 @@ private[sources] class AvroBatchWrite(schema: StructType, pathStr: String,
             n == "_SUCCESS" || n == AvroPartitions.SpecFile)
           doomed += st.getPath
       }
-      AvroDsv2.parMap(doomed.result())(p => fs.delete(p, false))
+      graft.Par.map(doomed.result())(p => fs.delete(p, false))
     }
     if (partCols.nonEmpty)
       AvroPartitions.writeSpec(pathStr, AvroSink.driverConf(), partSpec)
@@ -760,7 +760,7 @@ private[sources] class AvroBatchWrite(schema: StructType, pathStr: String,
           (tempPath, statsJson, base)
         }
       }.toSeq
-    val added = AvroDsv2.parMap(renames) { case (tempPath, statsJson, base) =>
+    val added = graft.Par.map(renames) { case (tempPath, statsJson, base) =>
       val temp = new Path(tempPath)
       val dir = temp.getParent
       val preferred = new Path(dir, s"$base.avro")

@@ -33,8 +33,7 @@ object BenchProbe {
     }
     def run(name: String): Unit = {
       val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(name)(spark, dir).count()
-      graft.Caches.releaseAll()
+      val n = graft.Caches.scoped(graft.SparkEntry.queries(name)(spark, dir).count())
       println(f"$name%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n%-8d ${state()}")
     }
     prefix.foreach(run)

@@ -44,8 +44,8 @@ object JobCount {
     for (name <- args) {
       jobs.set(0); times.clear(); log.clear()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.1").queryExecution.toRdd.foreach(_ => ())
-      graft.Caches.releaseAll()
+      graft.Caches.scoped(graft.SparkEntry.queries(name)(spark,
+        "/root/testdata/sf0.1").queryExecution.toRdd.foreach(_ => ()))
       val tot = (System.nanoTime() - t0) / 1e9
       import scala.jdk.CollectionConverters._
       println(f"[jobcount] $name%-22s $tot%7.2f s  jobs=${jobs.get()}")

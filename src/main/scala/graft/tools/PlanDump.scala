@@ -35,7 +35,7 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     var failures = 0
     names.split(',').foreach { n =>
-      try {
+      try graft.Caches.scoped {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -46,7 +46,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         failures += 1
         System.err.println(s"[plandump] $n failed: ${e.getMessage}")
-      } finally graft.Caches.releaseAll()
+      }
     }
     spark.stop()
     if (failures > 0) {

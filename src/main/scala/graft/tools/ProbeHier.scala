@@ -21,12 +21,11 @@ object ProbeHier {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val cents = emb.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(8).collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val flat = Similarity.beamRecallAudit(emb, "vec_id", "e",
-        cents.toIndexedSeq, col("vec_id") < 10, k = 10, beamWidth = 8,
+    val flat = graft.Caches.scoped(Similarity.beamRecallAudit(emb, "vec_id",
+        "e", cents.toIndexedSeq, col("vec_id") < 10, k = 10, beamWidth = 8,
         hops = 6, graphK = 8, nProbe = 4)
-      .agg(avg("recall"), min("recall")).collect().head
+      .agg(avg("recall"), min("recall")).collect().head)
     println(s"[probe] flat nProbe=4: avg=${flat.get(0)} min=${flat.get(1)}")
-    graft.Caches.releaseAll()
     val ixDir = java.nio.file.Files.createTempDirectory("probe_hier").toString
     Similarity.persistIndexHier(emb, "vec_id", "e", cents.toIndexedSeq,
       nCells = 4, graphK = 8, ixDir)

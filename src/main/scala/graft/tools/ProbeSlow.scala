@@ -21,10 +21,12 @@ object ProbeSlow {
       val t0 = System.nanoTime()
       // same timing contract as Bench: full materialization, no
       // count()-induced projection prune / sort elimination
-      val qe = graft.SparkEntry.queries(name)(spark, dir).queryExecution
-      val n = qe.toRdd.mapPartitions(it => Iterator.single(it.size.toLong)).sum().toLong
-      graft.Metrics.logObserved(qe) // raw RDD action bypasses the listener
-      graft.Caches.releaseAll()
+      val n = graft.Caches.scoped {
+        val qe = graft.SparkEntry.queries(name)(spark, dir).queryExecution
+        val n = qe.toRdd.mapPartitions(it => Iterator.single(it.size.toLong)).sum().toLong
+        graft.Metrics.logObserved(qe) // raw RDD action bypasses the listener
+        n
+      }
       println(f"$name%-22s ${(System.nanoTime()-t0)/1e9}%8.2f s  rows=$n")
     }
     spark.stop()

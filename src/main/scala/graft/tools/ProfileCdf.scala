@@ -27,8 +27,7 @@ object ProfileCdf {
     def time(name: String)(f: => Long): Unit = {
       for (i <- 1 to 3) {
         val t0 = System.nanoTime()
-        val n = f
-        graft.Caches.releaseAll()
+        val n = graft.Caches.scoped(f)
         println(f"[prof] $name%-28s rep$i ${(System.nanoTime()-t0)/1e9}%7.2f s  rows=$n")
       }
     }

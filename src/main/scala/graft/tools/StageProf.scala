@@ -38,9 +38,8 @@ object StageProf {
     for (name <- args) {
       stages.clear()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.1")
-        .queryExecution.toRdd.foreach(_ => ())
-      graft.Caches.releaseAll()
+      graft.Caches.scoped(graft.SparkEntry.queries(name)(spark,
+        "/root/testdata/sf0.1").queryExecution.toRdd.foreach(_ => ()))
       println(f"[stageprof] $name ${(System.nanoTime() - t0) / 1e9}%.2f s total")
       import scala.jdk.CollectionConverters._
       stages.asScala.sortBy(-_._1).take(12).foreach { case (d, n, nm) =>

@@ -3,13 +3,13 @@ package graft
 /** Contract tests for the cross-query pin registry — specifically the r15
   * locking fix: the key is reserved under the monitor but the build (a
   * full persist + count Spark job) runs OUTSIDE it, so concurrent
-  * register/releaseAll callers never stall behind a multi-second
+  * register calls and scope exits never stall behind a multi-second
   * materialization, and N concurrent callers of one key still produce
   * exactly ONE build.
   */
 class CachesSpec extends SparkSpec {
 
-  test("concurrent pinned callers share one build; releaseAll never blocks on it") {
+  test("concurrent pinned callers share one build; a scope exit never blocks on it") {
     Caches.releasePinned()
     val builds = new java.util.concurrent.atomic.AtomicInteger
     val failures = new java.util.concurrent.atomic.AtomicInteger
@@ -27,9 +27,12 @@ class CachesSpec extends SparkSpec {
       })
     }
     threads.foreach(_.start())
+    val unrelated = spark.range(5).toDF("id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Thread.sleep(100) // land inside the first caller's build window
     val t0 = System.nanoTime()
-    Caches.releaseAll() // unrelated per-query cleanup must not park on the pin
+    // an unrelated query's scope: its exit must not park on the pin
+    Caches.scoped(Caches.register(unrelated))
     val relMs = (System.nanoTime() - t0) / 1e6
     threads.foreach(_.join())
     assert(failures.get() == 0)
@@ -39,27 +42,28 @@ class CachesSpec extends SparkSpec {
     assert(Caches.pinnedBuildSec(key) >= 0.3,
       "build seconds must cover the build body")
     assert(relMs < 200.0,
-      f"releaseAll blocked $relMs%.0f ms behind an in-flight pin build")
+      f"a scope exit blocked $relMs%.0f ms behind an in-flight pin build")
     Caches.releasePinned()
   }
 
-  test("register() never tracks a pinned frame: releaseAll must not unpersist the pin") {
+  test("register() never tracks a pinned frame: a scope exit must not unpersist the pin") {
     Caches.releasePinned()
     val key = "caches_spec_pin_guard"
     val pin = Caches.pinned(key)(spark.range(100).toDF("id"))
     // the shortestHops pattern: an operator persists + registers the
     // frame it was handed — which IS the pin (persist returns this)
-    Caches.register(pin.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    Caches.releaseAll()
+    Caches.scoped(Caches.register(pin.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     assert(pin.storageLevel !=
       org.apache.spark.storage.StorageLevel.NONE,
-      "releaseAll unpersisted the session-lifetime pin")
+      "a scope exit unpersisted the session-lifetime pin")
     // a derived (non-pin) frame still gets tracked and released
-    val derived = Caches.register(pin.selectExpr("id + 1 AS id2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    assert(Caches.registeredCount == 1)
-    Caches.releaseAll()
+    val derived = Caches.scoped {
+      val derived = Caches.register(pin.selectExpr("id + 1 AS id2")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      assert(Caches.registeredCount == 1)
+      derived
+    }
     assert(derived.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE)
     Caches.releasePinned()

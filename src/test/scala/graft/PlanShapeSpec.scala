@@ -152,14 +152,16 @@ class PlanShapeSpec extends SparkSpec {
 
   private def currentShapes(): Seq[(String, Shape)] =
     Tracked.map { name =>
-      val qe = SparkEntry.queries(name)(spark, SfDir).queryExecution
-      // EXECUTE (sf0.001 — cheap) and count the FINAL adaptive plan:
-      // whole-stage codegen is only inserted per stage at materialization,
-      // so the unexecuted AQE plan reports 0 codegen spans and the r13
-      // >100-agg-fields codegen cliff would be invisible to the snapshot
-      qe.toRdd.foreach(_ => ())
-      val s = shapeOf(qe.executedPlan)
-      Caches.releaseAll() // drop per-query registered intermediates
+      // the scope drops per-query registered intermediates
+      val s = Caches.scoped {
+        val qe = SparkEntry.queries(name)(spark, SfDir).queryExecution
+        // EXECUTE (sf0.001 — cheap) and count the FINAL adaptive plan:
+        // whole-stage codegen is only inserted per stage at materialization,
+        // so the unexecuted AQE plan reports 0 codegen spans and the r13
+        // >100-agg-fields codegen cliff would be invisible to the snapshot
+        qe.toRdd.foreach(_ => ())
+        shapeOf(qe.executedPlan)
+      }
       name -> s
     }
 
@@ -200,19 +202,21 @@ class PlanShapeSpec extends SparkSpec {
     // the column must count real pushdown (v1 parquet scan and the DSv2
     // Avro scan) — a zero here would mean the audit surface went blind
     Seq("q_tpch_q6", "q_s11_avro_pushdown").foreach { n =>
-      val qe = SparkEntry.queries(n)(spark, SfDir).queryExecution
-      qe.toRdd.foreach(_ => ())
-      val s = shapeOf(qe.executedPlan)
-      Caches.releaseAll()
+      val s = Caches.scoped {
+        val qe = SparkEntry.queries(n)(spark, SfDir).queryExecution
+        qe.toRdd.foreach(_ => ())
+        shapeOf(qe.executedPlan)
+      }
       assert(s.pushedFilters > 0, s"$n: no pushed filters counted")
     }
   }
 
   test("the counter flags an injected single-partition exchange") {
-    val base = SparkEntry.queries("q_c1_coerce")(spark, SfDir)
-    val good = shapeOf(base.queryExecution.executedPlan)
-    val bad = shapeOf(base.repartition(1).queryExecution.executedPlan)
-    Caches.releaseAll()
+    val (good, bad) = Caches.scoped {
+      val base = SparkEntry.queries("q_c1_coerce")(spark, SfDir)
+      (shapeOf(base.queryExecution.executedPlan),
+        shapeOf(base.repartition(1).queryExecution.executedPlan))
+    }
     assert(bad.shuffles > good.shuffles,
       s"repartition(1) must surface as an extra exchange: $good vs $bad")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
@@ -29,6 +30,14 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Each test is one query scope: frames its operators register are
+    * released when it ends, so no cached intermediate outlives the test
+    * and leaks into a later suite's plans (the shared session's cache
+    * manager substitutes any cached plan it can match).
+    */
+  override def withFixture(test: NoArgTest): Outcome =
+    Caches.scoped(super.withFixture(test))
 
   def doubles(df: DataFrame, c: String): Seq[Option[Double]] =
     df.select(c).collect().toIndexedSeq.map { r =>

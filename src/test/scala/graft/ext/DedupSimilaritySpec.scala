@@ -221,9 +221,10 @@ class DedupSimilaritySpec extends SparkSpec {
       (5L, Seq(0.0, 1.0, 0.0))
     ).toDF("vec_id", "e")
     val cents = Seq((1L, Seq(1.0, 0.0, 0.0)), (5L, Seq(0.0, 1.0, 0.0)))
-    val out = Similarity.semDedup(vecs, "vec_id", "e", cents, tau = 0.95)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
-    graft.Caches.releaseAll()
+    val out = graft.Caches.scoped {
+      Similarity.semDedup(vecs, "vec_id", "e", cents, tau = 0.95)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
+    }
     assert(out(1L) == (1L, 1) && out(2L) == (1L, 0) && out(3L) == (1L, 0),
       s"1-2-3 must be one group keeping 1: $out")
     assert(out(4L) == (4L, 1) && out(5L) == (5L, 1), s"singletons keep: $out")

@@ -28,6 +28,26 @@ class HierAnnSpec extends SparkSpec {
     .limit(8).collect()
     .map(r => (r.getLong(0), r.getSeq[Double](1))).toIndexedSeq
 
+  private def rows(dir: String, sub: String): Set[String] =
+    spark.read.format("graft-avro").load(s"$dir/$sub")
+      .collect().map(_.toString).toSet
+
+  /** relative path -> md5 of every file under `dir` */
+  private def treeSums(dir: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val files = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map { f =>
+          root.relativize(f).toString ->
+            java.security.MessageDigest.getInstance("MD5")
+              .digest(java.nio.file.Files.readAllBytes(f))
+              .map("%02x".format(_)).mkString
+        }.toMap
+    } finally files.close()
+  }
+
   test("incremental insert equals a full rebuild; untouched clusters stay byte-identical") {
     val ixDir = tempDir()
     val cs = cents // md5-leading 8 of the FULL corpus: fixed literals
@@ -37,8 +57,8 @@ class HierAnnSpec extends SparkSpec {
     val isBatch = col("vec_id") >= 240 && col("vec_id") % 3 === 0
     val base = emb.where(!isBatch)
     val batch = emb.where(isBatch)
-    Similarity.persistIndexHier(base, "vec_id", "e", cs, nCells = 4,
-      graphK = 6, ixDir)
+    graft.Caches.scoped(Similarity.persistIndexHier(base, "vec_id", "e", cs,
+      nCells = 4, graphK = 6, ixDir))
     // per-cluster-directory md5s BEFORE the insert
     def dirSums(sub: String): Map[String, String] = {
       val root = new java.io.File(s"$ixDir/$sub")
@@ -57,8 +77,8 @@ class HierAnnSpec extends SparkSpec {
     val beforeCells = java.nio.file.Files.readAllBytes(
       new java.io.File(s"$ixDir/cells").listFiles()
         .filter(_.getName.endsWith(".avro")).head.toPath).toSeq
-    Similarity.insertIndexHier(base, batch, "vec_id", "e", graphK = 6, ixDir)
-    graft.Caches.releaseAll()
+    graft.Caches.scoped(
+      Similarity.insertIndexHier(base, batch, "vec_id", "e", graphK = 6, ixDir))
     // the routing layer is untouched by construction
     assert(java.nio.file.Files.readAllBytes(
       new java.io.File(s"$ixDir/cells").listFiles()
@@ -86,22 +106,18 @@ class HierAnnSpec extends SparkSpec {
     // rebuild-equivalence: the updated artifact equals a fresh build
     // over base ∪ batch, table for table
     val rebuildDir = tempDir()
-    Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 4,
-      graphK = 6, rebuildDir)
-    graft.Caches.releaseAll()
-    def rows(dir: String, sub: String): Set[String] =
-      spark.read.format("graft-avro").load(s"$dir/$sub")
-        .collect().map(_.toString).toSet
+    graft.Caches.scoped(Similarity.persistIndexHier(emb, "vec_id", "e", cs,
+      nCells = 4, graphK = 6, rebuildDir))
     for (sub <- Seq("assign", "graph", "edges"))
       assert(rows(ixDir, sub) === rows(rebuildDir, sub),
         s"insert path must equal the rebuild for $sub")
     // and therefore the SEARCH over the inserted artifact is the
     // rebuild's search
     val ixIns = Similarity.loadIndexHier(spark, ixDir)
-    val a = Similarity.beamSearchKnnHier(emb, "vec_id", "e", ixIns,
-        col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
-      .collect().map(_.toString).toSeq
-    graft.Caches.releaseAll()
+    val a = graft.Caches.scoped(Similarity.beamSearchKnnHier(emb, "vec_id",
+        "e", ixIns, col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4,
+        hops = 4)
+      .collect().map(_.toString).toSeq)
     val ixReb = Similarity.loadIndexHier(spark, rebuildDir)
     val b = Similarity.beamSearchKnnHier(emb, "vec_id", "e", ixReb,
         col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
@@ -112,13 +128,14 @@ class HierAnnSpec extends SparkSpec {
   test("bound-routed search returns EXACTLY the flat search's results") {
     val ixDir = tempDir()
     val cs = cents
-    Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 4,
-      graphK = 6, ixDir)
-    val ix = Similarity.loadIndexHier(spark, ixDir)
-    val hier = Similarity.beamSearchKnnHier(emb, "vec_id", "e", ix,
-        col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
-      .collect().map(_.toString).toSeq
-    graft.Caches.releaseAll()
+    val hier = graft.Caches.scoped {
+      Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 4,
+        graphK = 6, ixDir)
+      val ix = Similarity.loadIndexHier(spark, ixDir)
+      Similarity.beamSearchKnnHier(emb, "vec_id", "e", ix,
+          col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
+        .collect().map(_.toString).toSeq
+    }
     val flat = Similarity.beamSearchKnn(emb, "vec_id", "e", cs,
         col("vec_id") < 6, k = 8, beamWidth = 4, hops = 4, graphK = 6,
         nProbe = 3)
@@ -161,17 +178,55 @@ class HierAnnSpec extends SparkSpec {
   test("recall audit equals the flat audit number for number") {
     val ixDir = tempDir()
     val cs = cents
-    Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 4,
-      graphK = 6, ixDir)
-    val ix = Similarity.loadIndexHier(spark, ixDir)
-    val hier = Similarity.beamRecallAuditHier(emb, "vec_id", "e", ix,
-        col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
-      .orderBy("query_id").collect().map(_.toString).toSeq
-    graft.Caches.releaseAll()
+    val hier = graft.Caches.scoped {
+      Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 4,
+        graphK = 6, ixDir)
+      val ix = Similarity.loadIndexHier(spark, ixDir)
+      Similarity.beamRecallAuditHier(emb, "vec_id", "e", ix,
+          col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
+        .orderBy("query_id").collect().map(_.toString).toSeq
+    }
     val flat = Similarity.beamRecallAudit(emb, "vec_id", "e", cs,
         col("vec_id") < 6, k = 8, beamWidth = 4, hops = 4, graphK = 6,
         nProbe = 3)
       .orderBy("query_id").collect().map(_.toString).toSeq
     assert(hier === flat)
+  }
+
+  test("copy-then-insert (copyFrom) into a fresh dir equals the rebuild; the source stays untouched") {
+    val cs = cents
+    val isBatch = col("vec_id") >= 240 && col("vec_id") % 3 === 0
+    val base = emb.where(!isBatch)
+    val batch = emb.where(isBatch)
+    val baseDir = tempDir()
+    val rebuildDir = tempDir()
+    graft.Caches.scoped {
+      Similarity.persistIndexHier(base, "vec_id", "e", cs, nCells = 4,
+        graphK = 6, baseDir)
+      Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 4,
+        graphK = 6, rebuildDir)
+    }
+    val baseBefore = treeSums(baseDir)
+    val work = s"${tempDir()}/work" // does not exist yet
+    graft.Caches.scoped(Similarity.insertIndexHier(base, batch, "vec_id",
+      "e", graphK = 6, work, copyFrom = Some(baseDir)))
+    for (sub <- Seq("assign", "graph", "edges"))
+      assert(rows(work, sub) === rows(rebuildDir, sub),
+        s"copy-then-insert must equal the rebuild for $sub")
+    assert(treeSums(baseDir) === baseBefore,
+      "copyFrom must not be mutated by the insert")
+  }
+
+  test("an empty batch with copyFrom still leaves a complete copy of the source") {
+    val baseDir = tempDir()
+    graft.Caches.scoped(Similarity.persistIndexHier(emb, "vec_id", "e",
+      cents, nCells = 4, graphK = 6, baseDir))
+    val work = s"${tempDir()}/work"
+    graft.Caches.scoped(Similarity.insertIndexHier(emb, emb.where(lit(false)),
+      "vec_id", "e", graphK = 6, work, copyFrom = Some(baseDir)))
+    val want = treeSums(baseDir)
+    assert(want.keys.exists(_.endsWith(".avro")))
+    assert(treeSums(work) === want,
+      "the no-op insert must return only after the copy has finished")
   }
 }

@@ -77,13 +77,14 @@ class KnnGraphSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toIndexedSeq
     val base = emb.where("vec_id % 10 != 9")
     val batch = emb.where("vec_id % 10 = 9")
-    val rebuild = Similarity.knnGraph(emb, "vec_id", "e", cents, k = 5)
-    val baseGraph = Similarity.knnGraph(base, "vec_id", "e", cents, k = 5)
-      .localCheckpoint(true)
-    val inserted = Similarity.knnGraphInsert(baseGraph, base, batch,
-      "vec_id", "e", cents, k = 5)
-    assert(rows(inserted) === rows(rebuild))
-    graft.Caches.releaseAll()
+    graft.Caches.scoped {
+      val rebuild = Similarity.knnGraph(emb, "vec_id", "e", cents, k = 5)
+      val baseGraph = Similarity.knnGraph(base, "vec_id", "e", cents, k = 5)
+        .localCheckpoint(true)
+      val inserted = Similarity.knnGraphInsert(baseGraph, base, batch,
+        "vec_id", "e", cents, k = 5)
+      assert(rows(inserted) === rows(rebuild))
+    }
   }
 
   test("insert touches only batch-adjacent adjacency; disjoint clusters pass through verbatim") {
@@ -91,18 +92,19 @@ class KnnGraphSpec extends SparkSpec {
     // byte-identical to the base graph (the verbatim pass-through path)
     val base = vecs
     val batch = Seq((12L, Seq(0.2, 0.8))).toDF("id", "v")
-    val baseGraph = Similarity.knnGraph(base, "id", "v", cents, k = 2)
-      .localCheckpoint(true)
-    val out = Similarity.knnGraphInsert(baseGraph, base, batch,
-      "id", "v", cents, k = 2)
-    val groupA = Set(1L, 2L, 3L)
-    assert(rows(out.where(out("src").isin(1L, 2L, 3L))) ===
-      rows(baseGraph.where(baseGraph("src").isin(1L, 2L, 3L))))
-    // cluster 1 gained the batch node: 10/11 now have 2 neighbors and 12
-    // has its own adjacency; everything equals the rebuild
-    val rebuild = Similarity.knnGraph(base.unionByName(batch), "id", "v", cents, k = 2)
-    assert(rows(out) === rows(rebuild))
-    assert(rows(out).filter(t => !groupA(t._1)).nonEmpty)
-    graft.Caches.releaseAll()
+    graft.Caches.scoped {
+      val baseGraph = Similarity.knnGraph(base, "id", "v", cents, k = 2)
+        .localCheckpoint(true)
+      val out = Similarity.knnGraphInsert(baseGraph, base, batch,
+        "id", "v", cents, k = 2)
+      val groupA = Set(1L, 2L, 3L)
+      assert(rows(out.where(out("src").isin(1L, 2L, 3L))) ===
+        rows(baseGraph.where(baseGraph("src").isin(1L, 2L, 3L))))
+      // cluster 1 gained the batch node: 10/11 now have 2 neighbors and 12
+      // has its own adjacency; everything equals the rebuild
+      val rebuild = Similarity.knnGraph(base.unionByName(batch), "id", "v", cents, k = 2)
+      assert(rows(out) === rows(rebuild))
+      assert(rows(out).filter(t => !groupA(t._1)).nonEmpty)
+    }
   }
 }

@@ -11,9 +11,10 @@ class PackSpec extends SparkSpec {
 
   test("prefixSum matches a single-task window cumsum (global order)") {
     val df = (1 to 997).map(i => (i.toLong, (i % 13 + 1).toLong)).toDF("id", "w")
-    val got = Pack.prefixSum(df, "w", Seq(col("id")), Nil)
-      .select("id", "cum_before").as[(Long, Long)].collect().toMap
-    graft.Caches.releaseAll()
+    val got = graft.Caches.scoped {
+      Pack.prefixSum(df, "w", Seq(col("id")), Nil)
+        .select("id", "cum_before").as[(Long, Long)].collect().toMap
+    }
     var acc = 0L
     for (i <- 1 to 997) {
       assert(got(i.toLong) == acc, s"id $i")
@@ -25,10 +26,11 @@ class PackSpec extends SparkSpec {
     val df = Seq(("a", 1L, Some(5L)), ("a", 2L, None), ("a", 3L, Some(2L)),
       ("b", 1L, Some(7L)), ("b", 2L, Some(1L)))
       .toDF("g", "id", "w")
-    val got = Pack.prefixSum(df, "w", Seq(col("id")), Seq("g"))
-      .select("g", "id", "cum_before").as[(String, Long, Long)]
-      .collect().map { case (g, i, c) => (g, i) -> c }.toMap
-    graft.Caches.releaseAll()
+    val got = graft.Caches.scoped {
+      Pack.prefixSum(df, "w", Seq(col("id")), Seq("g"))
+        .select("g", "id", "cum_before").as[(String, Long, Long)]
+        .collect().map { case (g, i, c) => (g, i) -> c }.toMap
+    }
     assert(got(("a", 1L)) == 0L && got(("a", 2L)) == 5L && got(("a", 3L)) == 5L)
     assert(got(("b", 1L)) == 0L && got(("b", 2L)) == 7L)
   }
@@ -36,10 +38,11 @@ class PackSpec extends SparkSpec {
   test("packSequences: sequences tile the token stream exactly; docs span boundaries") {
     // weights 7, 10, 3, 12 over seqLen 8: stream of 32 tokens = 4 full seqs
     val df = Seq((1L, 7L), (2L, 10L), (3L, 3L), (4L, 12L), (5L, 0L)).toDF("id", "w")
-    val got = Pack.packSequences(df, "w", Seq(col("id")), 8L)
-      .select("seq_idx", "id", "tok_start", "tok_len")
-      .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    graft.Caches.releaseAll()
+    val got = graft.Caches.scoped {
+      Pack.packSequences(df, "w", Seq(col("id")), 8L)
+        .select("seq_idx", "id", "tok_start", "tok_len")
+        .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
+    }
     // doc offsets: 1->0, 2->7, 3->17, 4->20; zero-weight doc 5 contributes nothing
     assert(got.toSeq == Seq(
       (0L, 1L, 0L, 7L), (0L, 2L, 0L, 1L),            // seq 0: doc1[0,7) + doc2[0,1)
@@ -63,9 +66,11 @@ class PackSpec extends SparkSpec {
 
   test("plan: packSequences rides the pinned prefix-sum — no single-task window, no extra exchange") {
     val df = (1 to 5000).map(i => (i.toLong, (i % 7 + 1).toLong)).toDF("id", "w")
-    val out = Pack.packSequences(df, "w", Seq(col("id")), 64L)
-    out.collect()
-    graft.Caches.releaseAll()
+    val out = graft.Caches.scoped {
+      val out = Pack.packSequences(df, "w", Seq(col("id")), 64L)
+      out.collect()
+      out
+    }
     // the range exchange lives inside the pinned RDD lineage (Scan
     // ExistingRDD in the consumer plan — the prefixSum contract); the
     // raw-row cumsum window partitions by physical pid, and the only
@@ -107,10 +112,11 @@ class PackSpec extends SparkSpec {
       ).toDF("id", "tk")
       .withColumn("w", size(col("tk")).cast("long"))
     val slices = Pack.packSequences(docs.select("id", "w"), "w", Seq(col("id")), 4L)
-    val got = Pack.gatherSequences(slices, docs, "id", "tk")
-      .select("seq_idx", "tokens").as[(Long, Seq[String])]
-      .collect().toMap
-    graft.Caches.releaseAll()
+    val got = graft.Caches.scoped {
+      Pack.gatherSequences(slices, docs, "id", "tk")
+        .select("seq_idx", "tokens").as[(Long, Seq[String])]
+        .collect().toMap
+    }
     assert(got == Map(
       0L -> Seq("a", "b", "c", "d"),
       1L -> Seq("e", "f", "g", "h"),
@@ -121,9 +127,10 @@ class PackSpec extends SparkSpec {
     val df = Seq((1L, 40L), (2L, 40L), (3L, 40L), (4L, 10L)).toDF("id", "w")
     // budget 100: id1 cum 0 -> shard 0, id2 cum 40 -> 0, id3 cum 80 -> 0
     // (straddles into 100..119), id4 cum 120 -> shard 1
-    val got = Pack.packByBudget(df, "w", Seq(col("id")), 100L)
-      .select("id", "shard_id").as[(Long, Long)].collect().toMap
-    graft.Caches.releaseAll()
+    val got = graft.Caches.scoped {
+      Pack.packByBudget(df, "w", Seq(col("id")), 100L)
+        .select("id", "shard_id").as[(Long, Long)].collect().toMap
+    }
     assert(got == Map(1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 1L))
   }
 
@@ -132,14 +139,16 @@ class PackSpec extends SparkSpec {
       .toDF("id", "w", "score")
     // budget 50 < top row's own weight: exclusive cumsum keeps id1 (cum 0),
     // drops everything after (cum >= 500)
-    val keep1 = Pack.selectByBudget(df, "w", Seq(col("score").desc, col("id")), 50L)
-      .select("id").as[Long].collect().toSet
-    graft.Caches.releaseAll()
+    val keep1 = graft.Caches.scoped {
+      Pack.selectByBudget(df, "w", Seq(col("score").desc, col("id")), 50L)
+        .select("id").as[Long].collect().toSet
+    }
     assert(keep1 == Set(1L))
     // budget 550: id1 (0) + id2 (500) kept, id3 at 530 kept, id4 at 560 dropped
-    val keep2 = Pack.selectByBudget(df, "w", Seq(col("score").desc, col("id")), 550L)
-      .select("id").as[Long].collect().toSet
-    graft.Caches.releaseAll()
+    val keep2 = graft.Caches.scoped {
+      Pack.selectByBudget(df, "w", Seq(col("score").desc, col("id")), 550L)
+        .select("id").as[Long].collect().toSet
+    }
     assert(keep2 == Set(1L, 2L, 3L))
   }
 
@@ -161,16 +170,17 @@ class PackSpec extends SparkSpec {
       p +: kids.flatMap(allNodes)
     }
     val df = (1 to 2000).map(i => (i.toLong, 3L)).toDF("id", "w")
-    val q = Pack.prefixSum(df, "w", Seq(col("id")), Nil)
-    q.collect()
-    val nodes = allNodes(q.queryExecution.executedPlan)
-    val windows = nodes.collect { case w: WindowExec => w }
-    assert(windows.nonEmpty)
-    // a window with an empty partition spec may only run over the tiny
-    // per-partition totals AGGREGATE, never the raw row stream
-    val badGlobal = windows.filter(w => w.partitionSpec.isEmpty &&
-      !allNodes(w).drop(1).exists(_.isInstanceOf[BaseAggregateExec]))
-    graft.Caches.releaseAll()
+    val badGlobal = graft.Caches.scoped {
+      val q = Pack.prefixSum(df, "w", Seq(col("id")), Nil)
+      q.collect()
+      val nodes = allNodes(q.queryExecution.executedPlan)
+      val windows = nodes.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty)
+      // a window with an empty partition spec may only run over the tiny
+      // per-partition totals AGGREGATE, never the raw row stream
+      windows.filter(w => w.partitionSpec.isEmpty &&
+        !allNodes(w).drop(1).exists(_.isInstanceOf[BaseAggregateExec]))
+    }
     assert(badGlobal.isEmpty,
       s"single-partition window over raw rows:\n${badGlobal.mkString("\n")}")
   }

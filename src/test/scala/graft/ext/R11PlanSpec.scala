@@ -33,11 +33,12 @@ class R11PlanSpec extends SparkSpec {
   }.toDF("doc_id", "text")
 
   test("plan: substring dedup joins on gram hash — no cartesian product anywhere") {
-    val q = SubstringDedup.removeDuplicateSpans(docs, "text", "doc_id",
-      gramTokens = 5, minDocFreq = 2)
-    q.collect()
-    val nodes = allNodes(q.queryExecution.executedPlan)
-    graft.Caches.releaseAll()
+    val nodes = graft.Caches.scoped {
+      val q = SubstringDedup.removeDuplicateSpans(docs, "text", "doc_id",
+        gramTokens = 5, minDocFreq = 2)
+      q.collect()
+      allNodes(q.queryExecution.executedPlan)
+    }
     assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),
       "substring dedup planned a cartesian product")
   }

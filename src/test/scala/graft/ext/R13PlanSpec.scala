@@ -40,17 +40,19 @@ class R13PlanSpec extends SparkSpec {
   }
 
   test("plan: hitsBipartite iterations are equi-joins — no cartesian") {
-    val q = Graph.hitsBipartite(edges)
-    q.collect()
-    noCartesian(allNodes(q.queryExecution.executedPlan), "hitsBipartite")
-    graft.Caches.releaseAll()
+    graft.Caches.scoped {
+      val q = Graph.hitsBipartite(edges)
+      q.collect()
+      noCartesian(allNodes(q.queryExecution.executedPlan), "hitsBipartite")
+    }
   }
 
   test("plan: labelPropagation rounds are equi-joins — no cartesian") {
-    val q = Graph.labelPropagation(edges, iters = 2)
-    q.collect()
-    noCartesian(allNodes(q.queryExecution.executedPlan), "labelPropagation")
-    graft.Caches.releaseAll()
+    graft.Caches.scoped {
+      val q = Graph.labelPropagation(edges, iters = 2)
+      q.collect()
+      noCartesian(allNodes(q.queryExecution.executedPlan), "labelPropagation")
+    }
   }
 
   test("plan: paretoFrontier2d has no unpartitioned window over the data") {

@@ -263,25 +263,25 @@ class Round4OpsSpec extends SparkSpec {
   test("degreeHistogram / assortativity / shortestHops on a crafted graph") {
     // path 1-2-3-4 plus disconnected edge 5-6
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("src", "dst")
-    val hist = Graph.degreeHistogram(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.Caches.releaseAll()
+    val hist = graft.Caches.scoped {
+      Graph.degreeHistogram(edges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(hist == Map(1L -> 4L, 2L -> 2L)) // ends 1,4,5,6 deg1; middle 2,3 deg2
     // the path+island mix cancels to exactly 0; a star is the clean
     // disassortative case (hub links only to leaves)
-    val a = Graph.assortativity(edges).head()
-    graft.Caches.releaseAll()
+    val a = graft.Caches.scoped(Graph.assortativity(edges).head())
     assert(a.getLong(0) == 6L && a.getLong(1) == 4L)
     assert(a.getDouble(2) == 0.0)
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("src", "dst")
-    val as = Graph.assortativity(star).head().getDouble(2)
-    graft.Caches.releaseAll()
+    val as = graft.Caches.scoped(Graph.assortativity(star).head().getDouble(2))
     assert(as == -1.0, s"star assortativity must be -1, got $as")
     // BFS from node 2 (max degree, min id on the tie with 3), 2 hops:
     // the whole path is reached; the 5-6 island is not
-    val hops = Graph.shortestHops(edges, maxHops = 2).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.Caches.releaseAll()
+    val hops = graft.Caches.scoped {
+      Graph.shortestHops(edges, maxHops = 2).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(hops == Map(2L -> 0L, 1L -> 1L, 3L -> 1L, 4L -> 2L))
   }
 
@@ -290,10 +290,11 @@ class Round4OpsSpec extends SparkSpec {
     // top-2 degrees -> sources 0 (deg 4) and 4 (deg 2)
     val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L), (4L, 5L),
       (8L, 9L)).toDF("src", "dst")
-    val out = Graph.harmonicCentrality(edges, maxHops = 3, nSources = 2)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getAs[Long]("n_reached"), r.getAs[Double]("harmonic")))).toMap
-    graft.Caches.releaseAll()
+    val out = graft.Caches.scoped {
+      Graph.harmonicCentrality(edges, maxHops = 3, nSources = 2)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getAs[Long]("n_reached"), r.getAs[Double]("harmonic")))).toMap
+    }
     // H(0) = 4/1 (nodes 1-4) + 1/2 (node 5) = 4.5; island unreached
     assert(out(0L) === ((5L, 4.5)))
     // H(4) = 2/1 (0, 5) + 3/2 (1, 2, 3) = 3.5
@@ -304,9 +305,10 @@ class Round4OpsSpec extends SparkSpec {
     // an Int-keyed edge frame used to ClassCastException on getLong and
     // break the Long-typed seed union; ids are now cast to long up front
     val edges = Seq((1, 2), (2, 3)).toDF("src", "dst")
-    val hops = Graph.shortestHops(edges, maxHops = 2).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.Caches.releaseAll()
+    val hops = graft.Caches.scoped {
+      Graph.shortestHops(edges, maxHops = 2).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(hops == Map(2L -> 0L, 1L -> 1L, 3L -> 1L))
   }
 

@@ -49,13 +49,15 @@ class SimilarityIndexPersistSpec extends SparkSpec {
   test("search from the reloaded index equals the in-session build") {
     val dir = tempDir()
     val cents = centroidsOf(corpus)
-    val inSession = Similarity.beamSearchKnn(corpus, "vid", "e", cents,
-      col("vid") < 5, k = 5, beamWidth = 4, hops = 3, graphK = 4, nProbe = 2)
-      .collect().map(_.toString).toSeq
-    Similarity.persistIndex(corpus, "vid", "e", cents, graphK = 4, dir)
-    // drop every session-cached artifact: the reloaded search must not
-    // lean on any pin — only the on-disk tables
-    graft.Caches.releaseAll()
+    // the scope drops every session-cached artifact on exit: the reloaded
+    // search must not lean on any pin — only the on-disk tables
+    val inSession = graft.Caches.scoped {
+      val inSession = Similarity.beamSearchKnn(corpus, "vid", "e", cents,
+        col("vid") < 5, k = 5, beamWidth = 4, hops = 3, graphK = 4, nProbe = 2)
+        .collect().map(_.toString).toSeq
+      Similarity.persistIndex(corpus, "vid", "e", cents, graphK = 4, dir)
+      inSession
+    }
     val (loadedCents, loadedEdges) = Similarity.loadIndex(spark, dir)
     val reloaded = Similarity.beamSearchKnn(corpus, "vid", "e", loadedCents,
       col("vid") < 5, k = 5, beamWidth = 4, hops = 3, graphK = 4, nProbe = 2,

@@ -575,10 +575,11 @@ class TextMultimodalSpec extends SparkSpec {
   test("noveltyScores: first owner gets the credit, copies get zero") {
     val base = "one two three four five six seven eight nine ten"
     val df = Seq((1L, base), (2L, base), (3L, base + " plus an entirely novel tail of words here")).toDF("doc_id", "text")
-    val out = TextAnalysis.noveltyScores(df, "text", "doc_id", gramTokens = 8)
-      .orderBy("doc_id").collect()
-      .map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    graft.Caches.releaseAll()
+    val out = graft.Caches.scoped {
+      TextAnalysis.noveltyScores(df, "text", "doc_id", gramTokens = 8)
+        .orderBy("doc_id").collect()
+        .map(r => r.getLong(0) -> r.getDouble(3)).toMap
+    }
     assert(out(1L) == 1.0)   // first occurrence of every gram
     assert(out(2L) == 0.0)   // exact copy: nothing novel
     assert(out(3L) > 0.0 && out(3L) < 1.0) // shares the prefix grams only

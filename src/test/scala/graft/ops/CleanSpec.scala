@@ -58,8 +58,9 @@ class CleanSpec extends SparkSpec {
     }
     val df = (1 to 500).map(i => (i, if (i % 7 == 0) None else Some(i.toDouble)))
       .toDF("idx", "v")
-    for (q <- Seq(Clean.interpolate(df, Seq("v"), "idx"),
-                  Clean.ffill(df, Seq("v"), "idx"))) {
+    for (mk <- Seq(() => Clean.interpolate(df, Seq("v"), "idx"),
+                   () => Clean.ffill(df, Seq("v"), "idx"))) graft.Caches.scoped {
+      val q = mk()
       q.collect() // materialize so AQE finalizes the plan
       val nodes = allNodes(q.queryExecution.executedPlan)
       val windows = nodes.collect { case w: WindowExec => w }
@@ -68,7 +69,6 @@ class CleanSpec extends SparkSpec {
         !allNodes(w).drop(1).exists(_.isInstanceOf[BaseAggregateExec]))
       assert(badGlobal.isEmpty,
         s"single-partition window over raw rows:\n${badGlobal.mkString("\n")}")
-      graft.Caches.releaseAll()
     }
   }
 
@@ -82,9 +82,9 @@ class CleanSpec extends SparkSpec {
     // guards (r9: un-pinned carries flipped rows at partition boundaries).
     val rows = (1 to 20000).map(i => (i, if (i % 997 == 0) Some(i.toDouble) else None))
     val df = rows.toDF("idx", "v")
-    val interp = doubles(Clean.interpolate(df, Seq("v"), "idx").orderBy("idx"), "v")
-    val ff = doubles(Clean.ffill(df, Seq("v"), "idx").orderBy("idx"), "v")
-    graft.Caches.releaseAll()
+    val (interp, ff) = graft.Caches.scoped((
+      doubles(Clean.interpolate(df, Seq("v"), "idx").orderBy("idx"), "v"),
+      doubles(Clean.ffill(df, Seq("v"), "idx").orderBy("idx"), "v")))
     // driver-side pandas-semantics reference over the positional index
     val vals = rows.map(_._2)
     val nn = vals.zipWithIndex.collect { case (Some(v), i) => (i, v) }
@@ -128,31 +128,32 @@ class CleanSpec extends SparkSpec {
     }
     val df = (1 to 20000).map(i => (s"k${i % 3}", (i * 7919 % 20011).toDouble))
       .toDF("k", "v")
-    val cdf = Clean.valueCdf(df, "v", Seq("k")).orderBy("k", "__val")
-    val got = cdf.collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getLong(3)))
-    // single-partition reference: per key, running count over sorted values
-    val exp = df.collect().map(r => (r.getString(0), r.getDouble(1)))
-      .groupBy(_._1).toSeq.flatMap { case (k, kvs) =>
-        val counts = kvs.groupBy(_._2).view.mapValues(_.size.toLong).toSeq.sortBy(_._1)
-        counts.scanLeft((k, 0.0, 0L)) { case ((_, _, cum), (v, c)) => (k, v, cum + c) }.drop(1)
-      }.sortBy(t => (t._1, t._2))
-    assert(got.toSeq == exp)
-    // plan shape: the pin hides prefixSumCdf's range exchange below a
-    // Scan ExistingRDD, so the consumer plan may contain NO
-    // REPARTITION_BY_NUM range exchange (one appearing again would mean
-    // the pin was dropped and correctness regressed to optimizer luck)
-    val nodes = allNodes(cdf.queryExecution.executedPlan)
-    val rangeExchanges = nodes.collect {
-      case e: ShuffleExchangeExec
-        if e.outputPartitioning.isInstanceOf[RangePartitioning] &&
-          e.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM => e
+    graft.Caches.scoped {
+      val cdf = Clean.valueCdf(df, "v", Seq("k")).orderBy("k", "__val")
+      val got = cdf.collect()
+        .map(r => (r.getString(0), r.getDouble(1), r.getLong(3)))
+      // single-partition reference: per key, running count over sorted values
+      val exp = df.collect().map(r => (r.getString(0), r.getDouble(1)))
+        .groupBy(_._1).toSeq.flatMap { case (k, kvs) =>
+          val counts = kvs.groupBy(_._2).view.mapValues(_.size.toLong).toSeq.sortBy(_._1)
+          counts.scanLeft((k, 0.0, 0L)) { case ((_, _, cum), (v, c)) => (k, v, cum + c) }.drop(1)
+        }.sortBy(t => (t._1, t._2))
+      assert(got.toSeq == exp)
+      // plan shape: the pin hides prefixSumCdf's range exchange below a
+      // Scan ExistingRDD, so the consumer plan may contain NO
+      // REPARTITION_BY_NUM range exchange (one appearing again would mean
+      // the pin was dropped and correctness regressed to optimizer luck)
+      val nodes = allNodes(cdf.queryExecution.executedPlan)
+      val rangeExchanges = nodes.collect {
+        case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] &&
+            e.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM => e
+      }
+      assert(rangeExchanges.isEmpty,
+        s"prefixSumCdf's range exchange must live below the RDD pin; found ${rangeExchanges.size} in the consumer plan")
+      assert(nodes.exists(_.toString.contains("ExistingRDD")),
+        "expected the RDD pin (Scan ExistingRDD) in the CDF consumer plan")
     }
-    assert(rangeExchanges.isEmpty,
-      s"prefixSumCdf's range exchange must live below the RDD pin; found ${rangeExchanges.size} in the consumer plan")
-    assert(nodes.exists(_.toString.contains("ExistingRDD")),
-      "expected the RDD pin (Scan ExistingRDD) in the CDF consumer plan")
-    graft.Caches.releaseAll()
   }
 
   test("weightedCdf prefix sums are exact across partitions (decimal measure)") {
@@ -165,26 +166,28 @@ class CleanSpec extends SparkSpec {
     val df = (1 to 20000).map { i =>
       (s"k${i % 3}", (i * 7919 % 20011).toDouble, ((i % 7) + 1).toLong)
     }.toDF("k", "v", "w")
-    val cdf = Clean.weightedCdf(df, "v", "w", Seq("k")).orderBy("k", "__val")
-    val got = cdf.collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDecimal(3).longValueExact()))
-    val exp = df.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-      .groupBy(_._1).toSeq.flatMap { case (k, rows) =>
-        val perVal = rows.groupBy(_._2).view.mapValues(_.map(_._3).sum).toSeq.sortBy(_._1)
-        perVal.scanLeft((k, 0.0, 0L)) { case ((_, _, cum), (v, w)) => (k, v, cum + w) }.drop(1)
-      }.sortBy(t => (t._1, t._2))
-    assert(got.toSeq == exp)
-    graft.Caches.releaseAll()
+    graft.Caches.scoped {
+      val cdf = Clean.weightedCdf(df, "v", "w", Seq("k")).orderBy("k", "__val")
+      val got = cdf.collect()
+        .map(r => (r.getString(0), r.getDouble(1), r.getDecimal(3).longValueExact()))
+      val exp = df.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
+        .groupBy(_._1).toSeq.flatMap { case (k, rows) =>
+          val perVal = rows.groupBy(_._2).view.mapValues(_.map(_._3).sum).toSeq.sortBy(_._1)
+          perVal.scanLeft((k, 0.0, 0L)) { case ((_, _, cum), (v, w)) => (k, v, cum + w) }.drop(1)
+        }.sortBy(t => (t._1, t._2))
+      assert(got.toSeq == exp)
+    }
   }
 
   test("quantilesFromExistingCdf rejects a weighted (decimal) CDF loudly") {
     val df = Seq(("a", 1.0, 2L), ("a", 2.0, 3L)).toDF("k", "v", "w")
-    val weighted = Clean.weightedCdf(df, "v", "w", Seq("k"))
-    val e = intercept[IllegalArgumentException] {
-      Clean.quantilesFromExistingCdf(weighted, Seq("k"), Seq(0.5))
+    graft.Caches.scoped {
+      val weighted = Clean.weightedCdf(df, "v", "w", Seq("k"))
+      val e = intercept[IllegalArgumentException] {
+        Clean.quantilesFromExistingCdf(weighted, Seq("k"), Seq(0.5))
+      }
+      assert(e.getMessage.contains("COUNTED"))
     }
-    assert(e.getMessage.contains("COUNTED"))
-    graft.Caches.releaseAll()
   }
 
   test("C1 coercion matches pandas golden ['1','x','3'] -> [1.0, null, 3.0]") {

@@ -155,16 +155,19 @@ class Round5bOpsSpec extends SparkSpec {
     // 1237 rows: floor(1237*0.8) = 989 — a non-round count catches any
     // Bernoulli or per-mille-hash approximation sneaking back in
     val df = (1L to 1237L).toDF("id")
-    val (train, test) = Sampling.splitExact(df, "id", trainPerMille = 800)
-    assert(train.count() == 989L)
-    assert(test.count() == 248L)
-    assert(train.join(test, Seq("id"), "inner").count() == 0)
-    graft.Caches.releaseAll()
+    val train = graft.Caches.scoped {
+      val (train, test) = Sampling.splitExact(df, "id", trainPerMille = 800)
+      assert(train.count() == 989L)
+      assert(test.count() == 248L)
+      assert(train.join(test, Seq("id"), "inner").count() == 0)
+      train
+    }
     // membership is a pure function of the data: repartitioning changes nothing
-    val (train2, test2) = Sampling.splitExact(df.repartition(7), "id", 800)
-    assert(train2.select("id").except(train.select("id")).count() == 0)
-    assert(test2.count() == 248L)
-    graft.Caches.releaseAll()
+    graft.Caches.scoped {
+      val (train2, test2) = Sampling.splitExact(df.repartition(7), "id", 800)
+      assert(train2.select("id").except(train.select("id")).count() == 0)
+      assert(test2.count() == 248L)
+    }
   }
 
   test("C7 imputeMeanBy keeps and fills null-KEY rows (null-safe join)") {

@@ -41,17 +41,19 @@ class Round6OpsSpec extends SparkSpec {
 
   test("Caches.scoped releases its own registrations, leaves outer ones cached") {
     import spark.implicits._
-    val outer = graft.Caches.register(
-      Seq(1, 2, 3).toDF("v").persist())
-    outer.count()
-    val inner = graft.Caches.scoped {
-      val df = graft.Caches.register(Seq(4, 5).toDF("w").persist())
-      df.count() // materialize inside the scope, per the contract
-      df
+    val outer = graft.Caches.scoped {
+      val outer = graft.Caches.register(
+        Seq(1, 2, 3).toDF("v").persist())
+      outer.count()
+      val inner = graft.Caches.scoped {
+        val df = graft.Caches.register(Seq(4, 5).toDF("w").persist())
+        df.count() // materialize inside the scope, per the contract
+        df
+      }
+      assert(outer.storageLevel.useMemory, "outer frame was unpersisted by the scope")
+      assert(!inner.storageLevel.useMemory, "scoped frame still cached after the scope")
+      outer
     }
-    assert(outer.storageLevel.useMemory, "outer frame was unpersisted by the scope")
-    assert(!inner.storageLevel.useMemory, "scoped frame still cached after the scope")
-    graft.Caches.releaseAll()
     assert(!outer.storageLevel.useMemory)
   }
 
@@ -60,7 +62,7 @@ class Round6OpsSpec extends SparkSpec {
     val df = (1 to 1000).map(i => (i % 3, i.toDouble)).toDF("k", "v")
     val before = spark.sparkContext.getPersistentRDDs
     val registeredBefore = graft.Caches.registeredCount
-    // repeated calls through the PUBLIC API, no harness releaseAll between
+    // repeated calls through the PUBLIC API, no caller scope around them
     val rows = (1 to 3).map { _ =>
       Clean.exactQuantilesBy(df, "v", Seq("k"), Seq(0.5)).collect()
     }
@@ -107,7 +109,7 @@ class Round6OpsSpec extends SparkSpec {
     }
     assert(theirs.storageLevel.useMemory,
       "scope unpersisted a concurrent thread's registration")
-    graft.Caches.releaseAll()
+    theirs.unpersist(false) // registered outside any scope: caller-owned
   }
 
   test("q_tpch_q2 returns the min-cost supplier rows (nonempty, cost = per-part min)") {

@@ -290,10 +290,9 @@ class Round7OpsSpec extends SparkSpec {
   test("plan: new round-7 queries never plan a cartesian product") {
     for (q <- Seq("q_dedup_jaccard_prefix", "q_events_attribution",
         "q_events_rfm", "q_events_concurrency", "q_sample_pergroup")) {
-      val plan = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-        .queryExecution.executedPlan.toString
+      val plan = graft.Caches.scoped(graft.SparkEntry.queries(q)(spark,
+        "/root/testdata/sf0.001").queryExecution.executedPlan.toString)
       assert(!plan.contains("CartesianProduct"), s"$q plans a cartesian:\n$plan")
-      graft.Caches.releaseAll()
     }
   }
 

@@ -74,10 +74,9 @@ class Round7cOpsSpec extends SparkSpec {
     val df = (1 to 3).map(i => ("g1", i.toLong, 100L)) ++
       Seq(("g2", 10L, 40L), ("g2", 11L, 30L), ("g2", 12L, 30L))
     val in = df.toDF("g", "id", "w")
-    val out = graft.ext.Pack.selectProportional(in, "w",
+    val out = graft.Caches.scoped(graft.ext.Pack.selectProportional(in, "w",
         Seq(col("id")), 100L, Seq("g"))
-      .select("g", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    graft.Caches.releaseAll()
+      .select("g", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet)
     // g1: cum_before 0,100,200 -> keep only cum<75 => id 1
     // g2: cum_before 0,40,70 -> keep cum<25 => id 10
     assert(out == Set(("g1", 1L), ("g2", 10L)), s"got $out")
@@ -85,13 +84,12 @@ class Round7cOpsSpec extends SparkSpec {
 
   test("selectProportional: selection is stable across input partitioning") {
     val rows = (1L to 400L).map(i => (s"g${i % 3}", i, (i % 7) + 1L))
-    val a = graft.ext.Pack.selectProportional(rows.toDF("g", "id", "w"), "w",
-      Seq(col("id")), 200L, Seq("g")).select("g", "id").collect().toSet
-    graft.Caches.releaseAll()
-    val b = graft.ext.Pack.selectProportional(
+    val a = graft.Caches.scoped(graft.ext.Pack.selectProportional(
+      rows.toDF("g", "id", "w"), "w",
+      Seq(col("id")), 200L, Seq("g")).select("g", "id").collect().toSet)
+    val b = graft.Caches.scoped(graft.ext.Pack.selectProportional(
       rows.toDF("g", "id", "w").repartition(13), "w",
-      Seq(col("id")), 200L, Seq("g")).select("g", "id").collect().toSet
-    graft.Caches.releaseAll()
+      Seq(col("id")), 200L, Seq("g")).select("g", "id").collect().toSet)
     assert(a == b, "proportional selection must not depend on partitioning")
   }
 

@@ -21,6 +21,26 @@ class PipelineSpec extends SparkSpec {
     assert(!out.columns.contains("c_name") && !out.columns.contains("s_name"))
   }
 
+  test("run: a column that is text with junk in one source and numeric in another coerces junk to null") {
+    // pd.concat + to_numeric(errors='coerce'): the junk token becomes null,
+    // element-wise — the same output as feeding that source pre-coerced
+    val mixed = Seq((1L, "1.5"), (2L, "junk"), (3L, "3")).toDF("id", "amt")
+    val coerced = Seq[(Long, Option[Double])]((1L, Some(1.5)), (2L, None),
+      (3L, Some(3.0))).toDF("id", "amt")
+    val numeric = Seq[(Long, Option[Double])]((4L, Some(2.0)), (5L, None),
+      (6L, Some(4.0))).toDF("id", "amt")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      def rows(dfs: Seq[org.apache.spark.sql.DataFrame]): Seq[String] =
+        Pipeline.run(dfs, _ => col("id")).orderBy("__graft_src", "__graft_ord")
+          .collect().map(_.toString).toSeq
+      val got = rows(Seq(mixed, numeric))
+      assert(got.size == 6)
+      assert(got === rows(Seq(coerced, numeric)))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("ingest rejects empty inputs with an explicit error") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_empty").toString
     Seq.empty[(Long, String)].toDF("id", "s").write.mode("overwrite").parquet(s"$tmp/empty.parquet")
