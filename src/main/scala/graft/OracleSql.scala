@@ -53,7 +53,7 @@ object OracleSql {
     * CTEs (verbatim from the green q_sim_knn_graph / q_sim_ivf_recall
     * oracles), then each beam hop unrolled as beam -> unseen-neighbors
     * -> score -> visited-union CTEs. The beam is kept PER (query,
-    * cluster) — the routed-search contract of Similarity.beamSearchKnn —
+    * cluster) — the routed-search contract of Similarity.beamSearchKnnHier —
     * so visited rows carry the node's cluster id. The visited chain and
     * the edge table are MATERIALIZED: v_t is referenced three times per
     * hop (beam, the NOT EXISTS dedup, and the next union) and kg once

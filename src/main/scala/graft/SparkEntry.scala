@@ -4048,11 +4048,11 @@ object SparkEntry {
     }),
 
     // -- HNSW-style routed beam search (r14) over the kNN graph: the
-    // upper layer ranks clusters by centroid distance and enters the 4
-    // nearest via their centroid nodes; the lower layer walks 6 hops of
-    // per-cluster beam-8 over the top-8 kNN edges; top-10 of everything
-    // visited, for the 10 lowest-id query vectors. The oracle replays
-    // every hop as an unrolled CTE ---------------------------------------
+    // upper layer ranks ALL centroids by distance (a one-cell index) and
+    // enters the 4 nearest via their centroid nodes; the lower layer
+    // walks 6 hops of per-cluster beam-8 over the top-8 kNN edges; top-10
+    // of everything visited, for the 10 lowest-id query vectors. The
+    // oracle replays every hop as an unrolled CTE --------------------------
     "q_sim_hnsw_search" -> ((s, dir) => {
       val emb = T(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -4060,18 +4060,18 @@ object SparkEntry {
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
         .limit(8).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      Similarity.beamSearchKnn(emb, "vec_id", "e", cents.toIndexedSeq,
-        col("vec_id") < 10, k = 10, beamWidth = 8, hops = 6, graphK = 8,
-        nProbe = 4, edgePinKey = Some(s"knn_edges_k8|$dir"))
+      val ix = Similarity.indexFlat(emb, "vec_id", "e", cents.toIndexedSeq,
+        graphK = 8, edgePinKey = Some(s"knn_edges_k8|$dir"))
+      Similarity.beamSearchKnnHier(emb, "vec_id", "e", ix,
+        col("vec_id") < 10, k = 10, nProbe = 4, beamWidth = 8, hops = 6)
     }),
 
-    // -- ANN index PERSISTENCE (r17): the centroids + symmetrized kNN
-    // adjacency are written through the DSv2 graft-avro sink and the
-    // search runs from the RELOADED tables (prebuiltEdges — no
-    // corpus-side rebuild, no session pin), the production index
-    // lifecycle. The oracle is the SAME unrolled-CTE replay as
-    // q_sim_hnsw_search: the round-trip must be bit-exact or the
-    // visited set diverges and hash-mismatches ------------------------
+    // -- ANN index PERSISTENCE (r17): the one-cell index is written
+    // through the DSv2 graft-avro sink and the search runs from the
+    // RELOADED tables (no corpus-side rebuild, no session pin), the
+    // production index lifecycle. The oracle is the SAME unrolled-CTE
+    // replay as q_sim_hnsw_search: the round-trip must be bit-exact or
+    // the visited set diverges and hash-mismatches ---------------------
     "q_sim_index_persist" -> ((s, dir) => {
       val emb = T(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -4079,13 +4079,12 @@ object SparkEntry {
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
         .limit(8).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      val ixDir = s"${fixDir(dir)}/ann_index_avro"
-      Similarity.persistIndex(emb, "vec_id", "e", cents.toIndexedSeq,
-        graphK = 8, ixDir)
-      val (loadedCents, loadedEdges) = Similarity.loadIndex(s, ixDir)
-      Similarity.beamSearchKnn(emb, "vec_id", "e", loadedCents,
-        col("vec_id") < 10, k = 10, beamWidth = 8, hops = 6, graphK = 8,
-        nProbe = 4, prebuiltEdges = Some(loadedEdges))
+      val ixDir = s"${fixDir(dir)}/ann_index_hier1_avro"
+      Similarity.persistIndexHier(emb, "vec_id", "e", cents.toIndexedSeq,
+        nCells = 1, graphK = 8, ixDir)
+      val ix = Similarity.loadIndexHier(s, ixDir)
+      Similarity.beamSearchKnnHier(emb, "vec_id", "e", ix,
+        col("vec_id") < 10, k = 10, nProbe = 4, beamWidth = 8, hops = 6)
     }),
 
     // -- serve-only ANN search (r18): the index fixture is built ONCE
@@ -4096,18 +4095,17 @@ object SparkEntry {
       val emb = T(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       val ixDir = s"${fixDir(dir)}/ann_index_avro_serve"
-      fixtureOnce(ixDir, "flat|cents=md5x8|graphK=8|v2") {
+      fixtureOnce(ixDir, "hier|cents=md5x8|nCells=1|graphK=8|v3") {
         val cents = emb
           .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
           .limit(8).collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        Similarity.persistIndex(emb, "vec_id", "e", cents.toIndexedSeq,
-          graphK = 8, ixDir)
+        Similarity.persistIndexHier(emb, "vec_id", "e", cents.toIndexedSeq,
+          nCells = 1, graphK = 8, ixDir)
       }
-      val (loadedCents, loadedEdges) = Similarity.loadIndex(s, ixDir)
-      Similarity.beamSearchKnn(emb, "vec_id", "e", loadedCents,
-        col("vec_id") < 10, k = 10, beamWidth = 8, hops = 6, graphK = 8,
-        nProbe = 4, prebuiltEdges = Some(loadedEdges))
+      val ix = Similarity.loadIndexHier(s, ixDir)
+      Similarity.beamSearchKnnHier(emb, "vec_id", "e", ix,
+        col("vec_id") < 10, k = 10, nProbe = 4, beamWidth = 8, hops = 6)
     }),
 
     // -- TWO-LEVEL routed search (r18): the persisted index carries a
@@ -4210,9 +4208,10 @@ object SparkEntry {
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
         .limit(8).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      Similarity.beamRecallAudit(emb, "vec_id", "e", cents.toIndexedSeq,
-          col("vec_id") < 10, k = 10, beamWidth = 8, hops = 6, graphK = 8,
-          nProbe = 4, edgePinKey = Some(s"knn_edges_k8|$dir"))
+      val ix = Similarity.indexFlat(emb, "vec_id", "e", cents.toIndexedSeq,
+        graphK = 8, edgePinKey = Some(s"knn_edges_k8|$dir"))
+      Similarity.beamRecallAuditHier(emb, "vec_id", "e", ix,
+          col("vec_id") < 10, k = 10, nProbe = 4, beamWidth = 8, hops = 6)
         .orderBy("query_id")
     }),
 

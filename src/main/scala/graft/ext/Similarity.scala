@@ -171,29 +171,46 @@ object Similarity {
       .toDF("rank", "id", "relevance", "mmr_score")
   }
 
+  /** Squared L2 distance as dot(a,a) − 2·dot(a,c) + dot(c,c): every
+    * accumulation runs through the native left-to-right dot kernel an
+    * external oracle replays (`list_dot_product`). The operand order is
+    * part of that contract — reordering changes the last ulp.
+    */
+  private def d2(a: Column, c: Column): Column =
+    VectorOps.dotNative(a, a) - lit(2.0) * VectorOps.dotNative(a, c) +
+      VectorOps.dotNative(c, c)
+
+  /** The driver-side twin of [[d2]], same accumulation order. */
+  private def d2Seq(a: Seq[Double], c: Seq[Double]): Double =
+    dotSeq(a, a) - 2.0 * dotSeq(a, c) + dotSeq(c, c)
+
+  /** One (d2, cid) struct per centroid literal, in centroid order. */
+  private def centroidD2s(v: Column,
+      cents: Seq[(Long, Seq[Double])]): Column =
+    array(cents.map { case (cid, cv) =>
+      struct(d2(v, typedLit(cv)).as("d2"), lit(cid).as("cid"))
+    }: _*)
+
+  /** The (d2, cid) struct of the centroid nearest `v`: lexicographic
+    * struct-min, so ties break to the smaller centroid id.
+    */
+  private def nearestCentroid(v: Column,
+      cents: Seq[(Long, Seq[Double])]): Column =
+    array_min(centroidD2s(v, cents))
+
   /** Deterministic IVF-style assignment to FIXED centroid vectors: each
-    * row goes to its nearest centroid by squared L2 distance, computed
-    * as dot(e,e) − 2·dot(e,c) + dot(c,c) so every accumulation runs
-    * through the same left-to-right dot-product kernel an external
-    * oracle replays (`list_dot_product`) — unlike k-means-derived
-    * centroids, hash-selected fixed centroids make the whole IVF
-    * partitioning step oracle-checkable. Ties break to the smaller
-    * centroid id via lexicographic struct-min. Scan-local (centroids
-    * are literals — no join, no shuffle); `+ 0.0` normalizes a possible
-    * IEEE −0.0 from the subtractive formula on near-identical vectors.
+    * row goes to its nearest centroid by squared L2 distance ([[d2]]) —
+    * unlike k-means-derived centroids, hash-selected fixed centroids
+    * make the whole IVF partitioning step oracle-checkable. Ties break
+    * to the smaller centroid id. Scan-local (centroids are literals — no
+    * join, no shuffle); `+ 0.0` normalizes a possible IEEE −0.0 from the
+    * subtractive formula on near-identical vectors.
     * Output: (id, cluster_id, dist2).
     */
   def assignToCentroids(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Long, Seq[Double])]): DataFrame = {
     require(centroids.nonEmpty, "need at least one centroid")
-    val e = VectorOps.toDouble(col(vecCol))
-    val entries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(e, e) - lit(2.0) * VectorOps.dotNative(e, c) +
-        VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    val best = array_min(array(entries: _*))
+    val best = nearestCentroid(VectorOps.toDouble(col(vecCol)), centroids)
     df.select(col(idCol).as("id"),
       best.getField("cid").as("cluster_id"),
       (round(best.getField("d2"), 6) + lit(0.0)).as("dist2"))
@@ -221,10 +238,8 @@ object Similarity {
     val codes = (0 until nSub).map { m =>
       val sub = slice(e, m * sd + 1, sd)
       val entries = codebook.map { case (cid, cv) =>
-        val c = typedLit(cv.slice(m * sd, (m + 1) * sd))
-        val d2 = VectorOps.dotNative(sub, sub) -
-          lit(2.0) * VectorOps.dotNative(sub, c) + VectorOps.dotNative(c, c)
-        struct(d2.as("d2"), lit(cid).as("cid"))
+        struct(d2(sub, typedLit(cv.slice(m * sd, (m + 1) * sd))).as("d2"),
+          lit(cid).as("cid"))
       }
       array_min(array(entries: _*)).getField("cid").as(s"code_$m")
     }
@@ -255,18 +270,10 @@ object Similarity {
     require(init.nonEmpty && iters >= 0, "need centroids and iters >= 0")
     val dim = init.head._2.length
     val e = VectorOps.toDouble(col(vecCol))
-    def assignExpr(cents: Seq[(Long, Seq[Double])]): Column = {
-      val entries = cents.map { case (cid, cv) =>
-        val c = typedLit(cv)
-        struct((VectorOps.dotNative(e, e) - lit(2.0) * VectorOps.dotNative(e, c) +
-          VectorOps.dotNative(c, c)).as("d2"), lit(cid).as("cid"))
-      }
-      array_min(array(entries: _*))
-    }
     var cents = init
     for (_ <- 0 until iters) {
       val sums = df
-        .select(assignExpr(cents).getField("cid").as("cid"),
+        .select(nearestCentroid(e, cents).getField("cid").as("cid"),
           posexplode(e).as(Seq("pos", "v")))
         .groupBy("cid", "pos")
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
@@ -281,7 +288,7 @@ object Similarity {
       }
       cents = cents.map { case (cid, old) => (cid, byCluster.getOrElse(cid, old)) }
     }
-    val best = assignExpr(cents)
+    val best = nearestCentroid(e, cents)
     df.select(col(idCol).as("id"), best.getField("cid").as("cluster_id"),
       (round(best.getField("d2"), 6) + lit(0.0)).as("dist2"))
   }
@@ -472,24 +479,15 @@ object Similarity {
       centroids: Seq[(Long, Seq[Double])], query: Seq[Double],
       k: Int, nProbe: Int): DataFrame = {
     require(centroids.nonEmpty && nProbe > 0, "need centroids and nProbe > 0")
-    val e = VectorOps.toDouble(col(vecCol))
-    val entries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(e, e) - lit(2.0) * VectorOps.dotNative(e, c) +
-        VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    val cluster = array_min(array(entries: _*)).getField("cid")
-    // probe ranking uses the SAME expanded-dot arithmetic (q·q − 2q·c +
-    // c·c, sequential left-to-right sums) as the per-row assignment and
-    // the oracle's list_dot_product — the direct Σ(a−b)² form differs in
-    // the last ulp and could order near-tied centroids differently at
-    // the nProbe boundary; ties break by centroid id like the oracle
-    def dot(a: Seq[Double], b: Seq[Double]): Double =
-      a.lazyZip(b).map(_ * _).foldLeft(0.0)(_ + _)
-    val probes = centroids.map { case (cid, cv) =>
-      (dot(query, query) - 2.0 * dot(query, cv) + dot(cv, cv), cid)
-    }.sorted.take(nProbe).map(_._2)
+    val cluster = nearestCentroid(VectorOps.toDouble(col(vecCol)), centroids)
+      .getField("cid")
+    // probe ranking uses the SAME expanded-dot arithmetic as the per-row
+    // assignment and the oracle's list_dot_product — the direct Σ(a−b)²
+    // form differs in the last ulp and could order near-tied centroids
+    // differently at the nProbe boundary; ties break by centroid id like
+    // the oracle
+    val probes = centroids.map { case (cid, cv) => (d2Seq(query, cv), cid) }
+      .sorted.take(nProbe).map(_._2)
     df.where(cluster.isin(probes: _*))
       .select(col(idCol).as("id"),
         round(VectorOps.cosineNative(col(vecCol), typedLit(query)), 6).as("cos"))
@@ -521,24 +519,12 @@ object Similarity {
       "need centroids, k > 0, nProbe > 0")
     import org.apache.spark.sql.expressions.Window
     val ev = VectorOps.toDouble(col(vecCol))
-    val assignEntries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(col("v"), col("v")) -
-        lit(2.0) * VectorOps.dotNative(col("v"), c) + VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
     val corpus = df.select(col(idCol).as("id"), ev.as("v"))
       .withColumn("cluster",
-        array_min(array(assignEntries: _*)).getField("cid"))
-    val probeEntries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(col("qv"), col("qv")) -
-        lit(2.0) * VectorOps.dotNative(col("qv"), c) + VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
+        nearestCentroid(col("v"), centroids).getField("cid"))
     val queries = df.where(queryPred).select(col(idCol).as("qid"), ev.as("qv"))
       .withColumn("probes", transform(
-        slice(array_sort(array(probeEntries: _*)), 1, nProbe),
+        slice(array_sort(centroidD2s(col("qv"), centroids)), 1, nProbe),
         s => s.getField("cid")))
     val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
     val ivfTop = corpus
@@ -546,13 +532,32 @@ object Similarity {
       .select(col("qid"), col("id"),
         round(VectorOps.cosineNative(col("v"), col("qv")), 6).as("cos"))
       .withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
-      .select(col("qid"), col("id"), lit(1).as("__hit"))
-    val exactTop = corpus.crossJoin(broadcast(queries.select("qid", "qv")))
+      .select("qid", "id")
+    recallVsExact(corpus, queries.select("qid", "qv"), ivfTop, k)
+  }
+
+  /** Recall@k of an approximate top-k against the exact brute-force
+    * top-k — the one harness every ANN audit reports through. Both
+    * rankings use the round-6 cosine with (cos desc, id) ties, so a miss
+    * is a genuine approximate-path miss, never a tie artifact. The
+    * exact side is the audit's deliberate cost: the query sample
+    * broadcasts across |queries|·|corpus| fused `graft_cos` scores with
+    * a per-query heap. `corpus` = (id, v), `queries` = (qid, qv),
+    * `annTop` = the approximate path's top-k as (qid, id).
+    *
+    * @return (query_id, n_hits, recall) — recall = |ann∩exact| / k
+    */
+  private def recallVsExact(corpus: DataFrame, queries: DataFrame,
+      annTop: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
+    val exactTop = corpus.crossJoin(broadcast(queries))
       .select(col("qid"), col("id"),
         round(VectorOps.cosineNative(col("v"), col("qv")), 6).as("cos"))
       .withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
       .select("qid", "id")
-    exactTop.join(ivfTop, Seq("qid", "id"), "left")
+    exactTop.join(annTop.select(col("qid"), col("id"), lit(1).as("__hit")),
+        Seq("qid", "id"), "left")
       .groupBy(col("qid").as("query_id"))
       .agg(sum(coalesce(col("__hit"), lit(0))).as("n_hits"))
       .select(col("query_id"), col("n_hits"),
@@ -772,13 +777,7 @@ object Similarity {
       centroids: Seq[(Long, Seq[Double])], k: Int): DataFrame = {
     require(centroids.nonEmpty && k > 0, "need centroids and k > 0")
     val e = VectorOps.toDouble(col(vecCol))
-    val entries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(e, e) - lit(2.0) * VectorOps.dotNative(e, c) +
-        VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    val cluster = array_min(array(entries: _*)).getField("cid")
+    val cluster = nearestCentroid(e, centroids).getField("cid")
     val assigned = df.select(col(idCol).cast("long").as("id"),
       e.as("__v"), cluster.as("__c"))
     val pairs = assigned
@@ -800,8 +799,8 @@ object Similarity {
     * into an EXISTING [[knnGraph]] edge table without rebuilding the
     * quadratic within-cluster pair stage — the graph twin of
     * `Dedup.incrementalDedup`, and the missing piece between "graph
-    * built once at ingest" (the [[beamSearchKnn]] premise) and a living
-    * corpus.
+    * built once at ingest" (the [[beamSearchKnnHier]] premise) and a
+    * living corpus.
     *
     * Shape: both sides are assigned to the FIXED centroids (one scan
     * each, the proven argmin kernel — no pairs); the ONLY pair stage is
@@ -829,13 +828,7 @@ object Similarity {
       k: Int): DataFrame = {
     require(centroids.nonEmpty && k > 0, "need centroids and k > 0")
     val e = VectorOps.toDouble(col(vecCol))
-    val entries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(e, e) - lit(2.0) * VectorOps.dotNative(e, c) +
-        VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    val cluster = array_min(array(entries: _*)).getField("cid")
+    val cluster = nearestCentroid(e, centroids).getField("cid")
     def assign(df: DataFrame): DataFrame = df.select(
       col(idCol).cast("long").as("id"), e.as("__v"), cluster.as("__c"))
     val assignedBatch = assign(batch)
@@ -876,125 +869,23 @@ object Similarity {
       .unionByName(batchRows)
   }
 
-  /** HNSW-style graph-ANN QUERY over the [[knnGraph]] backbone: a
-    * two-layer hierarchical search with a fixed hop budget — the search
-    * side of graph ANN (Malkov & Yashunin 2018), deterministic enough to
-    * replay hop by hop in SQL. The UPPER layer routes: clusters are
-    * ranked by centroid distance (the [[ivfTopKFixed]] probe DAG) and
-    * the query enters its `nProbe` nearest via their centroid NODES (the
-    * md5-fixed vectors the graph was bucketed by — each is a real corpus
-    * node). The LOWER layer walks: `hops` rounds of expand-every-kNN-
-    * out-edge of the current beam, score the unseen endpoints, keep the
-    * best `beamWidth` PER (query, cluster) — per-cluster beams, because
-    * the graph's components are the clusters and one global beam
-    * collapses into the single best component (measured recall 0.44
-    * global vs 0.70 routed at the same probe budget). The final top-k
-    * ranks ALL visited nodes globally.
-    *
-    * Scale shape: the edge table is the materialized kNN graph (built
-    * once at ingest at corpus scale — here derived and persisted for the
-    * search's own hops); per hop the frontier is ≤ nProbe·beamWidth·
-    * graphK ids per query, so each round is a broadcast-beam probe into
-    * the edge table plus a bounded scoring join — visited never exceeds
-    * nProbe·(1 + hops·beamWidth·graphK) rows per query, independent of
-    * corpus size. Nothing quadratic, nothing corpus-wide after the
-    * one-time graph build; unlike an IVF probe, the per-cluster cost
-    * does NOT grow with cluster size — that is the graph-ANN trade.
-    *
-    * Determinism: scores are ROUND-6 cosines with (cos desc, id) ties
-    * everywhere (the [[knnGraph]]/[[ivfRecallAudit]] contract), probe
-    * ranking ties break to the smaller centroid id, the hop budget is
-    * fixed — so the visited set and ranking replay exactly and the
-    * oracle unrolls each hop as a CTE.
-    *
-    * @return (query_id, rn, vec_id, cos) — the top-k visited per query
+  /** The symmetrized, distinct layer-0 kNN edge table (src, dst) of a
+    * directed [[knnGraph]] frame — ONE definition shared by the
+    * in-memory [[indexFlat]], [[persistIndexHier]] and
+    * [[insertIndexHier]], so the persisted, inserted and in-memory edge
+    * sets cannot silently diverge. SYMMETRIZED for the walk (HNSW links
+    * are bidirectional): in the directed top-k graph a node that appears
+    * in nobody's neighbor list is unreachable even though its own
+    * out-edges point at well-connected nodes; adding the reverses makes
+    * every node degree >= graphK (measured: recall 0.67 directed vs 0.70
+    * symmetrized, same budget).
     */
-  /** @param edgePinKey when set, the symmetrized kNN edge table is
-    *   materialized through [[graft.Caches.pinned]] under this key
-    *   (convention "what|dataDir") and shared across queries and reps —
-    *   the production reading, where the kNN graph is BUILT ONCE at
-    *   ingest and every search serves from it. When None (library
-    *   default) the edge table is per-query persisted via
-    *   [[graft.Caches.register]] and dropped when the caller's
-    *   [[graft.Caches.scoped]] block exits. The effective pin key is
-    *   SUFFIXED internally with graphK and a hash of the centroids
-    *   (r14 ADVICE): two call sites reusing a
-    *   caller-chosen key with different graph parameters must get
-    *   different pins, never silently share the wrong edge table.
-    */
-  /** PERSIST the ANN index artifacts (r17) — the production index
-    * lifecycle the session pins cannot provide: the IVF/routing
-    * centroids and the symmetrized kNN adjacency are written through
-    * the DSv2 graft-avro sink (commit/abort protocol, stats sidecars),
-    * so a FRESH session reloads and serves them without touching the
-    * corpus. Layout: `<dir>/centroids` = (cid, pos, val) exploded
-    * vectors (the five-primitive sink contract — doubles round-trip
-    * bit-exactly through Avro's binary double), `<dir>/edges` =
-    * (src, dst), already symmetrized and distinct, exactly the table
-    * [[beamSearchKnn]] builds internally.
-    */
-  /** The symmetrized, distinct layer-0 kNN edge table — ONE definition
-    * shared by the in-session [[beamSearchKnn]] build and
-    * [[persistIndex]] (r17 review: two copies could silently diverge,
-    * breaking the persisted-equals-internal contract).
-    */
-  private[graft] def symmetrizedKnnEdges(df: DataFrame, idCol: String,
-      vecCol: String, centroids: Seq[(Long, Seq[Double])],
-      graphK: Int): DataFrame = {
-    val kg = knnGraph(df, idCol, vecCol, centroids, graphK)
-      .select(col("src"), col("dst"))
+  private[graft] def symmetrizedKnnEdges(graph: DataFrame): DataFrame = {
+    val kg = graph.select(col("src"), col("dst"))
     kg.union(kg.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
   }
 
-  def persistIndex(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Long, Seq[Double])], graphK: Int,
-      dir: String): Unit = {
-    require(centroids.nonEmpty && graphK > 0, "need centroids, graphK > 0")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val centRows = centroids.flatMap { case (cid, v) =>
-      v.zipWithIndex.map { case (x, i) => (cid, i, x) }
-    }
-    // bounded metadata table → one container, not one per local
-    // parallelism slot (§6 small files; see [[persistIndexHier]]).
-    // r21 §2.6: the two writes are independent (disjoint dirs) — the
-    // tiny centroid commit overlaps the edge build instead of
-    // serializing in front of it.
-    graft.Par.all(
-      () => graft.sources.AvroSink.write(
-        centRows.toDF("cid", "pos", "val").coalesce(1),
-        s"$dir/centroids", overwrite = true),
-      () => graft.sources.AvroSink.write(
-        symmetrizedKnnEdges(df, idCol, vecCol, centroids, graphK),
-        s"$dir/edges", overwrite = true))
-  }
-
-  /** Reload a [[persistIndex]] artifact: (centroids, edges). The
-    * centroid collect is bounded (n_centroids × dims rows); the edge
-    * table stays distributed — the reload serves [[beamSearchKnn]] via
-    * `prebuiltEdges` without any corpus-side rebuild.
-    */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Seq[(Long, Seq[Double])], DataFrame) = {
-    val cents = spark.read.format("graft-avro").load(s"$dir/centroids")
-      .collect()
-      .map(r => (r.getAs[Long]("cid"), r.getAs[Int]("pos"),
-        r.getAs[Double]("val")))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (cid, rows) =>
-        (cid, rows.sortBy(_._2).map(_._3).toIndexedSeq: Seq[Double])
-      }
-    (cents, spark.read.format("graft-avro").load(s"$dir/edges"))
-  }
-
-  /** @param prebuiltEdges when set, the symmetrized kNN edge table is
-    *   NOT rebuilt from the corpus — the given table (e.g. the
-    *   [[loadIndex]] reload of a [[persistIndex]] artifact) serves the
-    *   walk directly, per-query persisted. The production index
-    *   lifecycle: build once, write through the DSv2 sink, reload in
-    *   any later session.
-    */
   /** Data-derived partition count for a persisted ANN working table
     * (r21, guide §2.2 — size partitions from the data): cached plans are
     * exempt from AQE partition coalescing
@@ -1014,84 +905,11 @@ object Similarity {
     math.max(1L, math.min(bytes / (8L << 20) + 1L, 1L << 20)).toInt
   }
 
-  def beamSearchKnn(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Long, Seq[Double])], queryPred: Column,
-      k: Int, beamWidth: Int = 2, hops: Int = 5, graphK: Int = 8,
-      nProbe: Int = 4, edgePinKey: Option[String] = None,
-      prebuiltEdges: Option[DataFrame] = None): DataFrame = {
-    require(centroids.nonEmpty && k > 0 && beamWidth > 0 && nProbe > 0,
-      "need centroids, k > 0, beamWidth > 0, nProbe > 0")
-    require(hops >= 1 && hops <= 8, s"hops must be in [1, 8]: $hops")
-    import org.apache.spark.sql.expressions.Window
-    val ev = VectorOps.toDouble(col(vecCol))
-    // per-node cluster id rides through the search: the beam is kept PER
-    // (query, cluster), so every routed cluster gets its own exploration
-    // budget instead of one global beam collapsing into the single best
-    // cluster (measured: global beam recall 0.44 vs 0.70 for the routed
-    // variant on the same probe budget)
-    val assignEntries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(col("v"), col("v")) -
-        lit(2.0) * VectorOps.dotNative(col("v"), c) + VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    val corpus = df.select(col(idCol).cast("long").as("id"), ev.as("v"))
-      .withColumn("cid", array_min(array(assignEntries: _*)).getField("cid"))
-    // layer-0 edges, probed once per hop — persist so the graph build
-    // (the expensive part) runs once, not hops+1 times. SYMMETRIZED for
-    // the walk (HNSW links are bidirectional): in the directed top-k
-    // graph a node that appears in nobody's neighbor list is unreachable
-    // even though its own out-edges point at well-connected nodes;
-    // adding the reverses makes every node degree >= graphK (measured:
-    // recall 0.67 directed vs 0.70 symmetrized, same budget)
-    def buildEdges: DataFrame =
-      symmetrizedKnnEdges(df, idCol, vecCol, centroids, graphK)
-    val edges = prebuiltEdges match {
-      case Some(pre) => graft.Caches.register(
-        pre.select(col("src").cast("long"), col("dst").cast("long"))
-          .coalesce(cachedParts(pre))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      case None => edgePinKey match {
-      case Some(key) =>
-        // parameter-proof key: the caller names the artifact, the
-        // parameters that shape it (graphK + the centroid set) are
-        // hashed in here so a mismatch can never alias
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val sig = md.digest(centroids
-            .map { case (cid, cv) => s"$cid:${cv.mkString(",")}" }
-            .mkString(";").getBytes("UTF-8"))
-          .take(4).map(b => f"$b%02x").mkString
-        graft.Caches.pinned(s"$key|gk$graphK|c$sig")(
-          buildEdges.coalesce(cachedParts(df)))
-      case None => graft.Caches.register(buildEdges
-        .coalesce(cachedParts(df))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    }
-    // upper layer: rank clusters by centroid distance (the ivfTopKFixed
-    // probe DAG) and enter the nProbe nearest via their centroid NODES
-    val probeEntries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(col("qv"), col("qv")) -
-        lit(2.0) * VectorOps.dotNative(col("qv"), c) + VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    val queries = df.where(queryPred)
-      .select(col(idCol).cast("long").as("qid"), ev.as("qv"))
-      .withColumn("probes", transform(
-        slice(array_sort(array(probeEntries: _*)), 1, nProbe),
-        s => s.getField("cid")))
-    val entries = queries.select(col("qid"), explode(col("probes")).as("id"))
-    routedBeamWalk(corpus, queries.select("qid", "qv"), entries, edges,
-      k, beamWidth, hops)
-  }
-
-  /** The per-(query, cluster) routed beam walk shared by the
-    * expression-assigned [[beamSearchKnn]] and the table-assigned
-    * persisted-index tier ([[beamSearchKnnHier]]): score the entry
-    * nodes, expand `hops` times through `edges` under a per-(qid, cid)
-    * beam, return the global top-k of everything visited. `corpus` =
-    * (id, v, cid); `queries` = (qid, qv); `entries` = (qid, id).
+  /** The per-(query, cluster) routed beam walk of [[beamSearchKnnHier]]:
+    * score the entry nodes, expand `hops` times through `edges` under a
+    * per-(qid, cid) beam, return the global top-k of everything visited.
+    * `corpus` = (id, v, cid); `queries` = (qid, qv); `entries` =
+    * (qid, id).
     */
   private def routedBeamWalk(corpus: DataFrame, queries: DataFrame,
       entries: DataFrame, edges: DataFrame, k: Int, beamWidth: Int,
@@ -1123,8 +941,8 @@ object Similarity {
   }
 
   // -- two-level (hierarchical) centroid routing (r18) -------------------
-  // At 100 TB the √n centroid set is itself corpus-sized: a flat reload
-  // collects it to the driver and inlines it into probe expressions.
+  // At 100 TB the √n centroid set is itself corpus-sized: a flat index
+  // would collect it to the driver and inline it into probe expressions.
   // The fix is a ROUTING LAYER — centroids-of-centroids: the driver
   // holds only the nCells cell leaders; a query ranks cells from that
   // bounded list, then ranks ONLY the routed cells' member centroids
@@ -1158,35 +976,94 @@ object Similarity {
       s"nCells must be in [1, ${centroids.size}]: $nCells")
     val cells = centroids.take(nCells)
     val assign = centroids.map { case (cid, cv) =>
-      cid -> cells.map { case (cell, clv) =>
-        (dotSeq(cv, cv) - 2.0 * dotSeq(cv, clv) + dotSeq(clv, clv), cell)
-      }.min._2
+      cid -> cells.map { case (cell, clv) => (d2Seq(cv, clv), cell) }.min._2
     }.toMap
     val cellsWithRadius = cells.map { case (cell, clv) =>
       val r = centroids.filter(c => assign(c._1) == cell).map { case (_, cv) =>
         // sqrt is IEEE-exact (unlike pow/ln), so the radius replays
         // bit-identically in the oracle
-        math.sqrt(math.max(0.0,
-          dotSeq(cv, cv) - 2.0 * dotSeq(cv, clv) + dotSeq(clv, clv)))
+        math.sqrt(math.max(0.0, d2Seq(cv, clv)))
       }.foldLeft(0.0)(math.max)
       (cell, clv, r)
     }
     (cellsWithRadius, assign)
   }
 
-  /** The reloaded two-level index: `cells` (leader vector + radius) is
-    * the only driver-side piece (bounded by the cell count); centroids,
-    * the corpus assignment, and the adjacency stay distributed tables.
+  /** The two-level ANN index — the only ANN index type: `cells`
+    * (leader vector + radius) is the only driver-side piece (bounded by
+    * the cell count); centroids (cid, cell, cvec), the corpus assignment
+    * (id, cid), and the adjacency (src, dst) stay distributed tables.
+    * [[indexFlat]] builds the one-cell (flat) index in memory,
+    * [[loadIndexHier]] reloads a [[persistIndexHier]] artifact.
     */
   final case class HierIndex(cells: Seq[(Long, Seq[Double], Double)],
       centroids: DataFrame, assign: DataFrame, edges: DataFrame)
 
-  /** PERSIST the two-level ANN index (r18) — [[persistIndex]] plus the
-    * routing layer and the corpus assignment: `<dir>/cells` =
-    * (cell, pos, val), `<dir>/centroids` = (cid, cell, pos, val),
-    * `<dir>/assign` = (id, cid), `<dir>/edges` = (src, dst). The
-    * build-time corpus assignment enumerates the centroid literals once
-    * (the k-means-style ingest job); SERVE time never does.
+  /** Build the one-cell (flat) [[HierIndex]] in memory, without the
+    * persist/reload round trip: the tables `persistIndexHier(nCells = 1)`
+    * writes — the cell from [[cellAssignOf]], the centroid table from the
+    * driver Seq, the corpus assignment by the nearest-centroid
+    * expression, the [[symmetrizedKnnEdges]] adjacency — so a search over
+    * it equals the search over the reloaded artifact row for row. The one
+    * cell holds every centroid: pass 1 of [[beamSearchKnnHier]] ranks all
+    * of them by (d², cid) and pass 2 admits that same cell, which is the
+    * flat centroid ranking. Multi-cell indexes come from
+    * [[persistIndexHier]].
+    *
+    * @param edgePinKey when set, the edge table is materialized through
+    *   [[graft.Caches.pinned]] under this key (convention
+    *   "what|dataDir") and shared across queries and reps — the
+    *   production reading, where the kNN graph is BUILT ONCE at ingest
+    *   and every search serves from it. When None (library default) the
+    *   edge table stays lazy and [[beamSearchKnnHier]] persists it for
+    *   the caller's [[graft.Caches.scoped]] block. The effective pin key
+    *   is SUFFIXED internally with graphK and a hash of the centroids
+    *   (r14 ADVICE): two call sites reusing a caller-chosen key with
+    *   different graph parameters must get different pins, never
+    *   silently share the wrong edge table.
+    */
+  def indexFlat(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[(Long, Seq[Double])], graphK: Int,
+      edgePinKey: Option[String] = None): HierIndex = {
+    require(centroids.nonEmpty && graphK > 0, "need centroids, graphK > 0")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val (cells, cellOf) = cellAssignOf(centroids, 1)
+    val cvecs = centroids.map { case (cid, v) => (cid, cellOf(cid), v) }
+      .toDF("cid", "cell", "cvec")
+    val assign = df.select(col(idCol).cast("long").as("id"),
+      nearestCentroid(VectorOps.toDouble(col(vecCol)), centroids)
+        .getField("cid").as("cid"))
+    val edges = symmetrizedKnnEdges(
+      knnGraph(df, idCol, vecCol, centroids, graphK)).coalesce(cachedParts(df))
+    HierIndex(cells, cvecs, assign, edgePinKey match {
+      case Some(key) =>
+        // parameter-proof key: the caller names the artifact, the
+        // parameters that shape it (graphK + the centroid set) are
+        // hashed in here so a mismatch can never alias
+        val md = java.security.MessageDigest.getInstance("MD5")
+        val sig = md.digest(centroids
+            .map { case (cid, cv) => s"$cid:${cv.mkString(",")}" }
+            .mkString(";").getBytes("UTF-8"))
+          .take(4).map(b => f"$b%02x").mkString
+        graft.Caches.pinned(s"$key|gk$graphK|c$sig")(edges)
+      case None => edges
+    })
+  }
+
+  /** PERSIST the two-level ANN index (r17/r18) — the production index
+    * lifecycle the session pins cannot provide: the tables of a
+    * [[HierIndex]] are written through the DSv2 graft-avro sink
+    * (commit/abort protocol, stats sidecars), so a FRESH session
+    * reloads and serves them without touching the corpus. Layout:
+    * `<dir>/cells` = (cell, pos, val, radius), `<dir>/centroids` =
+    * (cid, cell, pos, val) — vectors exploded to the five-primitive sink
+    * contract, doubles round-trip bit-exactly through Avro's binary
+    * double — `<dir>/assign` = (id, cid), `<dir>/graph` =
+    * (src, rn, dst, cos), `<dir>/edges` = (src, dst), the last three
+    * partitioned by cid. The build-time corpus assignment enumerates the
+    * centroid literals once (the k-means-style ingest job); SERVE time
+    * never does.
     */
   def persistIndexHier(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Long, Seq[Double])], nCells: Int, graphK: Int,
@@ -1205,18 +1082,12 @@ object Similarity {
     // these tables are bounded by the centroid count, not the corpus.
     // (Written in the §2.6-overlapped Par.all below, r21.)
     val ev = VectorOps.toDouble(col(vecCol))
-    val assignEntries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(col("v"), col("v")) -
-        lit(2.0) * VectorOps.dotNative(col("v"), c) + VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
     // persisted: the assignment feeds its own partitioned write AND both
     // adjacency writes' srcCid joins (r21 — was recomputed per consumer)
     val assignDf = graft.Caches.register(
       df.select(col(idCol).cast("long").as("id"), ev.as("v"))
         .select(col("id"),
-          array_min(array(assignEntries: _*)).getField("cid").as("cid"))
+          nearestCentroid(col("v"), centroids).getField("cid").as("cid"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     assignDf.count() // build once; the concurrent writers below only read
     // assign is CLUSTER-PARTITIONED like graph/edges (r20): the insert
@@ -1243,9 +1114,7 @@ object Similarity {
       knnGraph(df, idCol, vecCol, centroids, graphK)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val srcCid = assignDf.select(col("id").as("src"), col("cid"))
-    val sym = kg.select(col("src"), col("dst"))
-      .union(kg.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val sym = symmetrizedKnnEdges(kg)
     graft.Par.all(
       () => {
         graft.sources.AvroSink.write(
@@ -1355,12 +1224,6 @@ object Similarity {
       val centroids = readCentroidsHier(spark, src)
       require(centroids.nonEmpty, s"$src/centroids is empty")
       val ev = VectorOps.toDouble(col(vecCol))
-      val assignEntries = centroids.map { case (cid, cv) =>
-        val c = typedLit(cv)
-        val d2 = VectorOps.dotNative(col("v"), col("v")) -
-          lit(2.0) * VectorOps.dotNative(col("v"), c) + VectorOps.dotNative(c, c)
-        struct(d2.as("d2"), lit(cid).as("cid"))
-      }
       // assignedBatch is read FOUR times per insert (touched collect, both
       // refresh writes via srcCid, the assign append) — persist it (r21,
       // guide §5); batch-sized and bounded, the touched collect below
@@ -1368,7 +1231,7 @@ object Similarity {
       val assignedBatch = graft.Caches.register(batch
         .select(col(idCol).cast("long").as("id"), ev.as("v"))
         .select(col("id"),
-          array_min(array(assignEntries: _*)).getField("cid").as("cid"))
+          nearestCentroid(col("v"), centroids).getField("cid").as("cid"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val touched: Seq[Long] = assignedBatch.select("cid").distinct()
         .collect().map(_.getLong(0)).sorted.toIndexedSeq
@@ -1430,9 +1293,7 @@ object Similarity {
           col("cid").isin(touchedLit: _*))
         graft.sources.AvroSink.writePartitioned(out, s"$dir/$sub", Seq("cid"))
       }
-      val sym = merged.select(col("src"), col("dst"))
-        .union(merged.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
+      val sym = symmetrizedKnnEdges(merged)
       // r21 (guide §2.6 — overlap independent jobs): the graph and edges
       // refreshes touch DISJOINT directories and read only materialized
       // inputs (merged is cached and counted above; srcCid scans the
@@ -1486,12 +1347,27 @@ object Similarity {
       spark.read.format("graft-avro").load(s"$dir/edges"))
   }
 
-  /** Hierarchically-routed beam search over a reloaded index (r18),
-    * with EXACT bound routing — the property a heuristic top-cells rule
-    * cannot give (measured: md5-leading 3-of-4-cell routing lost
-    * 0.03–0.04 avg recall vs flat): the entry set provably EQUALS the
-    * flat ranking's, so recall at the same probe budget is identical by
-    * construction, while most cells are never member-ranked.
+  /** HNSW-style graph-ANN QUERY over a [[HierIndex]]: a two-layer
+    * hierarchical search with a fixed hop budget — the search side of
+    * graph ANN (Malkov & Yashunin 2018), deterministic enough to replay
+    * hop by hop in SQL. The UPPER layer routes: the query enters the
+    * `nProbe` centroids nearest to it via their centroid NODES (the
+    * md5-fixed vectors the graph was bucketed by — each is a real corpus
+    * node). The LOWER layer walks: `hops` rounds of expand-every-kNN-
+    * out-edge of the current beam, score the unseen endpoints, keep the
+    * best `beamWidth` PER (query, cluster) — per-cluster beams, because
+    * the graph's components are the clusters and one global beam
+    * collapses into the single best component (measured recall 0.44
+    * global vs 0.70 routed at the same probe budget). The final top-k
+    * ranks ALL visited nodes globally.
+    *
+    * Entry routing is EXACT two-level bound routing (r18) — the
+    * property a heuristic top-cells rule cannot give (measured:
+    * md5-leading 3-of-4-cell routing lost 0.03–0.04 avg recall vs
+    * flat): the entry set provably EQUALS the flat (d², cid) ranking of
+    * every centroid, so recall at the same probe budget is identical by
+    * construction, while most cells are never member-ranked. With
+    * `nCells = 1` the routing IS that flat ranking.
     *
     * Triangle-inequality routing (the IVF branch-and-bound device; L2
     * sqrt is IEEE-exact so every bound replays bit-identically in the
@@ -1506,9 +1382,24 @@ object Similarity {
     * concentrated queries rank a handful of cells' members instead of
     * the whole centroid table, and the driver holds ONLY the cell list.
     *
-    * Corpus cluster ids come from the PERSISTED assignment table — serve
-    * time inlines no centroid literals. Same determinism contract as
-    * [[beamSearchKnn]] (raw-d2 rank with id ties, round-6 cosines).
+    * Scale shape: the edge table is the materialized kNN graph (built
+    * once at ingest); per hop the frontier is ≤ nProbe·beamWidth·graphK
+    * ids per query, so each round is a broadcast-beam probe into the
+    * edge table plus a bounded scoring join — visited never exceeds
+    * nProbe·(1 + hops·beamWidth·graphK) rows per query, independent of
+    * corpus size. Nothing quadratic, nothing corpus-wide after the
+    * one-time graph build; unlike an IVF probe, the per-cluster cost
+    * does NOT grow with cluster size — that is the graph-ANN trade.
+    *
+    * Corpus cluster ids come from the index's assignment table — serve
+    * time inlines no centroid literals. Determinism: scores are ROUND-6
+    * cosines with (cos desc, id) ties everywhere (the
+    * [[knnGraph]]/[[ivfRecallAudit]] contract), centroid ranking is raw
+    * d² with ties to the smaller centroid id, the hop budget is fixed —
+    * so the visited set and ranking replay exactly and the oracle
+    * unrolls each hop as a CTE.
+    *
+    * @return (query_id, rn, vec_id, cos) — the top-k visited per query
     */
   def beamSearchKnnHier(df: DataFrame, idCol: String, vecCol: String,
       index: HierIndex, queryPred: Column, k: Int,
@@ -1518,10 +1409,9 @@ object Similarity {
     require(hops >= 1 && hops <= 8, s"hops must be in [1, 8]: $hops")
     import org.apache.spark.sql.expressions.Window
     val ev = VectorOps.toDouble(col(vecCol))
-    // the (id, v, cid) corpus is a JOIN against the persisted assignment
-    // table — persist it, or every hop's score() re-runs the join (the
-    // flat tier's corpus is a cheap expression recompute; this one is
-    // not): measured 6.8 s → the join runs once per search, not 7×
+    // the (id, v, cid) corpus is a JOIN against the index's assignment
+    // table — persist it, or every hop's score() re-runs the join:
+    // measured 6.8 s → the join runs once per search, not 7×
     val corpus = graft.Caches.register(
       df.select(col(idCol).cast("long").as("id"), ev.as("v"))
         .join(index.assign.select(col("id").cast("long").as("id"),
@@ -1538,18 +1428,13 @@ object Similarity {
     // per-cell lower bound lb = max(d(q, leader) − radius, 0), from the
     // driver-bounded cell list only
     val cellEntries = index.cells.map { case (cell, clv, r) =>
-      val c = typedLit(clv)
-      val d2 = VectorOps.dotNative(col("qv"), col("qv")) -
-        lit(2.0) * VectorOps.dotNative(col("qv"), c) + VectorOps.dotNative(c, c)
-      struct(greatest(sqrt(greatest(d2, lit(0.0))) - lit(r), lit(0.0)).as("lb"),
-        lit(cell).as("cell"))
+      val dl = sqrt(greatest(d2(col("qv"), typedLit(clv)), lit(0.0)))
+      struct(greatest(dl - lit(r), lit(0.0)).as("lb"), lit(cell).as("cell"))
     }
     val queries = df.where(queryPred)
       .select(col(idCol).cast("long").as("qid"), ev.as("qv"))
       .withColumn("lbs", array_sort(array(cellEntries: _*)))
-    val memberD = (VectorOps.dotNative(col("qv"), col("qv")) -
-      lit(2.0) * VectorOps.dotNative(col("qv"), col("cvec")) +
-      VectorOps.dotNative(col("cvec"), col("cvec"))).as("d2")
+    val memberD = d2(col("qv"), col("cvec")).as("d2")
     // pass 1: members of the single best-lb cell -> UB
     val p1 = queries
       .select(col("qid"), col("qv"),
@@ -1575,73 +1460,38 @@ object Similarity {
     val entries = cand.withColumn("rn", row_number().over(wp))
       .where(col("rn") <= nProbe)
       .select(col("qid"), col("cid").as("id"))
-    val edges = graft.Caches.register(index.edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .coalesce(cachedParts(index.edges)) // r21 §2.2: see cachedParts
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // layer-0 edges, probed once per hop: an already cached table (the
+    // indexFlat session pin) is served as is; any other is materialized
+    // here so the graph build or the avro scan runs once, not hops+1 times
+    val edges =
+      if (index.edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        index.edges
+      else graft.Caches.register(index.edges
+        .select(col("src").cast("long"), col("dst").cast("long"))
+        .coalesce(cachedParts(index.edges)) // r21 §2.2: see cachedParts
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     routedBeamWalk(corpus, queries.select("qid", "qv"), entries, edges,
       k, beamWidth, hops)
   }
 
-  /** Recall@k of the hierarchically-routed search vs exact brute force
-    * — the two-level twin of [[beamRecallAudit]], same queries and tie
-    * rules, so the two numbers compare at equal probe budgets.
+  /** Recall@k of [[beamSearchKnnHier]] against the exact brute-force
+    * top-k — the graph-ANN twin of [[ivfRecallAudit]], through the same
+    * [[recallVsExact]] harness and tie rules, so the numbers compare at
+    * equal probe budgets (a one-cell index gives the flat tier's
+    * numbers).
+    *
+    * @return (query_id, n_hits, recall) — recall = |beam∩exact| / k
     */
   def beamRecallAuditHier(df: DataFrame, idCol: String, vecCol: String,
       index: HierIndex, queryPred: Column, k: Int,
       nProbe: Int = 4, beamWidth: Int = 2, hops: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ev = VectorOps.toDouble(col(vecCol))
-    val corpus = df.select(col(idCol).cast("long").as("id"), ev.as("v"))
-    val queries = df.where(queryPred)
-      .select(col(idCol).cast("long").as("qid"), ev.as("qv"))
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
     val beamTop = beamSearchKnnHier(df, idCol, vecCol, index, queryPred,
         k, nProbe, beamWidth, hops)
-      .select(col("query_id").as("qid"), col("vec_id").as("id"),
-        lit(1).as("__hit"))
-    val exactTop = corpus.crossJoin(broadcast(queries))
-      .select(col("qid"), col("id"),
-        round(VectorOps.cosineNative(col("v"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
-      .select("qid", "id")
-    exactTop.join(beamTop, Seq("qid", "id"), "left")
-      .groupBy(col("qid").as("query_id"))
-      .agg(sum(coalesce(col("__hit"), lit(0))).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / k, 6).as("recall"))
-  }
-
-  /** Recall@k of [[beamSearchKnn]] against the exact brute-force top-k —
-    * the graph-ANN twin of [[ivfRecallAudit]], same round-6 cosine and
-    * tie-break on both sides so a miss is a genuine beam miss.
-    *
-    * @return (query_id, n_hits, recall) — recall = |beam∩exact| / k
-    */
-  def beamRecallAudit(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Long, Seq[Double])], queryPred: Column,
-      k: Int, beamWidth: Int = 2, hops: Int = 5, graphK: Int = 8,
-      nProbe: Int = 4, edgePinKey: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = VectorOps.toDouble(col(vecCol))
-    val corpus = df.select(col(idCol).cast("long").as("id"), ev.as("v"))
-    val queries = df.where(queryPred)
-      .select(col(idCol).cast("long").as("qid"), ev.as("qv"))
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
-    val beamTop = beamSearchKnn(df, idCol, vecCol, centroids, queryPred,
-        k, beamWidth, hops, graphK, nProbe, edgePinKey)
-      .select(col("query_id").as("qid"), col("vec_id").as("id"),
-        lit(1).as("__hit"))
-    val exactTop = corpus.crossJoin(broadcast(queries))
-      .select(col("qid"), col("id"),
-        round(VectorOps.cosineNative(col("v"), col("qv")), 6).as("cos"))
-      .withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
-      .select("qid", "id")
-    exactTop.join(beamTop, Seq("qid", "id"), "left")
-      .groupBy(col("qid").as("query_id"))
-      .agg(sum(coalesce(col("__hit"), lit(0))).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        round(col("n_hits").cast("double") / k, 6).as("recall"))
+      .select(col("query_id").as("qid"), col("vec_id").as("id"))
+    recallVsExact(df.select(col(idCol).cast("long").as("id"), ev.as("v")),
+      df.where(queryPred).select(col(idCol).cast("long").as("qid"), ev.as("qv")),
+      beamTop, k)
   }
 
   /** Simplified silhouette per cluster (centroid-based Rousseeuw 1987
@@ -1663,14 +1513,7 @@ object Similarity {
   def clusterSilhouette(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Long, Seq[Double])]): DataFrame = {
     require(centroids.size >= 2, "need at least two centroids")
-    val e = VectorOps.toDouble(col(vecCol))
-    val entries = centroids.map { case (cid, cv) =>
-      val c = typedLit(cv)
-      val d2 = VectorOps.dotNative(e, e) - lit(2.0) * VectorOps.dotNative(e, c) +
-        VectorOps.dotNative(c, c)
-      struct(d2.as("d2"), lit(cid).as("cid"))
-    }
-    val arr = array(entries: _*)
+    val arr = centroidD2s(VectorOps.toDouble(col(vecCol)), centroids)
     val own = array_min(arr)
     val other = array_min(filter(arr, x => x.getField("cid") =!= own.getField("cid")))
     val a = sqrt(greatest(own.getField("d2"), lit(0.0)))

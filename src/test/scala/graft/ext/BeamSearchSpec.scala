@@ -17,11 +17,13 @@ class BeamSearchSpec extends SparkSpec {
     (12L, Seq(0.2, 0.8))
   ).toDF("id", "v")
   private val cents = IndexedSeq(0L -> Seq(1.0, 0.0), 10L -> Seq(0.0, 1.0))
+  // the flat index: one cell holding every centroid
+  private def flat(graphK: Int) =
+    Similarity.indexFlat(vecs, "id", "v", cents, graphK = graphK)
 
   test("beam search finds the exact top-k when both clusters are probed") {
-    val out = Similarity.beamSearchKnn(vecs, "id", "v", cents,
-        col("id") === 1, k = 7, beamWidth = 3, hops = 3, graphK = 3,
-        nProbe = 2)
+    val out = Similarity.beamSearchKnnHier(vecs, "id", "v", flat(3),
+        col("id") === 1, k = 7, nProbe = 2, beamWidth = 3, hops = 3)
       .collect()
     // every corpus node is reachable through the two entries -> the
     // ranking must be the exact cosine order for query (0.95, 0.05)
@@ -35,44 +37,42 @@ class BeamSearchSpec extends SparkSpec {
   }
 
   test("nProbe=1 confines the search to the entry cluster") {
-    val out = Similarity.beamSearchKnn(vecs, "id", "v", cents,
-        col("id") === 1, k = 7, beamWidth = 3, hops = 3, graphK = 3,
-        nProbe = 1)
+    val out = Similarity.beamSearchKnnHier(vecs, "id", "v", flat(3),
+        col("id") === 1, k = 7, nProbe = 1, beamWidth = 3, hops = 3)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     assert(out === Set(0L, 1L, 2L, 3L),
       s"cluster-1 nodes must be unreachable with one probe: $out")
   }
 
   test("recall audit is 1.0 when the beam covers the corpus, and bounded otherwise") {
-    val full = Similarity.beamRecallAudit(vecs, "id", "v", cents,
-        col("id") === 1, k = 5, beamWidth = 3, hops = 3, graphK = 3,
-        nProbe = 2)
+    val full = Similarity.beamRecallAuditHier(vecs, "id", "v", flat(3),
+        col("id") === 1, k = 5, nProbe = 2, beamWidth = 3, hops = 3)
       .collect()
     assert(full.length === 1)
     assert(full.head.getAs[Long]("n_hits") === 5L)
     assert(approx(full.head.getAs[Double]("recall"), 1.0))
-    val one = Similarity.beamRecallAudit(vecs, "id", "v", cents,
-        col("id") === 1, k = 5, beamWidth = 3, hops = 3, graphK = 3,
-        nProbe = 1)
+    val one = Similarity.beamRecallAuditHier(vecs, "id", "v", flat(3),
+        col("id") === 1, k = 5, nProbe = 1, beamWidth = 3, hops = 3)
       .collect()
     assert(one.head.getAs[Long]("n_hits") < 5L)
   }
 
   test("per-hop expansion is an equi-join probe, never a cartesian") {
-    val plan = Similarity.beamSearchKnn(vecs, "id", "v", cents,
-        col("id") === 1, k = 3, beamWidth = 2, hops = 2, graphK = 2,
-        nProbe = 2)
+    val plan = Similarity.beamSearchKnnHier(vecs, "id", "v", flat(2),
+        col("id") === 1, k = 3, nProbe = 2, beamWidth = 2, hops = 2)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"plan:\n$plan")
   }
 
   test("argument validation") {
     intercept[IllegalArgumentException] {
-      Similarity.beamSearchKnn(vecs, "id", "v", cents, col("id") === 1,
+      Similarity.beamSearchKnnHier(vecs, "id", "v", flat(8), col("id") === 1,
         k = 3, hops = 9)
     }
     intercept[IllegalArgumentException] {
-      Similarity.beamSearchKnn(vecs, "id", "v", IndexedSeq.empty,
+      Similarity.beamSearchKnnHier(vecs, "id", "v",
+        Similarity.indexFlat(vecs, "id", "v", IndexedSeq.empty,
+          graphK = 8),
         col("id") === 1, k = 3)
     }
   }

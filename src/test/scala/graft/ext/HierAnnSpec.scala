@@ -136,9 +136,9 @@ class HierAnnSpec extends SparkSpec {
           col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
         .collect().map(_.toString).toSeq
     }
-    val flat = Similarity.beamSearchKnn(emb, "vec_id", "e", cs,
-        col("vec_id") < 6, k = 8, beamWidth = 4, hops = 4, graphK = 6,
-        nProbe = 3)
+    val flat = Similarity.beamSearchKnnHier(emb, "vec_id", "e",
+        Similarity.indexFlat(emb, "vec_id", "e", cs, graphK = 6),
+        col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
       .collect().map(_.toString).toSeq
     assert(hier === flat,
       "the triangle-inequality bound must reproduce the flat entry set, " +
@@ -186,11 +186,40 @@ class HierAnnSpec extends SparkSpec {
           col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
         .orderBy("query_id").collect().map(_.toString).toSeq
     }
-    val flat = Similarity.beamRecallAudit(emb, "vec_id", "e", cs,
-        col("vec_id") < 6, k = 8, beamWidth = 4, hops = 4, graphK = 6,
-        nProbe = 3)
+    val flat = Similarity.beamRecallAuditHier(emb, "vec_id", "e",
+        Similarity.indexFlat(emb, "vec_id", "e", cs, graphK = 6),
+        col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
       .orderBy("query_id").collect().map(_.toString).toSeq
     assert(hier === flat)
+  }
+
+  test("one-cell index: in memory, persisted and reloaded, and the 4-cell index search identically") {
+    val cs = cents
+    def search(ix: Similarity.HierIndex): Seq[String] =
+      Similarity.beamSearchKnnHier(emb, "vec_id", "e", ix,
+          col("vec_id") < 6, k = 8, nProbe = 3, beamWidth = 4, hops = 4)
+        .collect().map(_.toString).toSeq
+    val oneDir = tempDir()
+    val fourDir = tempDir()
+    // the scope exit unpersists every frame the in-memory index and the
+    // builds cached: the reloaded searches below read only the disk
+    val inMemory = graft.Caches.scoped {
+      Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 1,
+        graphK = 6, oneDir)
+      Similarity.persistIndexHier(emb, "vec_id", "e", cs, nCells = 4,
+        graphK = 6, fourDir)
+      search(Similarity.indexFlat(emb, "vec_id", "e", cs,
+        graphK = 6))
+    }
+    assert(inMemory.nonEmpty)
+    val reloaded = graft.Caches.scoped(
+      search(Similarity.loadIndexHier(spark, oneDir)))
+    val fourCell = graft.Caches.scoped(
+      search(Similarity.loadIndexHier(spark, fourDir)))
+    assert(reloaded === inMemory,
+      "the persisted one-cell index must search like the in-memory one")
+    assert(fourCell === inMemory,
+      "4-cell bound routing must reproduce the one-cell entry set")
   }
 
   test("copy-then-insert (copyFrom) into a fresh dir equals the rebuild; the source stays untouched") {

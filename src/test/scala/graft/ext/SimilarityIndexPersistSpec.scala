@@ -3,9 +3,9 @@ package graft.ext
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** r17: ANN index persistence — centroids + symmetrized kNN adjacency
-  * written through the DSv2 graft-avro sink, reloaded, and served
-  * without a corpus-side rebuild or session pin.
+/** r17: ANN index persistence — the one-cell (flat) index written
+  * through the DSv2 graft-avro sink, reloaded, and served without a
+  * corpus-side rebuild or session pin.
   */
 class SimilarityIndexPersistSpec extends SparkSpec {
   import spark.implicits._
@@ -27,8 +27,13 @@ class SimilarityIndexPersistSpec extends SparkSpec {
   test("round trip: centroids bit-exact, adjacency set-equal") {
     val dir = tempDir()
     val cents = centroidsOf(corpus)
-    Similarity.persistIndex(corpus, "vid", "e", cents, graphK = 4, dir)
-    val (loaded, edges) = Similarity.loadIndex(spark, dir)
+    Similarity.persistIndexHier(corpus, "vid", "e", cents, nCells = 1,
+      graphK = 4, dir)
+    val ix = Similarity.loadIndexHier(spark, dir)
+    val loaded = ix.centroids.collect()
+      .map(r => (r.getAs[Long]("cid"),
+        r.getSeq[Double](r.fieldIndex("cvec"))))
+    val edges = ix.edges
     // centroid doubles round-trip BIT-exactly (Avro binary double)
     assert(loaded.toMap.view.mapValues(_.toSeq).toMap ===
       cents.toMap.view.mapValues(_.toSeq).toMap)
@@ -41,9 +46,9 @@ class SimilarityIndexPersistSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val got = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === expected)
-    // schema contract
+    // schema contract: the two-level layout partitions edges by cluster
     assert(edges.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq
-      === Seq(("src", "long"), ("dst", "long")))
+      === Seq(("src", "long"), ("dst", "long"), ("cid", "long")))
   }
 
   test("search from the reloaded index equals the in-session build") {
@@ -52,16 +57,18 @@ class SimilarityIndexPersistSpec extends SparkSpec {
     // the scope drops every session-cached artifact on exit: the reloaded
     // search must not lean on any pin — only the on-disk tables
     val inSession = graft.Caches.scoped {
-      val inSession = Similarity.beamSearchKnn(corpus, "vid", "e", cents,
-        col("vid") < 5, k = 5, beamWidth = 4, hops = 3, graphK = 4, nProbe = 2)
+      val inSession = Similarity.beamSearchKnnHier(corpus, "vid", "e",
+          Similarity.indexFlat(corpus, "vid", "e", cents,
+            graphK = 4),
+          col("vid") < 5, k = 5, nProbe = 2, beamWidth = 4, hops = 3)
         .collect().map(_.toString).toSeq
-      Similarity.persistIndex(corpus, "vid", "e", cents, graphK = 4, dir)
+      Similarity.persistIndexHier(corpus, "vid", "e", cents, nCells = 1,
+        graphK = 4, dir)
       inSession
     }
-    val (loadedCents, loadedEdges) = Similarity.loadIndex(spark, dir)
-    val reloaded = Similarity.beamSearchKnn(corpus, "vid", "e", loadedCents,
-      col("vid") < 5, k = 5, beamWidth = 4, hops = 3, graphK = 4, nProbe = 2,
-      prebuiltEdges = Some(loadedEdges))
+    val reloaded = Similarity.beamSearchKnnHier(corpus, "vid", "e",
+        Similarity.loadIndexHier(spark, dir),
+        col("vid") < 5, k = 5, nProbe = 2, beamWidth = 4, hops = 3)
       .collect().map(_.toString).toSeq
     assert(reloaded === inSession)
   }
