@@ -67,16 +67,16 @@ object Models {
     (train, test)
   }
 
-  private val clfMetrics = Seq("accuracy", "weightedPrecision", "weightedRecall", "weightedFMeasure")
-  private val regMetrics = Seq("mae", "mse", "r2")
-
   /** M7 — classification metrics (`DIH.py:108-114`): accuracy + weighted
-    * precision/recall/F1 on the prediction frame.
+    * precision/recall/F1 on the prediction frame. One metrics object (one
+    * pass over the predictions) serves all four; each value is the field the
+    * evaluator's `evaluate` reads for that metric name.
     */
-  def evaluateClassifier(predictions: DataFrame): Map[String, Double] =
-    clfMetrics.map { m =>
-      m -> new MulticlassClassificationEvaluator().setMetricName(m).evaluate(predictions)
-    }.toMap
+  def evaluateClassifier(predictions: DataFrame): Map[String, Double] = {
+    val m = new MulticlassClassificationEvaluator().getMetrics(predictions)
+    Map("accuracy" -> m.accuracy, "weightedPrecision" -> m.weightedPrecision,
+      "weightedRecall" -> m.weightedRecall, "weightedFMeasure" -> m.weightedFMeasure(1.0))
+  }
 
   /** Confusion matrix from a predictions frame: one grouped count over
     * (label, prediction) — map-side combined, classes² output rows. The
@@ -88,11 +88,13 @@ object Models {
       .agg(count(lit(1)).as("n"))
       .orderBy("label", "prediction")
 
-  /** M8 — regression metrics (`DIH.py:115-120`): MAE, MSE, R². */
-  def evaluateRegressor(predictions: DataFrame): Map[String, Double] =
-    regMetrics.map { m =>
-      m -> new RegressionEvaluator().setMetricName(m).evaluate(predictions)
-    }.toMap
+  /** M8 — regression metrics (`DIH.py:115-120`): MAE, MSE, R², from one
+    * metrics object (one pass over the predictions).
+    */
+  def evaluateRegressor(predictions: DataFrame): Map[String, Double] = {
+    val m = new RegressionEvaluator().getMetrics(predictions)
+    Map("mae" -> m.meanAbsoluteError, "mse" -> m.meanSquaredError, "r2" -> m.r2)
+  }
 
   /** The reference's three-model zoo (`DIH.py:65-67`), classification
     * flavor. `numTrees`/`maxIter` are the sklearn/xgboost defaults scaled
@@ -130,10 +132,8 @@ object Models {
        else regressors(rfTrees, gbtIter)).filter(m => include(m._1))
     val rows = models.flatMap { case (name, stage) =>
       val fitted = new Pipeline().setStages(Array(stage)).fit(train)
-      // cache: each evaluator metric is a separate pass over the predictions
-      val preds = fitted.transform(test).cache()
+      val preds = fitted.transform(test)
       val metrics = if (isClassification) evaluateClassifier(preds) else evaluateRegressor(preds)
-      preds.unpersist()
       metrics.toSeq.sortBy(_._1).map { case (m, v) => (name, m, v) }
     }
     train.unpersist(); test.unpersist()

@@ -144,45 +144,45 @@ object Clean {
       .rowsBetween(Window.unboundedPreceding, -1)
     val wNextPid = Window.partitionBy(grp: _*).orderBy(col(PidCol).desc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    var carries = straddling
+    // local (p, v) bounds shifted to group-global positions, all columns in
+    // one select; then every column's carry in one more, so the carry table
+    // plans one Window per sort direction however many columns there are
+    def globalPos(s: Column): Column =
+      when(s.isNotNull, struct((s.getField("p") + col(OffCol)).as("p"),
+        s.getField("v").as("v")))
+    val withOff = straddling
       .withColumn(OffCol, coalesce(sum(col("__cnt")).over(wPrevPid), lit(0L)))
-    for (c <- valueCols) {
-      val lastS = col(s"__last_$c")
-      carries = carries.withColumn(s"__lastg_$c",
-        when(lastS.isNotNull, struct((lastS.getField("p") + col(OffCol)).as("p"),
-          lastS.getField("v").as("v"))))
-      if (needNext) {
-        val firstS = col(s"__first_$c")
-        carries = carries.withColumn(s"__firstg_$c",
-          when(firstS.isNotNull, struct((firstS.getField("p") + col(OffCol)).as("p"),
-            firstS.getField("v").as("v"))))
-      }
-    }
-    for (c <- valueCols) {
-      carries = carries.withColumn(s"__cprev_$c",
-        last(col(s"__lastg_$c"), ignoreNulls = true).over(wPrevPid))
-      if (needNext)
-        carries = carries.withColumn(s"__cnext_$c",
-          last(col(s"__firstg_$c"), ignoreNulls = true).over(wNextPid))
-    }
+    val shifted = withOff.select(col("*") +: valueCols.flatMap { c =>
+      globalPos(col(s"__last_$c")).as(s"__lastg_$c") ::
+        (if (needNext) globalPos(col(s"__first_$c")).as(s"__firstg_$c") :: Nil else Nil)
+    }: _*)
     val carryCols = valueCols.flatMap { c =>
-      col(s"__cprev_$c") :: (if (needNext) col(s"__cnext_$c") :: Nil else Nil)
+      last(col(s"__lastg_$c"), ignoreNulls = true).over(wPrevPid).as(s"__cprev_$c") ::
+        (if (needNext)
+          last(col(s"__firstg_$c"), ignoreNulls = true).over(wNextPid).as(s"__cnext_$c") :: Nil
+        else Nil)
     }
     val sel = partitionCols.map(k => col(k).as(s"__graft_k_$k")) ++
       (col(PidCol).as("__graft_opid") :: col(OffCol) :: Nil) ++ carryCols
     val cond = (partitionCols.map(k => col(k) <=> col(s"__graft_k_$k")) :+
       (col(PidCol) === col("__graft_opid"))).reduce(_ && _)
-    withRn.join(broadcast(carries.select(sel: _*)), cond, "left")
+    withRn.join(broadcast(shifted.select(sel: _*)), cond, "left")
       .withColumn(OffCol, coalesce(col(OffCol), lit(0L)))
       .drop(partitionCols.map("__graft_k_" + _) :+ "__graft_opid": _*)
   }
 
-  private def dropCarryCols(df: DataFrame, valueCols: Seq[String],
-      needNext: Boolean): DataFrame =
-    df.drop(PidCol, RnCol, OffCol, TbCol)
-      .drop(valueCols.flatMap { c =>
-        s"__cprev_$c" :: (if (needNext) s"__cnext_$c" :: Nil else Nil)
-      }: _*)
+  /** Replaces every value column of `df` by its fill expression over
+    * `joined` (the [[orderedWithCarry]] frame) in ONE projection, then keeps
+    * `df`'s columns only, so Catalyst plans one Window (and one sort) per
+    * window spec for all columns together. The explicit exchange on
+    * (partitionCols, pid) comes first so the window inputs (the per-column
+    * tags) are computed after the shuffle instead of riding it.
+    */
+  private def fillSelect(df: DataFrame, joined: DataFrame,
+      partitionCols: Seq[String], fills: Map[String, Column]): DataFrame =
+    joined.repartition((partitionCols :+ PidCol).map(col): _*)
+      .withColumns(fills)
+      .select(df.columns.toIndexedSeq.map(col): _*)
 
   /** C3 — linear interpolation over row positions, pandas
     * `interpolate(method='linear', limit_direction='both')`: interior null
@@ -194,15 +194,17 @@ object Clean {
     *
     * Implementation: [[orderedWithCarry]] pins group-global positions and
     * cross-partition neighbours, then per value column two frame-bounded
-    * `last(ignoreNulls)` windows over (partitionCols, pid) share the sort
-    * (Catalyst reuses the exchange+sort across the window expressions).
-    * "Next non-null" is expressed as last-over-DESCENDING-order rather than
+    * `last(ignoreNulls)` windows over (partitionCols, pid), one ascending
+    * and one descending. "Next non-null" is expressed as
+    * last-over-DESCENDING-order rather than
     * first-over-(currentRow, unboundedFollowing): Spark's unbounded-
     * FOLLOWING frame recomputes its aggregate from scratch for every row
     * (O(n^2) per partition — pathological on long null runs), while the
     * unbounded-PRECEDING frame is a single accumulating O(n) pass. The
-    * price is one extra sort per partitioning, which Catalyst schedules
-    * once for all reversed expressions together.
+    * price is a second sort. Catalyst does NOT share it across columns
+    * built one `withColumn` at a time: k columns planned 2k Window+Sort
+    * pairs that way. All columns are built in one select
+    * ([[fillSelect]]), which plans 2 — one per sort direction — for any k.
     */
   def interpolate(
       df: DataFrame,
@@ -218,7 +220,7 @@ object Clean {
     val wNextRev = Window.partitionBy(grpPid: _*).orderBy(col(RnCol).desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pos = col(RnCol) + col(OffCol)
-    val out = valueCols.foldLeft(joined) { (acc, c) =>
+    val fills = valueCols.map { c =>
       val v = col(c)
       val tag = when(v.isNotNull, struct(pos.as("p"), v.as("v")))
       val prevS = coalesce(last(tag, ignoreNulls = true).over(wPrev),
@@ -227,19 +229,19 @@ object Clean {
         col(s"__cnext_$c"))
       val (pv, pp) = (prevS.getField("v"), prevS.getField("p"))
       val (nv, np) = (nextS.getField("v"), nextS.getField("p"))
-      val interp = when(v.isNotNull, v)
+      c -> when(v.isNotNull, v)
         .when(prevS.isNull, nv)
         .when(nextS.isNull, pv)
         .otherwise(pv + (nv - pv) * (pos - pp) / (np - pp))
-      acc.withColumn(c, interp)
     }
-    dropCarryCols(out, valueCols, needNext = true)
+    fillSelect(df, joined, partitionCols, fills.toMap)
   }
 
   /** C4 — forward fill (pandas `fillna(method='ffill')`): null takes the
     * previous non-null value in `orderCol` order within each partition.
     * Same distributed shape as [[interpolate]]: per-(partitionCols, pid)
-    * windows plus the broadcast boundary carry — no global sort.
+    * windows plus the broadcast boundary carry — no global sort — and one
+    * Window for all columns.
     */
   def ffill(
       df: DataFrame,
@@ -252,12 +254,10 @@ object Clean {
     val wPrev = Window.partitionBy((partitionCols :+ PidCol).map(col): _*)
       .orderBy(col(RnCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = valueCols.foldLeft(joined) { (acc, c) =>
-      acc.withColumn(c, coalesce(
-        last(col(c), ignoreNulls = true).over(wPrev),
-        col(s"__cprev_$c").getField("v")))
-    }
-    dropCarryCols(out, valueCols, needNext = false)
+    fillSelect(df, joined, partitionCols, valueCols.map { c =>
+      c -> coalesce(last(col(c), ignoreNulls = true).over(wPrev),
+        col(s"__cprev_$c").getField("v"))
+    }.toMap)
   }
 
   /** C5 — drop columns whose every value is null (pandas

@@ -98,7 +98,10 @@ class PlanShapeSpec extends SparkSpec {
     // snapshot read and the signed change feed
     "q_sql_avro_update", "q_sql_avro_merge",
     "q_s32_avro_snapshot", "q_s33_avro_changes", "q_s34_avro_sorted_join",
-    "q_sim_hnsw2_insert")
+    "q_sim_hnsw2_insert",
+    // every other caller of the fused fill kernel (Clean.interpolate/ffill),
+    // next to q_pipeline and q_c3_interpolate above
+    "q_c4_ffill", "q_resample_interp")
 
   private case class Shape(shuffles: Int, broadcasts: Int, codegenSpans: Int,
       pushedFilters: Int) {

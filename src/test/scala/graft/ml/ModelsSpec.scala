@@ -61,6 +61,33 @@ class ModelsSpec extends SparkSpec {
     mae.foreach(v => assert(v >= 0.0))
   }
 
+  test("M7/M8 one metrics object per frame equals the per-metric evaluators exactly") {
+    import org.apache.spark.ml.classification.DecisionTreeClassifier
+    import org.apache.spark.ml.evaluation.{MulticlassClassificationEvaluator, RegressionEvaluator}
+    import org.apache.spark.ml.regression.DecisionTreeRegressor
+    // overlapping classes and a noisy target: no metric sits at its bound
+    val noisy = (0 until 300).map { i =>
+      (math.sin(i * 1.3), math.cos(i * 0.7), (i * 7) % 3, i / 30.0 + math.sin(i * 5.1))
+    }.toDF("f1", "f2", "label", "y")
+    val (ctrain, ctest) = Models.split(Models.assemble(noisy.drop("y"), "label"))
+    val clfPreds = new DecisionTreeClassifier().setMaxDepth(2).fit(ctrain).transform(ctest)
+    val clf = Models.evaluateClassifier(clfPreds)
+    val clfNames = Seq("accuracy", "weightedPrecision", "weightedRecall", "weightedFMeasure")
+    assert(clf.keySet == clfNames.toSet)
+    clfNames.foreach { m =>
+      assert(clf(m) == new MulticlassClassificationEvaluator().setMetricName(m).evaluate(clfPreds), m)
+    }
+    assert(clf("accuracy") < 1.0)
+    val (rtrain, rtest) = Models.split(Models.assemble(noisy.drop("label"), "y"))
+    val regPreds = new DecisionTreeRegressor().setMaxDepth(2).fit(rtrain).transform(rtest)
+    val reg = Models.evaluateRegressor(regPreds)
+    assert(reg.keySet == Set("mae", "mse", "r2"))
+    reg.foreach { case (m, v) =>
+      assert(v == new RegressionEvaluator().setMetricName(m).evaluate(regPreds), m)
+    }
+    assert(reg("r2") < 1.0)
+  }
+
   test("M1 assembleFromArray builds features from an array column") {
     val df = Seq((Array(1.0f, 2.0f), 1), (Array(3.0f, 4.0f), 0)).toDF("embedding", "label")
     val asm = Models.assembleFromArray(df, "embedding", "label")

@@ -8,6 +8,52 @@ import org.apache.spark.sql.functions._
   */
 class CleanSpec extends SparkSpec {
   import spark.implicits._
+  import org.apache.spark.sql.execution.SparkPlan
+
+  /** Full plan traversal: AQE hides finished subtrees behind QueryStageExec
+    * leaves, persisted frames behind InMemoryTableScanExec.
+    */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case other => other.children
+    }
+    p +: kids.flatMap(allNodes)
+  }
+
+  /** Driver-side pandas reference over the positional index:
+    * `interpolate(method='linear', limit_direction='both')` and `ffill`.
+    */
+  private def refInterpolate(vals: IndexedSeq[Option[Double]]): Seq[Option[Double]] = {
+    // nearest non-null (position, value) at or before / at or after each row
+    def nearest(idx: Seq[Int]) =
+      idx.scanLeft(Option.empty[(Int, Double)])((p, i) => vals(i).map(v => (i, v)).orElse(p))
+        .tail
+    val prevs = nearest(vals.indices).toIndexedSeq
+    val nexts = nearest(vals.indices.reverse).reverse.toIndexedSeq
+    vals.indices.map { i =>
+      (prevs(i), nexts(i)) match {
+        case (Some((_, pv)), None) => Some(pv)
+        case (None, Some((_, nv))) => Some(nv)
+        case (Some((pi, pv)), Some((ni, nv))) =>
+          Some(if (pi == ni) pv else pv + (nv - pv) * (i - pi).toDouble / (ni - pi))
+        case _ => None
+      }
+    }
+  }
+
+  private def refFfill(vals: Seq[Option[Double]]): Seq[Option[Double]] =
+    vals.scanLeft(Option.empty[Double])((last, v) => v.orElse(last)).tail
+
+  private def sameFill(got: Seq[Option[Double]], exp: Seq[Option[Double]]): Boolean =
+    got.size == exp.size && got.zip(exp).forall {
+      case (Some(a), Some(b)) => approx(a, b, 1e-9); case (a, b) => a == b }
 
   test("C3 interpolation matches pandas golden [nan,nan,1,nan,5,nan,nan] -> [1,1,1,3,5,5,5]") {
     val df = Seq[(Int, Option[Double])](
@@ -38,24 +84,8 @@ class CleanSpec extends SparkSpec {
     // raw (non-aggregated) rows would be the single-task global sort the
     // distributed fills exist to avoid. Windows over the tiny per-partition
     // bounds AGGREGATE may legally be single-partition.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
-    // full traversal: AQE hides finished subtrees behind QueryStageExec
-    // leaves, persisted frames behind InMemoryTableScanExec
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case s: QueryStageExec => Seq(s.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-        case other => other.children
-      }
-      p +: kids.flatMap(allNodes)
-    }
     val df = (1 to 500).map(i => (i, if (i % 7 == 0) None else Some(i.toDouble)))
       .toDF("idx", "v")
     for (mk <- Seq(() => Clean.interpolate(df, Seq("v"), "idx"),
@@ -85,24 +115,75 @@ class CleanSpec extends SparkSpec {
     val (interp, ff) = graft.Caches.scoped((
       doubles(Clean.interpolate(df, Seq("v"), "idx").orderBy("idx"), "v"),
       doubles(Clean.ffill(df, Seq("v"), "idx").orderBy("idx"), "v")))
-    // driver-side pandas-semantics reference over the positional index
     val vals = rows.map(_._2)
-    val nn = vals.zipWithIndex.collect { case (Some(v), i) => (i, v) }
-    val expInterp = vals.indices.map { i =>
-      val prev = nn.filter(_._1 <= i).lastOption
-      val next = nn.find(_._1 >= i)
-      (prev, next) match {
-        case (Some((_, pv)), None) => Some(pv)
-        case (None, Some((_, nv))) => Some(nv)
-        case (Some((pi, pv)), Some((ni, nv))) =>
-          Some(if (pi == ni) pv else pv + (nv - pv) * (i - pi).toDouble / (ni - pi))
-        case _ => None
+    assert(sameFill(interp, refInterpolate(vals)))
+    assert(ff == refFfill(vals))
+  }
+
+  test("C3/C4 fused kernel keeps each column's carries apart (4 columns, 20k rows)") {
+    // one select fills every column, so each column's tags, windows and
+    // boundary carries must stay its own: the four null layouts differ
+    // and the values are column-specific, so any mix-up shows
+    val n = 20000
+    val layouts: Seq[Int => Option[Double]] = Seq(
+      i => if (i <= 3000 || i % 3 == 0) None else Some(i + 0.25),   // leading run
+      i => if (i > 16000 || i % 11 != 0) None else Some(-2.0 * i),  // trailing run
+      i => if (i % 2477 == 0) Some(1e6 - i) else None,              // runs across partitions
+      _ => None)                                                     // all null
+    val names = layouts.indices.map(j => s"v$j")
+    val cols = layouts.map(f => (1 to n).map(f))
+    val rows = (1 to n).map(i => org.apache.spark.sql.Row(
+      (i.toLong +: cols.map(_(i - 1).map(Double.box).orNull)): _*))
+    import org.apache.spark.sql.types._
+    val schema = StructType(StructField("idx", LongType, nullable = false) +:
+      names.map(StructField(_, DoubleType, nullable = true)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    def fetch(out: org.apache.spark.sql.DataFrame): Seq[Seq[Option[Double]]] = {
+      val got = out.orderBy("idx").select(names.map(col): _*).collect().toIndexedSeq
+      names.indices.map(j => got.map(r => if (r.isNullAt(j)) None else Some(r.getDouble(j))))
+    }
+    val (interp, ff) = graft.Caches.scoped((
+      fetch(Clean.interpolate(df, names, "idx")), fetch(Clean.ffill(df, names, "idx"))))
+    for (j <- names.indices) {
+      assert(sameFill(interp(j), refInterpolate(cols(j))), s"interpolate ${names(j)}")
+      assert(ff(j) == refFfill(cols(j)), s"ffill ${names(j)}")
+    }
+    assert(interp(3).forall(_.isEmpty) && ff(3).forall(_.isEmpty))
+  }
+
+  test("C3/C4 plan one Window per sort direction over fact rows, for any column count") {
+    // a withColumn fold with alternating window specs planned one
+    // Window+Sort per column; the fused select plans 2 (interpolate: one
+    // ascending, one descending) and 1 (ffill) for every k. Fact-row
+    // windows are the ones partitioned by the physical partition id.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.types.StructType
+    for (k <- Seq(1, 3, 6)) {
+      val names = (0 until k).map(j => s"v$j")
+      val df = (1 to 2000).map(i => (i, i.toDouble)).toDF("idx", "x")
+        .select(col("idx") +: names.zipWithIndex.map { case (c, j) =>
+          when(col("idx") % (j + 2) =!= 0, col("x") * (j + 1)).as(c) }: _*)
+      for ((kernel, fill, expected) <- Seq(
+          ("interpolate", () => Clean.interpolate(df, names, "idx"), 2),
+          ("ffill", () => Clean.ffill(df, names, "idx"), 1))) graft.Caches.scoped {
+        val q = fill()
+        q.collect() // materialize so AQE finalizes the plan
+        val factWindows = allNodes(q.queryExecution.executedPlan).collect {
+          case w: WindowExec
+            if w.partitionSpec.exists(_.references.exists(_.name == "__graft_pid")) => w
+        }
+        assert(factWindows.size == expected,
+          s"$kernel k=$k: ${factWindows.size} fact-row windows, want $expected")
+        // the exchange feeding them carries the input and the boundary
+        // carries only: the per-column struct(pos, v) tags come after it
+        val feed = allNodes(factWindows.head).collectFirst { case e: ShuffleExchangeExec => e }
+        assert(feed.nonEmpty, s"$kernel k=$k: no exchange below the fill windows")
+        val structs = feed.get.output.filter(_.dataType.isInstanceOf[StructType]).map(_.name)
+        assert(structs.forall(n => n.startsWith("__cprev_") || n.startsWith("__cnext_")),
+          s"$kernel k=$k: exchange outputs tag structs ${structs.mkString(", ")}")
       }
     }
-    val expFf = vals.indices.map { i => nn.filter(_._1 <= i).lastOption.map(_._2) }
-    assert(interp.zip(expInterp).forall {
-      case (Some(a), Some(b)) => approx(a, b, 1e-9); case (a, b) => a == b })
-    assert(ff == expFf)
   }
 
   test("valueCdf prefix sums are exact across partitions behind the RDD pin") {
