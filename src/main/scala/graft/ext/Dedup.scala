@@ -536,7 +536,7 @@ object Dedup {
         // origin plan's constraints, and the alias constraint from the jump
         // join references join-side attributes — next round's self-union
         // chokes on rewriting it (AttributeMap key-not-found).
-        labels = spark.createDataFrame(jumped.rdd, jumped.schema)
+        labels = graft.ops.Plans.pin(jumped)
       }
       iter += 1
     }

@@ -133,7 +133,10 @@ object Multimodal {
     None
   }
 
-  private case class JpegSof(width: Int, height: Int, bit_depth: Int)
+  // not private: the UDF's result converter is generated code, and Janino
+  // cannot call a private case class's accessors (it would fall back to
+  // interpreted conversion on every query)
+  case class JpegSof(width: Int, height: Int, bit_depth: Int)
   private val jpegSofUdf =
     udf((b: Array[Byte]) => jpegSofBytes(b).map {
       case (w, h, p) => JpegSof(w, h, p)

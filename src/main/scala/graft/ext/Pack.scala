@@ -64,7 +64,7 @@ object Pack {
     val ranged0 = df
       .repartitionByRange(nPart, grp ++ orderCols: _*)
       .withColumn(PidCol, spark_partition_id())
-    val ranged = spark.createDataFrame(ranged0.rdd, ranged0.schema)
+    val ranged = graft.ops.Plans.pin(ranged0)
 
     val wLoc = Window.partitionBy(grpPid: _*).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)

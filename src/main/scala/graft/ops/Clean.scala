@@ -124,7 +124,7 @@ object Clean {
       .repartitionByRange(nPart, (partitionCols :+ orderCol).map(col): _*)
       .withColumn(PidCol, spark_partition_id())
       .withColumn(RnCol, row_number().over(wLoc).cast(LongType))
-    val withRn = spark.createDataFrame(withRn0.rdd, withRn0.schema)
+    val withRn = Plans.pin(withRn0)
 
     val boundAggs = count(lit(1)).as("__cnt") +: valueCols.flatMap { c =>
       val tag = when(col(c).isNotNull, struct(col(RnCol).as("p"), col(c).as("v")))
@@ -521,7 +521,7 @@ object Clean {
     val ranged0 = perValue
       .repartitionByRange(nPart, (keyCols :+ "__val").map(col): _*)
       .withColumn("__pid", spark_partition_id())
-    val ranged = spark.createDataFrame(ranged0.rdd, ranged0.schema)
+    val ranged = Plans.pin(ranged0)
     val pidTotals = ranged.groupBy((keyCols :+ "__pid").map(col): _*)
       .agg(sum(col(measure)).as("__pt"))
     // r21 (guide §2.4 — remove shuffles outright): ONE aggregate over the

@@ -612,7 +612,7 @@ object Eda {
       .withColumn("__pid", spark_partition_id())
     // pin the pid (the prefixSumCdf convention): a re-optimization must
     // not move rows after the pid was observed
-    val ranged = spark.createDataFrame(ranged0.rdd, ranged0.schema)
+    val ranged = Plans.pin(ranged0)
     val pidMax = ranged.groupBy("__pid").agg(max(col("__y")).as("__pm"))
     // offsets: prefix-max of the ≤nPart partition maxima — a bounded
     // single-partition window over partition-count rows, broadcast back

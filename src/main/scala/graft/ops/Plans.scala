@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Plan-shaping helpers shared across operators. */
 object Plans {
@@ -29,4 +29,25 @@ object Plans {
     */
   def noPushdown(pred: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_barrier", pred)
+
+  /** RDD-level pin: a frame over the one RDD instance `df` executes to
+    * (`createDataFrame(df.rdd, df.schema)`). Consumers are planned over a
+    * `LogicalRDD` leaf and all read that RDD, so `df`'s exchanges run once,
+    * as shuffle stages the consumers share; only the stage above its last
+    * exchange is recomputed per consumer. Nothing is persisted.
+    *
+    * Pin where consumers must agree on values a second execution could
+    * change (partition ids behind a range exchange, whose boundaries
+    * RangePartitioner samples with a seed taken from rdd.id), or where
+    * several consumers would each plan, compile and run the same subplan.
+    * Exchange reuse cannot be trusted for either: consumers that prune
+    * different columns plan exchanges that do not canonicalize equal. The
+    * pin also drops the origin plan's constraints.
+    *
+    * Building the pin plans `df` and, under AQE, runs its shuffle map
+    * stages. The `LogicalRDD` declares no output partitioning, so an
+    * operator over the pin that needs a distribution plans its own
+    * exchange.
+    */
+  def pin(df: DataFrame): DataFrame = df.sparkSession.createDataFrame(df.rdd, df.schema)
 }

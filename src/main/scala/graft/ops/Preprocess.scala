@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -183,14 +182,24 @@ object Preprocess {
     * StringIndexer's frequency order). The reference calls
     * `fit_transform(data[col].astype(str))` (DIH.py:50), so null becomes the
     * literal string "nan" and receives a code like any other value —
-    * replicated here via `coalesce(c, 'nan')`. The window runs over the
-    * distinct set only (small); the code map joins back via broadcast.
+    * replicated here via `coalesce(c, 'nan')`.
+    *
+    * The code table is numbered without a window: the distinct keys are
+    * globally sorted (range exchange, parallel sorts) and `zipWithIndex`
+    * numbers them in partition order, so no step runs the whole key set in
+    * one task. The table is checkpointed eagerly, once per call, before
+    * the join back: every query over the result reads the key-sized table
+    * instead of re-running distinct -> sort -> numbering, and its broadcast
+    * join back onto the fact rows is the only per-query work.
     */
   def labelEncode(df: DataFrame, c: String, outCol: String): DataFrame = {
     val keyCol = s"__graft_lbl_$c"
     val keyed = df.withColumn(keyCol, coalesce(col(c).cast(StringType), lit("nan")))
-    val codes = keyed.select(col(keyCol)).distinct()
-      .withColumn(outCol, (dense_rank().over(Window.orderBy(col(keyCol))) - 1).cast(LongType))
+    val sorted = keyed.select(col(keyCol)).distinct().orderBy(col(keyCol))
+    val numbered = sorted.rdd.zipWithIndex().map { case (r, i) => Row(r.getString(0), i) }
+    val schema = StructType(Seq(StructField(keyCol, StringType, nullable = false),
+      StructField(outCol, LongType, nullable = false)))
+    val codes = df.sparkSession.createDataFrame(numbered, schema).localCheckpoint(true)
     keyed.join(broadcast(codes), Seq(keyCol)).drop(keyCol)
   }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.ops.{Clean, Harmonize, Preprocess}
+import graft.ops.{Clean, Harmonize, Plans, Preprocess}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -91,13 +91,38 @@ object Pipeline {
     * `monotonically_increasing_id` is deliberately NOT used: it is not
     * stable across retries/re-partitioning, which would break deterministic
     * verification.
+    *
+    * Plan shape: `process`'s output is pinned at the RDD level
+    * ([[graft.ops.Plans.pin]]) before `preprocess`. zscore reads its input
+    * twice, once for the mean/std aggregate and once for the scaled
+    * projection, and the two reads prune different columns, so without
+    * the pin each planned, compiled and ran its own copy of the fills
+    * (scan, coerce, range exchange, carries, windows). Over the pin both
+    * read one fill output, and so does every query over the returned
+    * frame: the fill's exchanges run once, when the pin is built, and
+    * later plans start at a `LogicalRDD` leaf. Nothing is persisted: the
+    * statistics aggregate reads the fill's output partitions directly, as
+    * in the unpinned composition, and PipelineSpec checks the output
+    * equals `preprocess(process(...))` bit for bit.
     */
   def run(dfs: Seq[DataFrame], orderKey: DataFrame => org.apache.spark.sql.Column): DataFrame = {
-    val srcCol = "__graft_src"
-    val ordCol = "__graft_ord"
+    val processed = Plans.pin(process(unionSources(dfs, orderKey), OrdCol,
+      partitionCols = Seq(SrcCol)))
+    preprocess(processed, excludeCols = Set(SrcCol, OrdCol))
+  }
+
+  private[pipeline] val SrcCol = "__graft_src"
+  private[pipeline] val OrdCol = "__graft_ord"
+
+  /** [[run]]'s input stage: standardize each source's column names, tag
+    * its rows with the source ordinal (`__graft_src`) and ordering key
+    * (`__graft_ord`), and union the sources by name.
+    */
+  private[pipeline] def unionSources(dfs: Seq[DataFrame],
+      orderKey: DataFrame => org.apache.spark.sql.Column): DataFrame = {
     val tagged = dfs.zipWithIndex.map { case (df, i) =>
       val std = Harmonize.standardizeColumns(df)
-      std.withColumn(srcCol, lit(i)).withColumn(ordCol, orderKey(std))
+      std.withColumn(SrcCol, lit(i)).withColumn(OrdCol, orderKey(std))
     }
     // A column that is text in one source and numeric in another stays
     // object dtype through the reference's pd.concat, and process_data's
@@ -106,14 +131,12 @@ object Pipeline {
     // which throws under ANSI — so coerce that text side per source first.
     val numericSomewhere = tagged.flatMap(_.schema.fields.collect {
       case f if f.dataType.isInstanceOf[NumericType] => f.name
-    }).toSet - srcCol - ordCol
-    val unioned = Harmonize.unionByName(tagged.map { df =>
+    }).toSet - SrcCol - OrdCol
+    Harmonize.unionByName(tagged.map { df =>
       val mixed = df.schema.fields.collect {
         case f if f.dataType == StringType && numericSomewhere(f.name) => f.name
       }.toSeq
       if (mixed.isEmpty) df else Clean.coerceNumeric(df, mixed)
     })
-    val processed = process(unioned, ordCol, partitionCols = Seq(srcCol))
-    preprocess(processed, excludeCols = Set(srcCol, ordCol))
   }
 }

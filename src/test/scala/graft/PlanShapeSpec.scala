@@ -101,7 +101,9 @@ class PlanShapeSpec extends SparkSpec {
     "q_sim_hnsw2_insert",
     // every other caller of the fused fill kernel (Clean.interpolate/ffill),
     // next to q_pipeline and q_c3_interpolate above
-    "q_c4_ffill", "q_resample_interp")
+    "q_c4_ffill", "q_resample_interp",
+    // the label encoder's checkpointed code table
+    "q_p2_label_encode")
 
   private case class Shape(shuffles: Int, broadcasts: Int, codegenSpans: Int,
       pushedFilters: Int) {

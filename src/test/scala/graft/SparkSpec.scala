@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,4 +46,21 @@ abstract class SparkSpec extends AnyFunSuite {
     }
 
   def approx(a: Double, b: Double, eps: Double = 1e-9): Boolean = math.abs(a - b) < eps
+
+  /** Full plan traversal: AQE hides finished subtrees behind QueryStageExec
+    * leaves, persisted frames behind InMemoryTableScanExec.
+    */
+  def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case other => other.children
+    }
+    p +: kids.flatMap(allNodes)
+  }
 }

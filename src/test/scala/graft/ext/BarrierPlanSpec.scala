@@ -3,8 +3,7 @@ package graft.ext
 import graft.SparkSpec
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Plan-shape guards for the r13 pushdown barrier + table fan-out: the
@@ -16,17 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class BarrierPlanSpec extends SparkSpec {
   import spark.implicits._
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
 
   test("noPushdown keeps an expensive guard above the projection that feeds it") {
     val df = Seq((1L, "alpha beta gamma delta"), (2L, "x")).toDF("id", "text")

@@ -2,9 +2,6 @@ package graft.ext
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -14,17 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class R13PlanSpec extends SparkSpec {
   import spark.implicits._
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
 
   private def noCartesian(nodes: Seq[SparkPlan], what: String): Unit =
     assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),

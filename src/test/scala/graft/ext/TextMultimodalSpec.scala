@@ -206,12 +206,26 @@ class TextMultimodalSpec extends SparkSpec {
       (2L, encodeImage(64, 48, "jpg"), "image/jpeg"),
       (3L, encodeImage(13, 7, "gif"), "image/gif"))
     val df = rows.toDF("id", "payload", "want_mime")
-    val got = df.select(col("id"), col("want_mime"),
-        Multimodal.decodeMeta(col("payload")).as("m"))
-      .select(col("id"), col("want_mime"), col("m.mime"), col("m.width"),
-        col("m.height"), col("m.bit_depth"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getString(2), r.getInt(3), r.getInt(4), r.getInt(5))).toMap
+    // no interpreted fallback: code the generator cannot compile must
+    // fail here, not silently run interpreted. The UDF's result converter
+    // is an UnsafeProjection, built by the codegen object factory (here
+    // during local-relation folding), which `factoryMode` governs;
+    // `fallback` governs whole-stage codegen.
+    val confs = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val got = try {
+      df.select(col("id"), col("want_mime"),
+          Multimodal.decodeMeta(col("payload")).as("m"))
+        .select(col("id"), col("want_mime"), col("m.mime"), col("m.width"),
+          col("m.height"), col("m.bit_depth"))
+        .collect().map(r => r.getLong(0) ->
+          (r.getString(2), r.getInt(3), r.getInt(4), r.getInt(5))).toMap
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
     assert(got(1L) == ("image/png", 37, 21, 8))
     assert(got(2L) == ("image/jpeg", 64, 48, 8))
     assert(got(3L)._1 == "image/gif")

@@ -1,9 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
@@ -11,16 +9,6 @@ import org.apache.spark.sql.functions._
   * with ZERO exchange — the shuffle is paid once at ingest.
   */
 class BucketedJoinPlanSpec extends SparkSpec {
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
 
   test("bucketed join runs as a sort-merge join with no shuffle exchange") {
     import spark.implicits._

@@ -8,24 +8,6 @@ import org.apache.spark.sql.functions._
   */
 class CleanSpec extends SparkSpec {
   import spark.implicits._
-  import org.apache.spark.sql.execution.SparkPlan
-
-  /** Full plan traversal: AQE hides finished subtrees behind QueryStageExec
-    * leaves, persisted frames behind InMemoryTableScanExec.
-    */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
 
   /** Driver-side pandas reference over the positional index:
     * `interpolate(method='linear', limit_direction='both')` and `ffill`.

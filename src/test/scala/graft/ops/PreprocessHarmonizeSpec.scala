@@ -33,6 +33,42 @@ class PreprocessHarmonizeSpec extends SparkSpec {
     assert(codes(None) == 3L)
   }
 
+  test("P2 labelEncode numbers >50k distinct keys across partitions with no global window") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions._
+    // keys whose lexicographic order is not their numeric order, plus
+    // nulls (encoded as "nan", which sorts last)
+    val df = spark.range(0, 60000, 1, 8).select(col("id"),
+      when(col("id") % 997 === 0, lit(null).cast("string"))
+        .otherwise(format_string("k%d", col("id") % 55000)).as("s"))
+    // keep the sorted key set in all its range partitions (AQE would
+    // coalesce ~1 MB of keys into one)
+    val conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    val out = try Preprocess.labelEncode(df, "s", "code")
+      finally spark.conf.set(conf, saved)
+    val got = out.select("s", "code").collect()
+    assert(got.length == 60000)
+    val index = got.map(r => Option(r.getString(0)).getOrElse("nan")).distinct.sorted
+      .zipWithIndex.toMap
+    assert(index.size > 50000 && index.contains("nan"))
+    got.foreach { r =>
+      assert(r.getLong(1) == index(Option(r.getString(0)).getOrElse("nan")).toLong, r)
+    }
+    val nodes = allNodes(out.queryExecution.executedPlan)
+    assert(!nodes.exists {
+      case w: WindowExec => w.partitionSpec.isEmpty
+      case _ => false
+    }, "the code table is numbered by an unpartitioned window")
+    // the code table is one checkpointed, key-sized scan spanning every
+    // range partition of the sorted keys
+    val tables = nodes.collect { case r: RDDScanExec if r.output.exists(_.name == "code") => r }
+    assert(tables.size == 1, "no checkpointed code table in the plan")
+    assert(tables.head.rdd.getNumPartitions >= 4)
+  }
+
   test("P2 labelEncodeAll replaces string columns in place (reference semantics)") {
     val df = Seq(("x", 1.0), ("y", 2.0)).toDF("s", "v")
     val out = Preprocess.labelEncodeAll(df)

@@ -41,6 +41,76 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
+  /** Three drifted sources (column-name case, a text column with a junk
+    * token in one source and numeric in another, nulls, ±inf, a column
+    * only one source has), 1,200 rows: enough for the fills to span
+    * every shuffle partition.
+    */
+  private def driftedSources(): Seq[org.apache.spark.sql.DataFrame] = {
+    def amt(i: Int): Option[Double] =
+      if (i % 7 == 0) None
+      else if (i % 53 == 0) Some(Double.PositiveInfinity)
+      else if (i % 59 == 0) Some(Double.NegativeInfinity)
+      else Some((i * 37 % 101) / 4.0)
+    val s0 = (0 until 400).map { i =>
+      (i.toLong, amt(i), if (i % 11 == 0) "junk" else if (i % 5 == 0) null else s"${i % 13}.5")
+    }.toDF("ID", "Amount", "qty")
+    val s1 = (400 until 800).map { i =>
+      (i.toLong, amt(i), if (i % 3 == 0) None else Some((i % 17).toDouble))
+    }.toDF("id", "amount", "qty")
+    val s2 = (800 until 1200).map { i =>
+      (i.toLong, amt(i + 1), if (i % 9 == 0) None else Some(i % 29 * 0.25))
+    }.toDF("id", "amount", "rate")
+    Seq(s0, s1, s2)
+  }
+
+  private def exactRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.orderBy(Pipeline.SrcCol, Pipeline.OrdCol).collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d) // exact bits
+      case v => v
+    })
+
+  test("run pins the processed frame: output equals the unpinned composition bit for bit") {
+    val dfs = driftedSources()
+    val pinned = Pipeline.run(dfs, _ => col("id"))
+    val unpinned = Pipeline.preprocess(
+      Pipeline.process(Pipeline.unionSources(dfs, _ => col("id")), Pipeline.OrdCol,
+        partitionCols = Seq(Pipeline.SrcCol)),
+      excludeCols = Set(Pipeline.SrcCol, Pipeline.OrdCol))
+    assert(pinned.schema === unpinned.schema)
+    val got = exactRows(pinned)
+    assert(got.size == 1200)
+    assert(got === exactRows(unpinned))
+    // the junk token and ±inf become nulls that the fills then fill; a
+    // column stays null only in the sources that lack it
+    Seq("id" -> Nil, "amount" -> Nil, "qty" -> Seq(2), "rate" -> Seq(0, 1)).foreach {
+      case (c, lacking) =>
+        val bad = pinned.where(col(c).isNull || isnan(col(c)) ||
+            col(c).isin(Double.PositiveInfinity, Double.NegativeInfinity))
+          .select(Pipeline.SrcCol).distinct().collect().map(_.getInt(0)).sorted.toSeq
+        assert(bad == lacking, c)
+    }
+  }
+
+  test("run plans the fills once: its output's plan holds no window and no range exchange") {
+    // the fills (range exchange, carries, windows) run below the RDD pin;
+    // zscore's statistics aggregate and its scaled projection both read
+    // the pin, so neither re-plans them
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val out = Pipeline.run(driftedSources(), _ => col("id"))
+    out.collect()
+    val nodes = allNodes(out.queryExecution.executedPlan)
+    assert(nodes.exists(_.nodeName == "Scan ExistingRDD"), "no RDD pin in the plan")
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]),
+      "a fill window is planned above the pin")
+    assert(!nodes.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }, "a range exchange is planned above the pin")
+  }
+
   test("ingest rejects empty inputs with an explicit error") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_empty").toString
     Seq.empty[(Long, String)].toDF("id", "s").write.mode("overwrite").parquet(s"$tmp/empty.parquet")
