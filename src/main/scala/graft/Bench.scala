@@ -41,10 +41,11 @@ import org.apache.spark.sql.SparkSession
   * instead of being inferred from which queries happened to slow down.
   *
   * What is TIMED is full materialization of every output row
-  * (`queryExecution.toRdd.foreach`), not `count()`: under count() the
-  * final projection is column-pruned and a top-level sort is eliminated
-  * by Catalyst, so projection-shaped queries (casts, decode-heavy
-  * selects, window-value projections) were timing a pruned scan+count
+  * ([[Session.materialize]], `queryExecution.toRdd.foreach`), not
+  * `count()`: under count() the final projection is column-pruned and
+  * a top-level sort is eliminated by Catalyst, so projection-shaped
+  * queries (casts, decode-heavy selects, window-value projections) were
+  * timing a pruned scan+count
   * instead of the work the query claims to measure. toRdd executes the
   * exact physical plan of the registered query — every expression in the
   * final project evaluates into UnsafeRows, distributed, nothing
@@ -102,25 +103,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 3 = one cold pass + two interleaved warm passes (steady = min of
     // the warm ones). Two warm passes separated by a full suite is the
     // stall-window defeater; more passes buy robustness linearly in time.
     val passes = math.max(2,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-partitioned joins (r17): let a scan-reported
-      // KeyGroupedPartitioning eliminate the join shuffle; inert unless
-      // a scan opts into reporting (graft-avro: .option("graft.spj"))
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     graft.Metrics.enableLogging() // observed candidate counts stay visible
     // previous run's steady numbers (bench_full.json is committed per
@@ -229,18 +217,8 @@ object Bench {
       val gc0 = gcMillis(); val d0 = dropped.get()
       val t0 = System.nanoTime()
       val ok =
-        // full materialization: evaluate every output row of the exact
-        // registered plan (no count()-induced prune/sort-elimination).
-        // toRdd is a raw RDD action, which bypasses the
-        // QueryExecutionListener — log observed graft_* counts directly
-        // so candidate-set sizes stay visible next to the timings.
-        // The query scope drops operator-persisted intermediates on exit.
-        try Caches.scoped {
-          val qe = fn(spark, sfDir).queryExecution
-          qe.toRdd.foreach(_ => ())
-          Metrics.logObserved(qe)
-          true
-        }
+        // the query scope drops operator-persisted intermediates on exit
+        try Caches.scoped { Session.materialize(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }

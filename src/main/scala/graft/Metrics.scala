@@ -29,7 +29,7 @@ object Metrics {
   def name(what: String): String = s"graft_${what}_${ctr.incrementAndGet()}"
 
   /** Keep graft.Metrics at INFO even when the session mains drop Spark to
-    * WARN (Bench/ProbeSlow do) — the whole point of the observed counts is
+    * WARN (Bench/Profile do) — the whole point of the observed counts is
     * that they appear in the bench log next to a slow run.
     */
   def enableLogging(): Unit =
@@ -40,10 +40,10 @@ object Metrics {
 
   /** Log the graft_* observed metrics of an ALREADY-EXECUTED plan. The
     * QueryExecutionListener below only fires on Dataset actions; a raw RDD
-    * action (`queryExecution.toRdd.foreach` — Bench/ProbeSlow's full-
-    * materialization timing) bypasses it, but the CollectMetrics
-    * accumulators still populate during execution, so the harness calls
-    * this directly after the action.
+    * action (`queryExecution.toRdd.foreach` — [[Session.materialize]],
+    * Bench/Profile's full-materialization timing) bypasses it, but the
+    * CollectMetrics accumulators still populate during execution, so
+    * materialize calls this directly after the action.
     */
   def logObserved(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
     qe.observedMetrics.filter(_._1.startsWith("graft_")).foreach { case (n, row) =>

@@ -102,10 +102,6 @@ object Dedup {
       array(sigs: _*)
     }
 
-  /** Convenience one-shot signature from a shingle set (tests/ad-hoc). */
-  def minhashSignature(shingleSet: Column, numHashes: Int): Column =
-    minhashSignatureFromHashes(shingleHashes(shingleSet), numHashes)
-
   /** Skew guard for banded candidate joins: when `cap > 0`, band buckets
     * with more than `cap` members are EXCLUDED from candidate generation —
     * at crawl scale one boilerplate template can put 10⁷ docs in a single

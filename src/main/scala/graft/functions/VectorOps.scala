@@ -31,10 +31,6 @@ object VectorOps {
     when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot(a, b) / (na * nb))
   }
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
-
   // ---- native-Expression tier (requires GraftExtensions registered) ----
 
   /** Dot product via the codegen'd [[DotProduct]] Catalyst expression —

@@ -18,19 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Eda {
 
-  /** E6 — skip-empty guard (`DIH.py:126,137,155-156`): the reference skips
-    * all-NaN columns before charting (`notna().any()`). One aggregate pass
-    * over ALL candidate columns (a single-row result collected to the
-    * driver — the same driver-side decision point the reference has), so
-    * the EDA fan-out never launches jobs for empty columns.
-    */
-  def nonEmptyCols(df: DataFrame, cols: Seq[String]): Seq[String] = {
-    if (cols.isEmpty) return Nil
-    val counts = df.agg(count(col(cols.head)).as(cols.head),
-      cols.tail.map(c => count(col(c)).as(c)): _*).head()
-    cols.filter(c => counts.getAs[Long](c) > 0L)
-  }
-
   /** E1 — equal-width histogram: bin counts over [min, max] with the
     * max value clamped into the last bin (numpy right-closed edge rule).
     */

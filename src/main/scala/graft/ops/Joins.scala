@@ -16,13 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Joins {
 
-  /** Fact-to-dimension equi-join with an explicit broadcast of the dim:
-    * at 100 TB the fact side must never shuffle for a small dim.
-    */
-  def broadcastDim(fact: DataFrame, dim: DataFrame, on: Seq[String],
-      joinType: String = "inner"): DataFrame =
-    fact.join(broadcast(dim), on, joinType)
-
   /** Semi-join: fact rows with a match in `filter` (no columns added). */
   def semi(left: DataFrame, right: DataFrame, on: Seq[String]): DataFrame =
     left.join(right, on, "left_semi")

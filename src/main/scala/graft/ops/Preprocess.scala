@@ -89,15 +89,6 @@ object Preprocess {
     }
   }
 
-  /** All-numeric-columns variant mirroring the reference's
-    * `select_dtypes(include)` sweep. */
-  def zscoreAll(df: DataFrame): DataFrame = {
-    val nums = df.schema.fields.collect {
-      case f if f.dataType.isInstanceOf[NumericType] => f.name
-    }.toIndexedSeq
-    if (nums.isEmpty) df else zscore(df, nums)
-  }
-
   /** Winsorization: clamp each column to its [pLo, pHi] exact quantiles —
     * the robust-outlier-taming preprocessing step (a StandardScaler
     * companion the reference lacks). Quantile bounds come from

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Wide↔long reshaping (pandas `pivot_table` / `melt` — EDA-adjacent
@@ -24,11 +24,6 @@ object Reshape {
       values: Seq[String]): DataFrame =
     df.groupBy(col(rowKey)).pivot(colKey, values).agg(count(lit(1)))
       .na.fill(0, values)
-
-  /** Pivot with an arbitrary aggregate over `valueCol` (e.g. sum, avg). */
-  def pivotAgg(df: DataFrame, rowKey: String, colKey: String,
-      values: Seq[String], agg: Column => Column, valueCol: String): DataFrame =
-    df.groupBy(col(rowKey)).pivot(colKey, values).agg(agg(col(valueCol)))
 
   /** Melt (pandas `melt`): keep `idCols`, fold each of `valueCols` into
     * (variable, value) long-form rows. Values are cast to double so

@@ -336,7 +336,7 @@ object Sampling {
     // under a broadcast, plus the overall mean), and Spark launches the
     // broadcast jobs concurrently with the main stage — each racing
     // consumer recomputed the scan + md5 projection instead of hitting
-    // the still-unbuilt cache (StageProf: 5-6 identical 1.8 s project
+    // the still-unbuilt cache (stage profile: 5-6 identical 1.8 s project
     // stages; with the eager build, one)
     base.count()
     val d0 = lit(0).cast("decimal(38,0)")

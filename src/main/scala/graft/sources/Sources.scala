@@ -173,10 +173,6 @@ object Sources {
   /** S6 — preview head (`data.head()`, DIH.py:185). */
   def head(df: DataFrame, n: Int = 5): DataFrame = df.limit(n)
 
-  /** S7 — sink: parquet write (the engine's materialization contract). */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   /** Hive-style partitioned parquet: queries filtering on `partitionCols`
     * prune whole directories at planning time (PartitionFilters in the
     * scan) — the first lever for 100 TB layouts (partition by date/source,

@@ -1,24 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one SQL statement against the graft session with every
   * testdata table registered as a temp view.
   * Usage: runMain graft.tools.Sql <sfDir> "<sql>"
   */
 object Sql {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.all.foreach { t =>
       graft.Tables.load(spark, args(0), t).createOrReplaceTempView(t)

@@ -10,20 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-partitioned joins (r17): let a scan-reported
-      // KeyGroupedPartitioning eliminate the join shuffle; inert unless
-      // a scan opts into reporting (graft-avro: .option("graft.spj"))
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .getOrCreate()
+    // a literal 4, not SPARK_GRAFT_CPUS: the plan goldens assume
+    // local[4] with 4 shuffle partitions
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
