@@ -17,10 +17,8 @@ import org.apache.spark.sql.DataFrame
   * pid-pinned frames like prefixSumCdf's, whose silent recomputation
   * would be a wrong answer. There is no global release: a frame
   * registered outside any scope is untracked and stays the caller's to
-  * unpersist. A caller who wants fully manual lifetime passes
-  * `cacheIntermediate = false` where offered and persists at the call
-  * site. Only scopes interleaving on ONE thread (hand-rolled async on a
-  * shared thread) can see each other's frames.
+  * unpersist. Only scopes interleaving on ONE thread (hand-rolled async
+  * on a shared thread) can see each other's frames.
   */
 object Caches {
   private[graft] type Scopes = List[scala.collection.mutable.ListBuffer[DataFrame]]

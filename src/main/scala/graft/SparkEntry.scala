@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.{Dedup, DimReduce, Multimodal, Retrieval, Similarity, SubstringDedup, TextAnalysis}
+import graft.functions.round6
 import graft.ml.Models
 import graft.ops.{Clean, Eda, Harmonize, Joins, Layout, Merge, Preprocess, Quality, Reshape, Resample, Sampling, Skew}
 import graft.pipeline.Pipeline
@@ -130,14 +131,6 @@ object SparkEntry {
           dayofmonth(col("l_shipdate")).as("d"))
         .agg(sum(col("l_extendedprice").cast("decimal(18,2)"))
           .cast("double").as("rev")))
-
-  /** Driver-side mirror of Spark's round(col, 6): HALF_UP over the
-    * shortest decimal representation (BigDecimal(Double) routes through
-    * Double.toString) — the same helper every bounds-collecting operator
-    * uses, hoisted for the grid consumers.
-    */
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Co-purchase part graph (parts sharing >= 2 orders) — the edge fixture
     * shared by NINE graph queries (triangles, clustering, link-pred,
@@ -298,7 +291,7 @@ object SparkEntry {
       val g = lineitemQGrid(s, dir)
       val quants = LiGridCols.collect {
         case c if g.contains(c) =>
-          c -> ((r6(g(c)(0.25)), r6(g(c)(0.5)), r6(g(c)(0.75))))
+          c -> ((round6(g(c)(0.25)), round6(g(c)(0.5)), round6(g(c)(0.75))))
       }.toMap
       Clean.summaryStatsWith(T(s, dir, "lineitem"), LiGridCols, quants)
     }),
@@ -1757,8 +1750,8 @@ object SparkEntry {
         col("l_extendedprice").as("price_w"), col("l_quantity").as("qty_w"))
       val g = lineitemQGrid(s, dir)
       val bounds = Map(
-        "price_w" -> ((r6(g("l_extendedprice")(0.05)), r6(g("l_extendedprice")(0.95)))),
-        "qty_w" -> ((r6(g("l_quantity")(0.05)), r6(g("l_quantity")(0.95)))))
+        "price_w" -> ((round6(g("l_extendedprice")(0.05)), round6(g("l_extendedprice")(0.95)))),
+        "qty_w" -> ((round6(g("l_quantity")(0.05)), round6(g("l_quantity")(0.95)))))
       Preprocess.winsorizeWith(li, Seq("price_w", "qty_w"), bounds)
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("price_w"), 6).as("price_w"), round(col("qty_w"), 6).as("qty_w"))
@@ -2025,7 +2018,7 @@ object SparkEntry {
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
       val g = lineitemQGrid(s, dir)
       val edges = Seq("l_quantity", "l_extendedprice").map(c =>
-        c -> Seq(0.25, 0.5, 0.75).map(p => r6(g(c)(p)))).toMap
+        c -> Seq(0.25, 0.5, 0.75).map(p => round6(g(c)(p)))).toMap
       Preprocess.quantileBucketizeWith(li,
           Seq("l_quantity", "l_extendedprice"), edges)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -2897,7 +2890,7 @@ object SparkEntry {
         col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").as("qty_rb"), col("l_extendedprice").as("price_rb"))
       val g = lineitemQGrid(s, dir)
-      def triple(c: String) = ((r6(g(c)(0.25)), r6(g(c)(0.5)), r6(g(c)(0.75))))
+      def triple(c: String) = ((round6(g(c)(0.25)), round6(g(c)(0.5)), round6(g(c)(0.75))))
       Preprocess.robustScaleWith(li, Seq("qty_rb", "price_rb"),
           Map("qty_rb" -> triple("l_quantity"),
             "price_rb" -> triple("l_extendedprice")))
@@ -3063,7 +3056,7 @@ object SparkEntry {
     // [p5, p95] band from the shared pinned lineitem quantile grid --------
     "q_stats_trimmed" -> ((s, dir) => {
       val g = lineitemQGrid(s, dir)
-      def band(c: String) = ((r6(g(c)(0.05)), r6(g(c)(0.95))))
+      def band(c: String) = ((round6(g(c)(0.05)), round6(g(c)(0.95))))
       Eda.trimmedMeanWith(T(s, dir, "lineitem"),
         Seq("l_extendedprice", "l_quantity"),
         Map("l_extendedprice" -> band("l_extendedprice"),

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.round6
 
 /** Markov-chain multi-touch attribution (Anderl et al. 2014 — the
   * "removal effect" model): user journeys become a first-order Markov
@@ -104,8 +105,6 @@ object Attribution {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
     val states = "START" +: channels
-    def r6(x: Double) = BigDecimal(java.lang.Double.toString(x))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val full = pConv9(cnt, states, None, iters)
     // probabilities ship as EXACT 1e-9-unit integers (no float rounding
     // can disagree across engines); only the effect ratio is a double
@@ -113,7 +112,7 @@ object Attribution {
       val pr = pConv9(cnt, states, Some(c), iters)
       (c, full, pr,
         if (full == 0L) None
-        else Some(r6(1.0 - pr.toDouble / full.toDouble)))
+        else Some(round6(1.0 - pr.toDouble / full.toDouble)))
     }
     rows.toDF("channel", "p_conv_full_e9", "p_conv_removed_e9",
       "removal_effect")

@@ -84,23 +84,12 @@ object Dedup {
     transform(shingleSet, s =>
       conv(substring(md5(s), 1, 15), 16, 10).cast("long") % MinhashP)
 
-  /** MinHash signature (array<long>) from the base-hash column.
-    *
-    * `native = true` (default) uses the codegen'd `graft_minhash` Catalyst
-    * expression (requires GraftExtensions registered — all of this repo's
-    * sessions do); `false` falls back to the pure higher-order-function
-    * formulation with identical arithmetic. With the HOF tier, `hs` must be
-    * a materialized column — it is referenced once per hash function.
+  /** MinHash signature (array<long>) from the base-hash column, through
+    * the codegen'd `graft_minhash` Catalyst expression (requires
+    * GraftExtensions registered — all of this repo's sessions do).
     */
-  def minhashSignatureFromHashes(hs: Column, numHashes: Int,
-      native: Boolean = true): Column =
-    if (native) call_function("graft_minhash", hs, lit(numHashes))
-    else {
-      val sigs = hashParams(numHashes).map { case (a, b) =>
-        array_min(transform(hs, h => (h * a + b) % MinhashP))
-      }
-      array(sigs: _*)
-    }
+  def minhashSignatureFromHashes(hs: Column, numHashes: Int): Column =
+    call_function("graft_minhash", hs, lit(numHashes))
 
   /** Skew guard for banded candidate joins: when `cap > 0`, band buckets
     * with more than `cap` members are EXCLUDED from candidate generation —
@@ -111,23 +100,17 @@ object Dedup {
     * EAGERLY, at plan-build: the no-silent-caps guarantee is that the
     * exclusion warning fires whenever a capped plan is handed out, not
     * only if the caller happens to materialize it. The input is persisted
-    * so the size pass and the candidate join share one materialization —
-    * gated on `cacheIntermediate`, because the global [[graft.Caches]]
-    * registry is exactly what a `cacheIntermediate = false` caller opted
-    * out of (they pay one recompute of the banded projection instead).
+    * (and registered with the caller's [[graft.Caches.scoped]] block) so
+    * the size pass and the candidate join share one materialization.
     * The exclusion itself is a distributed anti-join on the oversized
     * keys. `cap <= 0` disables the guard and returns the input untouched
     * (the plan is byte-identical to the uncapped one).
     */
-  private def capBuckets(banded: DataFrame, cap: Int, what: String,
-      cacheIntermediate: Boolean = true): DataFrame = {
+  private def capBuckets(banded: DataFrame, cap: Int, what: String): DataFrame = {
     if (cap <= 0) banded
     else {
-      val b =
-        if (cacheIntermediate)
-          graft.Caches.register(
-            banded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        else banded
+      val b = graft.Caches.register(
+        banded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val over = b.groupBy("band_idx", "band_key").count()
         .where(col("count") > cap)
       val stats = over.agg(count(lit(1)).as("n"), sum(col("count")).as("rows")).first()
@@ -166,8 +149,7 @@ object Dedup {
     */
   def nearDupMinhash(df: DataFrame, textCol: String, idCol: String,
       k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5, cacheIntermediate: Boolean = true,
-      maxBucketSize: Int = 0): DataFrame = {
+      threshold: Double = 0.5, maxBucketSize: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
     // staged projections: tokens, then shingles, then signature — each a
@@ -184,13 +166,9 @@ object Dedup {
     // outgrows executor memory at corpus scale. The handle goes into
     // graft.Caches so callers can unpersist once the result materializes
     // (a long-lived session would otherwise accumulate cached blocks).
-    val sh =
-      if (cacheIntermediate)
-        graft.Caches.register(
-          shPlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else shPlain
-    nearDupFromShingles(sh, numHashes, bands, threshold, cacheIntermediate,
-      maxBucketSize)
+    val sh = graft.Caches.register(
+      shPlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    nearDupFromShingles(sh, numHashes, bands, threshold, maxBucketSize)
   }
 
   /** [[nearDupMinhash]] from a prebuilt (id, sh) shingle table — the entry
@@ -201,8 +179,7 @@ object Dedup {
     * caller owns the table's persistence.
     */
   private[ext] def nearDupFromShingles(sh: DataFrame, numHashes: Int,
-      bands: Int, threshold: Double, cacheIntermediate: Boolean = true,
-      maxBucketSize: Int = 0): DataFrame = {
+      bands: Int, threshold: Double, maxBucketSize: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
     val hs = sh.select(col("id"), shingleHashes(col("sh")).as("hs"))
@@ -217,8 +194,7 @@ object Dedup {
             .cast("array<string>"))).as("band_key"))))
         .as("band"))
       .select(col("id"), col("band.band_idx"), col("band.band_key"))
-    val banded = capBuckets(bandedRaw, maxBucketSize, "nearDupMinhash",
-      cacheIntermediate)
+    val banded = capBuckets(bandedRaw, maxBucketSize, "nearDupMinhash")
     // observed candidate count (no extra pass — CollectMetrics rides the
     // verification action): a corpus shift that inflates the LSH buckets
     // shows up as this logged number next to the slow run, per the

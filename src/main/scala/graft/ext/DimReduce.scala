@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.round6
 
 /** Dimensionality reduction for embedding columns: Johnson–Lindenstrauss
   * random projection and PCA via deterministic power iteration. North-star
@@ -104,16 +105,6 @@ object DimReduce {
       yield (i.toLong, j.toLong, round6(cov(i)(j))))
       .toDF("i", "j", "cov")
   }
-
-  /** Driver-side mirror of Spark's `round(col, 6)` (HALF_UP on the
-    * shortest decimal representation) — the same convention the DuckDB
-    * oracle's round() matches everywhere else in this repo. rint/%.6f
-    * would be a THIRD convention; don't.
-    */
-  private def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else BigDecimal(java.lang.Double.toString(x))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** One power-iteration step + eigenvalue: every fold runs in ascending
     * index order (the oracle replays the identical DAG).

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.round6
 
 /** DSIR-style data selection via importance resampling (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling", arXiv
@@ -191,11 +192,4 @@ object Importance {
     rows.toDF("step", "domain", "excess_loss", "alpha")
       .orderBy("step", "domain")
   }
-
-  /** round(x, 6) under the repo rounding contract (BigDecimal HALF_UP on
-    * the shortest decimal representation — mirrors Spark/DuckDB round).
-    */
-  private def round6(x: Double): Double =
-    BigDecimal(java.lang.Double.toString(x))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

@@ -1,7 +1,8 @@
 package graft.ext
 
-import graft.functions.VectorOps
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{CosineSimilarity, VectorOps, round6}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`) — north-star
@@ -556,8 +557,9 @@ object Similarity {
         round(VectorOps.cosineNative(col("v"), col("qv")), 6).as("cos"))
       .withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
       .select("qid", "id")
-    exactTop.join(annTop.select(col("qid"), col("id"), lit(1).as("__hit")),
-        Seq("qid", "id"), "left")
+    // bounded by queries × k: broadcast by hint, as in routedBeamWalk
+    exactTop.join(broadcast(annTop.select(col("qid"), col("id"),
+        lit(1).as("__hit"))), Seq("qid", "id"), "left")
       .groupBy(col("qid").as("query_id"))
       .agg(sum(coalesce(col("__hit"), lit(0))).as("n_hits"))
       .select(col("query_id"), col("n_hits"),
@@ -886,58 +888,83 @@ object Similarity {
       .distinct()
   }
 
-  /** Data-derived partition count for a persisted ANN working table
-    * (r21, guide §2.2 — size partitions from the data): cached plans are
-    * exempt from AQE partition coalescing
-    * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * defaults false), so a cached join/shuffle product keeps the
-    * session's full shuffle width no matter how small its data — and
-    * every consumer stage (each beam hop scans the corpus and edge
-    * caches) then schedules that many mostly-empty tasks. ~8 MB of
-    * SOURCE bytes per partition: floor 1, monotone in data size,
-    * independent of local core count. `src` should be a (near-)leaf
-    * frame whose Catalyst size estimate is file-backed — join outputs
-    * inflate multiplicatively and are not trustworthy here.
+  /** Spark's `ORDER BY cos DESC, id` over a walk's visited (id, cos):
+    * null scores last, doubles compared as Spark compares them (NaN
+    * largest), ties to the smaller id.
     */
-  private def cachedParts(src: DataFrame): Int = {
-    val bytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
-      .min(BigInt(Long.MaxValue)).toLong
-    math.max(1L, math.min(bytes / (8L << 20) + 1L, 1L << 20)).toInt
+  private val walkOrder: Ordering[(Long, java.lang.Double)] = (a, b) => {
+    val c =
+      if (a._2 == null || b._2 == null)
+        java.lang.Boolean.compare(a._2 == null, b._2 == null)
+      else SQLOrderingUtil.compareDoubles(b._2, a._2)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
   }
 
-  /** The per-(query, cluster) routed beam walk of [[beamSearchKnnHier]]:
-    * score the entry nodes, expand `hops` times through `edges` under a
-    * per-(qid, cid) beam, return the global top-k of everything visited.
-    * `corpus` = (id, v, cid); `queries` = (qid, qv); `entries` =
-    * (qid, id).
+  /** One routed walk, run inside a task: visited starts as the `entries`
+    * that have a vector in `vecs`; each of `hops` rounds scores the
+    * distinct out-neighbours (through `adj`) of the top-`beamWidth`
+    * visited nodes that are not yet visited and have a vector. Scores are
+    * `round(graft_cos(v, qv), 6)`, computed by the expression's own loop
+    * and Spark's rounding. Returns the top `k` visited (id, cos).
     */
-  private def routedBeamWalk(corpus: DataFrame, queries: DataFrame,
-      entries: DataFrame, edges: DataFrame, k: Int, beamWidth: Int,
-      hops: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def score(ids: DataFrame): DataFrame = ids
-      .join(corpus, Seq("id"))
-      .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
-      .select(col("qid"), col("cid"), col("id"),
-        round(VectorOps.cosineNative(col("v"), col("qv")), 6).as("cos"))
-    val wc = Window.partitionBy("qid", "cid").orderBy(col("cos").desc, col("id"))
-    // visited stays tiny (≤ nProbe·(1 + hops·beamWidth·graphK) rows per
-    // query); localCheckpoint keeps the per-hop plan flat instead of
-    // re-deriving every prior hop
-    var visited = score(entries).localCheckpoint(true)
-    for (_ <- 1 to hops) {
-      val beam = visited.withColumn("rn", row_number().over(wc))
-        .where(col("rn") <= beamWidth).select("qid", "id")
-      val cand = beam.join(edges, beam("id") === edges("src"))
-        .select(col("qid"), col("dst").as("id")).distinct()
-        .join(visited.select("qid", "id"), Seq("qid", "id"), "left_anti")
-      visited = visited.unionByName(score(cand)).localCheckpoint(true)
+  private def beamWalk(qv: ArrayData, entries: Seq[Long],
+      vecs: Map[Long, ArrayData], adj: Map[Long, Seq[Long]], k: Int,
+      beamWidth: Int, hops: Int): Seq[(Long, java.lang.Double)] = {
+    def score(id: Long): (Long, java.lang.Double) = {
+      val v = vecs(id)
+      val cos = if (v == null || qv == null) null
+        else CosineSimilarity.eval(v, false, qv, false)
+      id -> (if (cos == null) null else Double.box(round6(cos.asInstanceOf[Double])))
     }
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
-    visited.withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
-      .select(col("qid").as("query_id"), col("rn").cast("int").as("rn"),
-        col("id").as("vec_id"), col("cos"))
-      .orderBy("query_id", "rn")
+    var visited = entries.filter(vecs.contains).map(score)
+    val seen = scala.collection.mutable.HashSet(visited.map(_._1): _*)
+    for (_ <- 1 to hops) {
+      visited ++= visited.sorted(walkOrder).take(beamWidth)
+        .flatMap(b => adj.getOrElse(b._1, Nil))
+        .filter(id => vecs.contains(id) && seen.add(id))
+        .map(score)
+    }
+    visited.sorted(walkOrder).take(k)
+  }
+
+  /** The per-(query, cluster) routed beam walks of [[beamSearchKnnHier]]:
+    * every cluster's vectors and adjacency are grouped by `cid` in one
+    * aggregation and joined to the walks routed into it, and each walk
+    * runs all its hops inside that task ([[beamWalk]]). The walks
+    * (bounded by queries × nProbe) are broadcast by hint: a join
+    * strategy left to AQE varied between runs of the plan-shape golden.
+    * `corpus` = (id, v, cid); `walks` = (qid, id, qv, cid), one row per
+    * entry node, `cid` the entry's cluster; `edges` = (src, dst, cid).
+    * Returns every walk's top-k visited as (qid, id, cos).
+    */
+  private def routedBeamWalk(corpus: DataFrame, walks: DataFrame,
+      edges: DataFrame, k: Int, beamWidth: Int, hops: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    def vec(r: Row, i: Int): ArrayData =
+      if (r.isNullAt(i)) null else new GenericArrayData(r.getSeq[Any](i).toArray)
+    // collect_list skips the other side's nulls
+    val clusters = corpus
+      .select(col("cid"), struct("id", "v").as("node"),
+        lit(null).cast("struct<src:bigint,dst:bigint>").as("edge"))
+      .unionByName(edges.select(col("cid"),
+        lit(null).cast("struct<id:bigint,v:array<double>>").as("node"),
+        struct("src", "dst").as("edge")))
+      .groupBy("cid")
+      .agg(collect_list("node").as("nodes"), collect_list("edge").as("adj"))
+    clusters
+      .join(broadcast(walks.groupBy("cid")
+        .agg(collect_list(struct("qid", "id", "qv")).as("walks"))), Seq("cid"))
+      .flatMap { r =>
+        val vecs = r.getSeq[Row](1).map(n => n.getLong(0) -> vec(n, 1)).toMap
+        val adj = r.getSeq[Row](2).groupMap(_.getLong(0))(_.getLong(1))
+        r.getSeq[Row](3).groupBy(_.getLong(0)).toSeq.flatMap { case (qid, w) =>
+          beamWalk(vec(w.head, 2), w.map(_.getLong(1)), vecs, adj, k,
+              beamWidth, hops)
+            .map { case (id, cos) => (qid, id, Option(cos).map(_.doubleValue)) }
+        }
+      }
+      .toDF("qid", "id", "cos")
   }
 
   // -- two-level (hierarchical) centroid routing (r18) -------------------
@@ -992,9 +1019,12 @@ object Similarity {
   /** The two-level ANN index — the only ANN index type: `cells`
     * (leader vector + radius) is the only driver-side piece (bounded by
     * the cell count); centroids (cid, cell, cvec), the corpus assignment
-    * (id, cid), and the adjacency (src, dst) stay distributed tables.
-    * [[indexFlat]] builds the one-cell (flat) index in memory,
-    * [[loadIndexHier]] reloads a [[persistIndexHier]] artifact.
+    * (id, cid), and the symmetrized adjacency (src, dst, cid) stay
+    * distributed tables. Every edge is intra-cluster and carries its
+    * source's cluster id, which is what lets [[beamSearchKnnHier]] read
+    * one cluster's adjacency next to that cluster's vectors. One layout
+    * for every index: [[indexFlat]] builds the one-cell (flat) index in
+    * memory, [[loadIndexHier]] reloads a [[persistIndexHier]] artifact.
     */
   final case class HierIndex(cells: Seq[(Long, Seq[Double], Double)],
       centroids: DataFrame, assign: DataFrame, edges: DataFrame)
@@ -1003,8 +1033,9 @@ object Similarity {
     * persist/reload round trip: the tables `persistIndexHier(nCells = 1)`
     * writes — the cell from [[cellAssignOf]], the centroid table from the
     * driver Seq, the corpus assignment by the nearest-centroid
-    * expression, the [[symmetrizedKnnEdges]] adjacency — so a search over
-    * it equals the search over the reloaded artifact row for row. The one
+    * expression, the [[symmetrizedKnnEdges]] adjacency tagged with each
+    * source's cluster id (src, dst, cid) — so a search over it equals the
+    * search over the reloaded artifact row for row. The one
     * cell holds every centroid: pass 1 of [[beamSearchKnnHier]] ranks all
     * of them by (d², cid) and pass 2 admits that same cell, which is the
     * flat centroid ranking. Multi-cell indexes come from
@@ -1015,8 +1046,8 @@ object Similarity {
     *   "what|dataDir") and shared across queries and reps — the
     *   production reading, where the kNN graph is BUILT ONCE at ingest
     *   and every search serves from it. When None (library default) the
-    *   edge table stays lazy and [[beamSearchKnnHier]] persists it for
-    *   the caller's [[graft.Caches.scoped]] block. The effective pin key
+    *   edge table stays lazy and each search builds the graph once, in
+    *   its own plan. The effective pin key
     *   is SUFFIXED internally with graphK and a hash of the centroids
     *   (r14 ADVICE): two call sites reusing a caller-chosen key with
     *   different graph parameters must get different pins, never
@@ -1035,7 +1066,9 @@ object Similarity {
       nearestCentroid(VectorOps.toDouble(col(vecCol)), centroids)
         .getField("cid").as("cid"))
     val edges = symmetrizedKnnEdges(
-      knnGraph(df, idCol, vecCol, centroids, graphK)).coalesce(cachedParts(df))
+        knnGraph(df, idCol, vecCol, centroids, graphK))
+      .join(assign.select(col("id").as("src"), col("cid")), Seq("src"))
+      .select("src", "dst", "cid")
     HierIndex(cells, cvecs, assign, edgePinKey match {
       case Some(key) =>
         // parameter-proof key: the caller names the artifact, the
@@ -1382,14 +1415,17 @@ object Similarity {
     * concentrated queries rank a handful of cells' members instead of
     * the whole centroid table, and the driver holds ONLY the cell list.
     *
-    * Scale shape: the edge table is the materialized kNN graph (built
-    * once at ingest); per hop the frontier is ≤ nProbe·beamWidth·graphK
-    * ids per query, so each round is a broadcast-beam probe into the
-    * edge table plus a bounded scoring join — visited never exceeds
-    * nProbe·(1 + hops·beamWidth·graphK) rows per query, independent of
-    * corpus size. Nothing quadratic, nothing corpus-wide after the
-    * one-time graph build; unlike an IVF probe, the per-cluster cost
-    * does NOT grow with cluster size — that is the graph-ANN trade.
+    * Scale shape: every kNN edge is intra-cluster and the beam is kept
+    * per (query, cluster), so no two walks share a node. A search reads
+    * the corpus ⋈ assignment and the edge table once each, groups both
+    * by cluster and runs every walk's `hops` rounds inside the task that
+    * holds its cluster: a local top-k per walk, then one global top-k
+    * per query (REPOSE's shape), one plan whose job count does not
+    * depend on `hops`. The LIMIT: a task holds one cluster's vectors and
+    * adjacency, about corpus size over the centroid count the caller
+    * picks at build time (~250 64-d vectors in the ann_serve benchmark,
+    * ~60 at sf0.01). A walk visits at most 1 + hops·beamWidth·graphK
+    * nodes; nothing is quadratic or corpus-wide after the graph build.
     *
     * Corpus cluster ids come from the index's assignment table — serve
     * time inlines no centroid literals. Determinism: scores are ROUND-6
@@ -1409,22 +1445,6 @@ object Similarity {
     require(hops >= 1 && hops <= 8, s"hops must be in [1, 8]: $hops")
     import org.apache.spark.sql.expressions.Window
     val ev = VectorOps.toDouble(col(vecCol))
-    // the (id, v, cid) corpus is a JOIN against the index's assignment
-    // table — persist it, or every hop's score() re-runs the join:
-    // measured 6.8 s → the join runs once per search, not 7×
-    val corpus = graft.Caches.register(
-      df.select(col(idCol).cast("long").as("id"), ev.as("v"))
-        .join(index.assign.select(col("id").cast("long").as("id"),
-          col("cid").cast("long").as("cid")), Seq("id"))
-        // r21 §2.2 (see cachedParts) — keyed repartition, NOT coalesce:
-        // a coalesce reports UnknownPartitioning, and the walk's
-        // per-hop exchange insertion above this cache then varies with
-        // AQE's runtime join choices (a full-suite PlanShapeSpec run
-        // caught recall drifting 5 → 7 exchanges); hash(id, n) keeps
-        // the consumer plans partition-deterministic at the narrow
-        // width.
-        .repartition(cachedParts(df), col("id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // per-cell lower bound lb = max(d(q, leader) − radius, 0), from the
     // driver-bounded cell list only
     val cellEntries = index.cells.map { case (cell, clv, r) =>
@@ -1460,18 +1480,21 @@ object Similarity {
     val entries = cand.withColumn("rn", row_number().over(wp))
       .where(col("rn") <= nProbe)
       .select(col("qid"), col("cid").as("id"))
-    // layer-0 edges, probed once per hop: an already cached table (the
-    // indexFlat session pin) is served as is; any other is materialized
-    // here so the graph build or the avro scan runs once, not hops+1 times
-    val edges =
-      if (index.edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        index.edges
-      else graft.Caches.register(index.edges
-        .select(col("src").cast("long"), col("dst").cast("long"))
-        .coalesce(cachedParts(index.edges)) // r21 §2.2: see cachedParts
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    routedBeamWalk(corpus, queries.select("qid", "qv"), entries, edges,
-      k, beamWidth, hops)
+    val assign = index.assign.select(col("id").cast("long").as("id"),
+      col("cid").cast("long").as("cid"))
+    // each walk runs in the cluster its entry node is assigned to
+    val walks = entries.join(assign, Seq("id"))
+      .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
+    val corpus = df.select(col(idCol).cast("long").as("id"), ev.as("v"))
+      .join(assign, Seq("id"))
+    val edges = index.edges.select(col("src").cast("long"),
+      col("dst").cast("long"), col("cid").cast("long"))
+    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
+    routedBeamWalk(corpus, walks, edges, k, beamWidth, hops)
+      .withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
+      .select(col("qid").as("query_id"), col("rn").cast("int").as("rn"),
+        col("id").as("vec_id"), col("cos"))
+      .orderBy("query_id", "rn")
   }
 
   /** Recall@k of [[beamSearchKnnHier]] against the exact brute-force

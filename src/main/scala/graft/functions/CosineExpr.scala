@@ -40,27 +40,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val (lf, rf) = (elemIsFloat(left), elemIsFloat(right))
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xv * yv
-      na += xv * xv
-      nb += yv * yv
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0
-    else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.eval(a.asInstanceOf[ArrayData], elemIsFloat(left),
+      b.asInstanceOf[ArrayData], elemIsFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val lGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
@@ -97,4 +79,33 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** The interpreted cosine loop of [[CosineSimilarity]], shared with the
+    * task-side ANN walk (`Similarity.beamSearchKnnHier`) so both score
+    * bit-identically: null when the lengths differ or an element is null,
+    * 0.0 when either norm is zero. `xFloat`/`yFloat` say the element type.
+    */
+  private[graft] def eval(x: ArrayData, xFloat: Boolean, y: ArrayData,
+      yFloat: Boolean): Any = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      dot += xv * yv
+      na += xv * xv
+      nb += yv * yv
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0
+    else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.round6
 
 /** Cleaning / type-coercion operators (SURVEY §2.3).
   *
@@ -324,12 +325,11 @@ object Clean {
     sum(v.cast(DecimalType(28, 12))).cast(DoubleType) / count(v)
 
   def summaryStats(df: DataFrame, cols: Seq[String]): DataFrame = {
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val quants = exactQuantiles(df, cols, Seq(0.25, 0.5, 0.75)).collect()
       .flatMap { r =>
         if (r.isNullAt(1)) None // all-null column: no quartiles (pandas NaN)
         else Some(r.getString(0) ->
-          ((r6(r.getDouble(1)), r6(r.getDouble(2)), r6(r.getDouble(3)))))
+          ((round6(r.getDouble(1)), round6(r.getDouble(2)), round6(r.getDouble(3)))))
       }.toMap
     summaryStatsWith(df, cols, quants)
   }
@@ -772,7 +772,7 @@ object Clean {
   def imputeMedian(df: DataFrame, cols: Seq[String]): DataFrame = {
     val q = exactQuantiles(df, cols, Seq(0.5)).collect()
     val med = q.map(r => r.getString(0) ->
-      BigDecimal(r.getDouble(1)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
+      round6(r.getDouble(1))).toMap
     cols.foldLeft(df) { (acc, c) =>
       med.get(c) match {
         case None    => acc // all-null column: nothing to fill with

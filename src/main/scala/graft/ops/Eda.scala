@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.round6
 
 /** EDA aggregation operators (SURVEY §2.5).
   *
@@ -194,9 +195,8 @@ object Eda {
     */
   def trimmedMean(df: DataFrame, cols: Seq[String], pLo: Double = 0.05,
       pHi: Double = 0.95): DataFrame = {
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val bounds = Clean.exactQuantiles(df, cols, Seq(pLo, pHi)).collect()
-      .map(r => r.getString(0) -> ((r6(r.getDouble(1)), r6(r.getDouble(2))))).toMap
+      .map(r => r.getString(0) -> ((round6(r.getDouble(1)), round6(r.getDouble(2))))).toMap
     trimmedMeanWith(df, cols, bounds)
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.round6
 
 /** Preprocessing operators (SURVEY §2.4).
   *
@@ -143,8 +144,7 @@ object Preprocess {
       probs: Seq[Double] = Seq(0.25, 0.5, 0.75), outSuffix: String = "_bucket"): DataFrame = {
     val q = Clean.exactQuantiles(df, cols, probs).collect()
     val edges = q.map(r => r.getString(0) ->
-      probs.indices.map(i =>
-        BigDecimal(r.getDouble(i + 1)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toMap
+      probs.indices.map(i => round6(r.getDouble(i + 1)))).toMap
     quantileBucketizeWith(df, cols, edges, outSuffix)
   }
 
@@ -283,8 +283,7 @@ object Preprocess {
     */
   def robustScale(df: DataFrame, cols: Seq[String]): DataFrame = {
     val q = Clean.exactQuantiles(df, cols, Seq(0.25, 0.5, 0.75)).collect()
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val stats = q.map(r => r.getString(0) -> ((r6(r.getDouble(1)), r6(r.getDouble(2)), r6(r.getDouble(3))))).toMap
+    val stats = q.map(r => r.getString(0) -> ((round6(r.getDouble(1)), round6(r.getDouble(2)), round6(r.getDouble(3))))).toMap
     robustScaleWith(df, cols, stats)
   }
 
@@ -324,7 +323,6 @@ object Preprocess {
     * engine-portable. The per-row test is a codegen'd projection.
     */
   def outlierFlagsMad(df: DataFrame, cols: Seq[String], k: Double = 3.5): DataFrame = {
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val stackExpr = s"stack(${cols.size}, " +
       cols.map(c => s"'$c', CAST(`$c` AS DOUBLE)").mkString(", ") +
       ") as (column_name, value)"
@@ -333,7 +331,7 @@ object Preprocess {
     val cdf = cdf0.localCheckpoint(true) // distinct-value-sized, one fact pass
     val meds = Clean.quantilesFromExistingCdf(
         cdf, Seq("column_name"), Seq(0.5)).collect()
-      .map(r => r.getString(0) -> r6(r.getDouble(1))).toMap
+      .map(r => r.getString(0) -> round6(r.getDouble(1))).toMap
     val medExpr = cols.collect { case c if meds.contains(c) =>
       (col("column_name") === c, lit(meds(c)))
     }
@@ -344,7 +342,7 @@ object Preprocess {
       abs(col("__val") - medOf).as("__adval"), col("__c"))
     val mads = Clean.exactQuantilesFromCounts(
         absCnt, "__adval", "__c", Seq("column_name"), Seq(0.5)).collect()
-      .map(r => r.getString(0) -> r6(r.getDouble(1))).toMap
+      .map(r => r.getString(0) -> round6(r.getDouble(1))).toMap
     cols.foldLeft(df) { (acc, c) =>
       val flag = (meds.get(c), mads.get(c)) match {
         case (Some(m), Some(mad)) if mad != 0.0 =>
@@ -413,8 +411,7 @@ object Preprocess {
     val probs = (0 to gridK).map(_.toDouble / gridK)
     val g = Clean.exactQuantiles(df, Seq(valueCol), probs).collect()
     require(g.nonEmpty, s"$valueCol has no non-null values")
-    val edges = probs.indices.map(i => BigDecimal(g.head.getDouble(i + 1))
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    val edges = probs.indices.map(i => round6(g.head.getDouble(i + 1)))
     val edgeArr = array(edges.map(lit): _*)
     val (cdf, keyTotals) = Clean.valueCdfWithTotals(df, valueCol, keyCols)
     val totals = keyTotals.withColumnRenamed("__tot", "__n")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
+import graft.functions.round6
 
 /** Row types for the custom-state sessionization (top level so the
   * case-class Encoders derive). `ts` stays a Timestamp through the typed
@@ -145,8 +146,7 @@ object EventsStream {
     }
 
     def close(uid: Long, s: OpenSession): SessionRow =
-      SessionRow(uid, s.start_us / 1000000L, s.n,
-        BigDecimal(s.sum).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      SessionRow(uid, s.start_us / 1000000L, s.n, round6(s.sum))
 
     val fn = (uid: Long, it: Iterator[SessEvent], state: GroupState[OpenSession]) => {
       if (state.hasTimedOut) {
@@ -252,9 +252,7 @@ object EventsStream {
           val std = math.sqrt(math.max(
             st.ss4.toDouble / st.n / 10000.0 - mean * mean, 0.0))
           if (std > 0 && math.abs(v - mean) > kSigma * std)
-            out += AnomRow(uid, eid, v,
-              BigDecimal(java.lang.Double.toString((v - mean) / std))
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+            out += AnomRow(uid, eid, v, round6((v - mean) / std))
         }
         val v2 = math.round(v * 100)
         st = RunStats(st.n + 1, st.s2 + v2, st.ss4 + v2 * v2)
@@ -398,8 +396,7 @@ object EventsStream {
     val spark = events.sparkSession
     import spark.implicits._
     types.toIndexedSeq.zip(v.toIndexedSeq).map { case (t, p) =>
-      (t, BigDecimal(java.lang.Double.toString(p))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      (t, round6(p))
     }.toDF("event_type", "stationary")
   }
 
