@@ -326,27 +326,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Multi-probe ANN: also search the buckets reachable by flipping each
-    * single hyperplane bit (the standard recall lever — near neighbors that
-    * fall just across one hyperplane land in a 1-bit-distant bucket).
-    * Probes 1 + planes buckets, still pruning ~(1 - (planes+1)/2^planes)
-    * of the corpus; recall approaches brute force without the cross-join.
-    */
-  def annTopKMultiProbe(df: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Double], k: Int, planes: Int): DataFrame = {
-    val dims = query.size
-    val qBucket = (0 until planes).map { j =>
-      val dot = planeVector(j, dims).zip(query).map { case (a, b) => a * b }.sum
-      if (dot > 0.0) 1L << j else 0L
-    }.sum
-    val probes = qBucket +: (0 until planes).map(j => qBucket ^ (1L << j))
-    df.where(bucketExpr(col(vecCol), planes, dims).isin(probes: _*))
-      .select(col(idCol).as("id"),
-        round(VectorOps.cosineNative(col(vecCol), typedLit(query)), 6).as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
-  }
-
   /** Precompute the bucket column (e.g. at ingest, then partition/bucket the
     * table by it so every ANN probe touches one bucket's files only).
     */
@@ -417,54 +396,15 @@ object Similarity {
         when(col("id") === col("cluster_id"), 1).otherwise(0).as("keep"))
   }
 
-  /** IVF (inverted-file) ANN: cluster the corpus once with k-means, store
-    * the centroid id per row (at ingest time this becomes the table's
-    * partition column), then probe only the `nProbe` clusters whose
-    * centroids are nearest to the query. The scan prunes ~(1 - nProbe/k)
-    * of the corpus — the standard trade against hyperplane LSH when the
-    * corpus has real cluster structure.
-    *
-    * Not oracle-checkable (k-means init is RNG-seeded, and cluster ids are
-    * not portable across libraries); covered by recall tests instead.
-    */
-  def ivfIndex(df: DataFrame, vecCol: String, k: Int, seed: Long = 42L):
-      (DataFrame, Array[Array[Double]]) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val feat = df.withColumn("__ivf_feat", array_to_vector(col(vecCol)))
-    val model = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol("__ivf_feat").setPredictionCol("ivf_cluster")
-      .fit(feat)
-    val indexed = model.transform(feat).drop("__ivf_feat")
-    (indexed, model.clusterCenters.map(_.toArray))
-  }
-
-  /** Probe an IVF-indexed frame: score only rows in the `nProbe` clusters
-    * closest to the query (driver-side centroid ranking — k centroids are
-    * tiny), exact cosine within them.
-    */
-  def ivfTopK(indexed: DataFrame, idCol: String, vecCol: String,
-      centers: Array[Array[Double]], query: Seq[Double], k: Int, nProbe: Int): DataFrame = {
-    val probeClusters = centers.zipWithIndex.map { case (c, i) =>
-      val d = c.zip(query).map { case (a, b) => (a - b) * (a - b) }.sum
-      (i, d)
-    }.sortBy(_._2).take(nProbe).map(_._1).toSeq
-    indexed.where(col("ivf_cluster").isin(probeClusters: _*))
-      .select(col(idCol).as("id"),
-        round(VectorOps.cosineNative(col(vecCol), typedLit(query)), 6).as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
-  }
-
   /** The full IVF ANN QUERY against FIXED centroids, end-to-end
-    * oracle-checkable (unlike [[ivfTopK]], whose k-means index is
-    * RNG-seeded): every row is assigned to its nearest centroid with
+    * oracle-checkable (fixed centroids, unlike an RNG-seeded k-means
+    * index): every row is assigned to its nearest centroid with
     * [[assignToCentroids]]'s subtractive-L2 argmin (ties to the smaller
     * centroid id), the `nProbe` centroids nearest the query are ranked
     * driver-side (centroid lists are tiny by construction), and only rows
     * in probed clusters are cosine-scored for the top-k.
     *
-    * Scale shape: identical to [[ivfTopK]] — assignment is scan-local
+    * Scale shape: assignment is scan-local
     * (centroid literals, no join); at ingest the cluster id becomes the
     * table's partition column so a probe prunes ~(1 − nProbe/k) of the
     * FILES, not just rows. Here assignment is computed inline, which is
@@ -929,12 +869,14 @@ object Similarity {
 
   /** The per-(query, cluster) routed beam walks of [[beamSearchKnnHier]]:
     * every cluster's vectors and adjacency are grouped by `cid` in one
-    * aggregation and joined to the walks routed into it, and each walk
-    * runs all its hops inside that task ([[beamWalk]]). The walks
-    * (bounded by queries × nProbe) are broadcast by hint: a join
-    * strategy left to AQE varied between runs of the plan-shape golden.
-    * `corpus` = (id, v, cid); `walks` = (qid, id, qv, cid), one row per
-    * entry node, `cid` the entry's cluster; `edges` = (src, dst, cid).
+    * aggregation, each cluster row receives the list of all walks and
+    * keeps those whose entry node it holds (a node is in exactly one
+    * cluster, its assignment), and each walk runs all its hops inside
+    * that task ([[beamWalk]]). The walk list (bounded by queries ×
+    * nProbe) is broadcast by hint: a join strategy left to AQE varied
+    * between runs of the plan-shape golden.
+    * `corpus` = (id, v, cid); `walks` = (qid, id, qv), one row per entry
+    * node; `edges` = (src, dst, cid).
     * Returns every walk's top-k visited as (qid, id, cos).
     */
   private def routedBeamWalk(corpus: DataFrame, walks: DataFrame,
@@ -953,12 +895,12 @@ object Similarity {
       .groupBy("cid")
       .agg(collect_list("node").as("nodes"), collect_list("edge").as("adj"))
     clusters
-      .join(broadcast(walks.groupBy("cid")
-        .agg(collect_list(struct("qid", "id", "qv")).as("walks"))), Seq("cid"))
+      .crossJoin(broadcast(walks.agg(collect_list(struct("qid", "id", "qv")).as("walks"))))
       .flatMap { r =>
         val vecs = r.getSeq[Row](1).map(n => n.getLong(0) -> vec(n, 1)).toMap
         val adj = r.getSeq[Row](2).groupMap(_.getLong(0))(_.getLong(1))
-        r.getSeq[Row](3).groupBy(_.getLong(0)).toSeq.flatMap { case (qid, w) =>
+        r.getSeq[Row](3).filter(w => vecs.contains(w.getLong(1)))
+            .groupBy(_.getLong(0)).toSeq.flatMap { case (qid, w) =>
           beamWalk(vec(w.head, 2), w.map(_.getLong(1)), vecs, adj, k,
               beamWidth, hops)
             .map { case (id, cos) => (qid, id, Option(cos).map(_.doubleValue)) }
@@ -1415,12 +1357,22 @@ object Similarity {
     * concentrated queries rank a handful of cells' members instead of
     * the whole centroid table, and the driver holds ONLY the cell list.
     *
+    * Both passes rank in the row: the centroid table is grouped by cell
+    * once (one row per cell holding its members' (cid, cvec)), a query
+    * joins the cells it routes to, and each joined (query, cell) row
+    * sorts its members by (d², cid) in place. Pass 1 reads UB off the
+    * best cell's row; pass 2 keeps each admitted cell's top-nProbe and
+    * merges them per query. The query frame is read once and its vector
+    * rides along to the walks. The bound: one routed (query, cell) row
+    * holds that cell's members, about centroids / nCells vectors.
+    *
     * Scale shape: every kNN edge is intra-cluster and the beam is kept
     * per (query, cluster), so no two walks share a node. A search reads
     * the corpus ⋈ assignment and the edge table once each, groups both
     * by cluster and runs every walk's `hops` rounds inside the task that
     * holds its cluster: a local top-k per walk, then one global top-k
-    * per query (REPOSE's shape), one plan whose job count does not
+    * per query (REPOSE's shape) in a single partition, which holds at
+    * most queries × nProbe × k rows — one plan whose job count does not
     * depend on `hops`. The LIMIT: a task holds one cluster's vectors and
     * adjacency, about corpus size over the centroid count the caller
     * picks at build time (~250 64-d vectors in the ann_serve benchmark,
@@ -1451,50 +1403,56 @@ object Similarity {
       val dl = sqrt(greatest(d2(col("qv"), typedLit(clv)), lit(0.0)))
       struct(greatest(dl - lit(r), lit(0.0)).as("lb"), lit(cell).as("cell"))
     }
+    // the query frame, read once: one row per query carries its vector
+    // and its cells in (lb, cell) order through both passes to the walks
     val queries = df.where(queryPred)
       .select(col(idCol).cast("long").as("qid"), ev.as("qv"))
       .withColumn("lbs", array_sort(array(cellEntries: _*)))
-    val memberD = d2(col("qv"), col("cvec")).as("d2")
-    // pass 1: members of the single best-lb cell -> UB
+    // one row per cell holding its members; a routed (query, cell) row
+    // ranks them by (d², cid) inside the row
+    val cellMembers = index.centroids.groupBy("cell")
+      .agg(collect_list(struct(col("cid"), col("cvec"))).as("members"))
+    val ranked = array_sort(transform(col("members"), m =>
+      struct(d2(col("qv"), m.getField("cvec")).as("d2"), m.getField("cid").as("cid"))))
+    // pass 1: members of the single best-lb cell -> UB, the nProbe-th
+    // member distance (+inf when the cell holds fewer)
     val p1 = queries
+      .withColumn("cell", element_at(col("lbs"), 1).getField("cell"))
+      .join(cellMembers, Seq("cell"))
+      .select(col("qid"), col("qv"), col("lbs"), ranked.as("r"))
+      .select(col("qid"), col("qv"), col("lbs"),
+        when(size(col("r")) >= nProbe,
+          sqrt(greatest(get(col("r"), lit(nProbe - 1)).getField("d2"), lit(0.0))))
+          .otherwise(lit(Double.PositiveInfinity)).as("ub"))
+    // pass 2: exactly the cells whose bound admits a better member, each
+    // row's top-nProbe members merged into the query's top-nProbe. The
+    // cells are filtered in the row: a Filter on `ub` would have the
+    // optimizer infer isnotnull(ub) and re-rank pass 1 in its join
+    val entries = p1
       .select(col("qid"), col("qv"),
-        element_at(col("lbs"), 1).getField("cell").as("cell"))
-      .join(index.centroids, Seq("cell"))
-      .select(col("qid"), col("cid"), memberD)
-    val wp = Window.partitionBy("qid").orderBy(col("d2"), col("cid"))
-    val ub = p1.withColumn("rn", row_number().over(wp))
-      .groupBy("qid")
-      .agg(max(when(col("rn") === nProbe,
-        sqrt(greatest(col("d2"), lit(0.0))))).as("ubv"))
-      .select(col("qid"),
-        coalesce(col("ubv"), lit(Double.PositiveInfinity)).as("ub"))
-    // pass 2: exactly the cells whose bound admits a better member
-    val routed = queries
-      .select(col("qid"), col("qv"), explode(col("lbs")).as("s"))
-      .select(col("qid"), col("qv"), col("s").getField("lb").as("lb"),
-        col("s").getField("cell").as("cell"))
-      .join(ub, Seq("qid"))
-      .where(col("lb") <= col("ub"))
-    val cand = routed.join(index.centroids, Seq("cell"))
-      .select(col("qid"), col("cid"), memberD)
-    val entries = cand.withColumn("rn", row_number().over(wp))
-      .where(col("rn") <= nProbe)
-      .select(col("qid"), col("cid").as("id"))
+        explode(filter(col("lbs"), s => s.getField("lb") <= col("ub"))).as("s"))
+      .select(col("qid"), col("qv"), col("s").getField("cell").as("cell"))
+      .join(cellMembers, Seq("cell"))
+      .select(col("qid"), col("qv"), slice(ranked, 1, nProbe).as("top"))
+      .groupBy("qid", "qv")
+      .agg(slice(array_sort(flatten(collect_list("top"))), 1, nProbe).as("top"))
+      .select(col("qid"), col("qv"), explode(col("top")).as("e"))
+      .select(col("qid"), col("qv"), col("e").getField("cid").as("id"))
     val assign = index.assign.select(col("id").cast("long").as("id"),
       col("cid").cast("long").as("cid"))
-    // each walk runs in the cluster its entry node is assigned to
-    val walks = entries.join(assign, Seq("id"))
-      .join(broadcast(queries.select(col("qid"), col("qv"))), Seq("qid"))
     val corpus = df.select(col(idCol).cast("long").as("id"), ev.as("v"))
       .join(assign, Seq("id"))
     val edges = index.edges.select(col("src").cast("long"),
       col("dst").cast("long"), col("cid").cast("long"))
+    // the walks' local top-k lists meet in one partition (≤ queries ×
+    // nProbe × k rows) for the per-query top-k, in (query_id, rn) order
     val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("id"))
-    routedBeamWalk(corpus, walks, edges, k, beamWidth, hops)
+    routedBeamWalk(corpus, entries, edges, k, beamWidth, hops)
+      .repartition(1)
       .withColumn("rn", row_number().over(wq)).where(col("rn") <= k)
       .select(col("qid").as("query_id"), col("rn").cast("int").as("rn"),
         col("id").as("vec_id"), col("cos"))
-      .orderBy("query_id", "rn")
+      .sortWithinPartitions("query_id", "rn")
   }
 
   /** Recall@k of [[beamSearchKnnHier]] against the exact brute-force

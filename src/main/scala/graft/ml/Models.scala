@@ -240,8 +240,7 @@ object Models {
     * Seeded (deterministic within Spark; not oracle-gated — k-means||
     * init RNG does not transfer across libraries, SURVEY §5.4). Returns
     * (id, cluster) plus the trained model's training cost for quality
-    * assertions. At scale this is the IVF-index builder
-    * (Similarity.ivfIndex wraps the same construction).
+    * assertions.
     */
   def kmeansAssign(df: DataFrame, idCol: String, arrayCol: String,
       k: Int, seed: Long = 42L): (DataFrame, Double) = {

@@ -36,7 +36,8 @@ import scala.jdk.CollectionConverters._
   * `FileSystem.globStatus`, executors open an `FSDataInputStream`-backed
   * [[SeekableInput]], so any Hadoop-supported scheme (hdfs://, s3a://,
   * file://) works. Executors resolve the filesystem from the split's
-  * own URI with a fresh Hadoop `Configuration` — cluster-specific conf
+  * own URI with the default Hadoop `Configuration` (one per JVM,
+  * [[AvroDsv2.hadoopConf]]) — cluster-specific conf
   * keys that only live in the driver's session conf are NOT propagated
   * (the documented remaining gap; the sandbox and any default-configured
   * cluster are unaffected).
@@ -365,13 +366,22 @@ private[sources] object AvroDsv2 {
     }
   }
 
+  /** The Hadoop `Configuration` of every per-file and per-task graft-avro
+    * IO site that has no session conf at hand (sidecar reads, executor
+    * opens, writer opens and aborts, rewrites): Hadoop's defaults, the
+    * same content as a fresh default one, but parsed from its XML
+    * resources once per JVM instead of once per file. Shared, so never
+    * `set` anything on it.
+    */
+  lazy val hadoopConf: Configuration = new Configuration()
+
   /** Avro [[SeekableInput]] over a Hadoop FSDataInputStream — resolves
     * the filesystem from the path's own URI, so the same reader code
     * serves file://, hdfs:// and any other configured scheme.
     */
   def openSeekable(path: String): SeekableInput = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     val len = fs.getFileStatus(p).getLen
     val in = fs.open(p)
     new SeekableInput {
@@ -888,7 +898,7 @@ private[sources] object AvroStats {
 
   def read(avroPath: String): Option[FileStats] = try {
     val p = new Path(s"$avroPath.stats.json")
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(AvroDsv2.hadoopConf)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -1647,6 +1657,19 @@ private[sources] class AvroAggReaderFactory extends PartitionReaderFactory {
     }
 }
 
+/** The batch/streaming scan of one graft-avro read.
+  *
+  * Equality contract: two scans are equal iff every constructor input
+  * that decides their rows is equal — the required schema, the path, the
+  * listed files with their sizes, the split size, the pushed filters, the
+  * stream options, the partition spec, `spj` and `mayReportOrdering`.
+  * The shared sidecar cache and the mutable planning state
+  * (`runtimeFilters`, `lastPlanned`, `lastPlannedBlocks`) are left out.
+  * Spark's `BatchScanExec` compares its batch (this scan), so two reads of
+  * one table with the same columns and filters plan equal scans, and
+  * exchange reuse shares one shuffle or broadcast between them. A new
+  * constructor input that changes the rows must join [[equals]].
+  */
 private[graft] class AvroScan(required: StructType, pathStr: String,
     files: Seq[(String, Long)], splitBytes: Long,
     val pushed: Array[Filter],
@@ -1669,6 +1692,17 @@ private[graft] class AvroScan(required: StructType, pathStr: String,
   /** (surviving, total) file counts after sidecar pruning — exposed for
     * the zone-map audit tests. */
   @volatile private[sources] var lastPlanned: (Int, Int) = (0, 0)
+
+  private def rowKey: Seq[Any] = Seq(required, pathStr, files, splitBytes,
+    pushed.toSeq, streamOpts, partSpec, spj, mayReportOrdering)
+  // computed once: the file list can be long
+  private lazy val rowKeyHash = rowKey.hashCode
+  override def hashCode(): Int = rowKeyHash
+  override def equals(other: Any): Boolean = other match {
+    case o: AvroScan =>
+      (o eq this) || (o.hashCode == hashCode && o.rowKey == rowKey)
+    case _ => false
+  }
 
   private val partNames = partSpec.map(_._1).toSet
   private val partTypes = partSpec.toMap

@@ -86,7 +86,7 @@ private[graft] object AvroRewrite {
   private def repairSidecarIfMissing(path: String,
       fileStats: Array[Byte]): Unit = {
     val sc = new Path(s"$path.stats.json")
-    val fs = sc.getFileSystem(new Configuration())
+    val fs = sc.getFileSystem(AvroDsv2.hadoopConf)
     if (!fs.exists(sc)) {
       val out = fs.create(sc, true)
       try out.write(fileStats) finally out.close()
@@ -408,7 +408,7 @@ private[graft] object AvroRewrite {
     private val blocks = Seq.newBuilder[AvroSink.BlockAcc]
     var rows = 0L
     private val writer: DataFileWriter[GenericRecord] = {
-      val fs = tempPath.getFileSystem(new Configuration())
+      val fs = tempPath.getFileSystem(AvroDsv2.hadoopConf)
       val w = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](avroSch))
       w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
@@ -464,7 +464,7 @@ private[graft] object AvroRewrite {
       AvroSink.statsJson(fieldMeta, accs, rows, Seq.empty)
     def abort(): Unit = {
       try writer.close() catch { case _: Throwable => () }
-      val fs = tempPath.getFileSystem(new Configuration())
+      val fs = tempPath.getFileSystem(AvroDsv2.hadoopConf)
       fs.delete(tempPath, false)
     }
   }

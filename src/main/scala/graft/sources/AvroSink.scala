@@ -1005,7 +1005,7 @@ private[sources] class AvroDataWriter(fieldMeta: Seq[(String, String)],
     }
     val avroSch: Schema = AvroSink.avroSchemaOf(dataMeta)
     val writer: DataFileWriter[GenericRecord] = {
-      val fs = tempPath.getFileSystem(new Configuration())
+      val fs = tempPath.getFileSystem(AvroDsv2.hadoopConf)
       val w = new DataFileWriter[GenericRecord](
         new GenericDatumWriter[GenericRecord](avroSch))
       w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
@@ -1096,7 +1096,7 @@ private[sources] class AvroDataWriter(fieldMeta: Seq[(String, String)],
   override def abort(): Unit = {
     sinks.values.foreach { s =>
       try s.writer.close() catch { case _: Throwable => () }
-      val fs = s.tempPath.getFileSystem(new Configuration())
+      val fs = s.tempPath.getFileSystem(AvroDsv2.hadoopConf)
       fs.delete(s.tempPath, false)
     }
     sinks.clear()

@@ -5,9 +5,10 @@ import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-/** The task-side beam walk of `Similarity.beamSearchKnnHier`: rows pinned
-  * to the ones the per-hop DataFrame walk returned on the same index, and
-  * a job count that does not depend on the hop budget.
+/** The task-side beam walk and the entry routing of
+  * `Similarity.beamSearchKnnHier`: rows pinned to the ones the per-hop
+  * DataFrame walk and the window/aggregate routing chain returned on the
+  * same index, and a job count that does not depend on the hop budget.
   */
 class BeamWalkSpec extends SparkSpec {
 
@@ -80,6 +81,73 @@ class BeamWalkSpec extends SparkSpec {
     test(s"post-insert walk with tied cosines, hops=$hops beamWidth=$beamWidth: " +
         "the per-hop walk's rows") {
       assert(search(hops, beamWidth) === want.split(" ").toSeq)
+    }
+
+  /** Five centroids in three cells, no insert: cell 0 holds centroids 0,
+    * 3 and 4 (radius 3.13), cells 1 and 2 hold one centroid each (radius
+    * 0). Every query below routes to cell 0 first, with a lower bound
+    * above 0 for most of them.
+    */
+  private lazy val fiveCentroids: Seq[(Long, Seq[Double])] =
+    emb.where(col("vec_id") < 5).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toIndexedSeq
+  private lazy val threeCells: Similarity.HierIndex = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_beam_route").toString
+    graft.Caches.scoped {
+      Similarity.persistIndexHier(emb, "vec_id", "e", fiveCentroids,
+        nCells = 3, graphK = 2, dir)
+    }
+    Similarity.loadIndexHier(spark, dir)
+  }
+
+  private def routed(index: Similarity.HierIndex, nProbe: Int): Seq[String] =
+    Similarity.beamSearchKnnHier(emb, "vec_id", "e", index,
+        col("vec_id").isin(5L, 18L, 27L, 104L, 150L, 233L, 272L, 291L), k = 3,
+        nProbe = nProbe, beamWidth = 2, hops = 2)
+      .collect().toSeq
+      .map(r => s"${r.getLong(0)},${r.getInt(1)},${r.getLong(2)},${r.get(3)}")
+
+  // (query_id, rn, vec_id, cos) rows of the window/aggregate routing chain
+  // (pass-1 window, UB aggregate, pass-2 join and window) that in-row
+  // routing replaced; nProbe 5 and 7 admit every centroid
+  private val allEntries =
+    "5,1,44,0.537027 5,2,186,0.484418 5,3,230,0.41204 " +
+      "18,1,134,0.528469 18,2,234,0.41175 18,3,4,0.382579 " +
+      "27,1,291,0.48181 27,2,42,0.473332 27,3,0,0.220569 " +
+      "104,1,4,1.0 104,2,104,1.0 104,3,204,1.0 " +
+      "150,1,150,1.0 150,2,195,0.525385 150,3,80,0.469097 " +
+      "233,1,92,0.489501 233,2,1,0.430992 233,3,101,0.430992 " +
+      "272,1,272,1.0 272,2,234,0.700816 272,3,4,0.605914 " +
+      "291,1,291,1.0 291,2,42,0.676716 291,3,70,0.612728"
+  private val routedExpected: Seq[(Int, String, String)] = Seq(
+    (3, "the best cell holds exactly nProbe members",
+      "5,1,44,0.537027 5,2,186,0.484418 5,3,230,0.41204 " +
+        "18,1,134,0.528469 18,2,234,0.41175 18,3,4,0.382579 " +
+        "27,1,291,0.48181 27,2,42,0.473332 27,3,0,0.220569 " +
+        "104,1,4,1.0 104,2,104,1.0 104,3,204,1.0 " +
+        "150,1,150,1.0 150,2,195,0.525385 150,3,80,0.469097 " +
+        "233,1,1,0.430992 233,2,101,0.430992 233,3,201,0.430992 " +
+        "272,1,272,1.0 272,2,234,0.700816 272,3,4,0.605914 " +
+        "291,1,291,1.0 291,2,42,0.676716 291,3,70,0.612728"),
+    (4, "the best cell holds fewer than nProbe members (UB = +inf)",
+      "5,1,44,0.537027 5,2,186,0.484418 5,3,230,0.41204 " +
+        "18,1,134,0.528469 18,2,234,0.41175 18,3,4,0.382579 " +
+        "27,1,291,0.48181 27,2,42,0.473332 27,3,0,0.220569 " +
+        "104,1,4,1.0 104,2,104,1.0 104,3,204,1.0 " +
+        "150,1,150,1.0 150,2,195,0.525385 150,3,80,0.469097 " +
+        "233,1,1,0.430992 233,2,101,0.430992 233,3,201,0.430992 " +
+        "272,1,272,1.0 272,2,234,0.700816 272,3,4,0.605914 " +
+        "291,1,291,1.0 291,2,42,0.676716 291,3,70,0.612728"),
+    (5, "nProbe equals the centroid count", allEntries),
+    (7, "nProbe exceeds the centroid count", allEntries))
+
+  for ((nProbe, what, want) <- routedExpected)
+    test(s"routing, nProbe=$nProbe, $what: the chain's rows, equal to the flat index") {
+      val got = routed(threeCells, nProbe)
+      assert(got === want.split(" ").toSeq)
+      // exact bound routing: the entries are the flat (d2, cid) top-nProbe
+      assert(got === routed(
+        Similarity.indexFlat(emb, "vec_id", "e", fiveCentroids, graphK = 2), nProbe))
     }
 
   test("a search runs as many jobs with 6 hops as with 1") {

@@ -110,42 +110,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
   }
 
-  test("multi-probe ANN recall >= single-bucket recall, both subsets of brute top-k") {
-    val dims = 16
-    val vecs = (0 until 300).map { i =>
-      (i.toLong, Array.tabulate(dims)(d => math.sin(i * 13 + d * 7).toFloat))
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val q = vecs(42)._2.map(_.toDouble).toSeq
-    val brute = Similarity.bruteForceTopK(df, "vec_id", "embedding", q, 10)
-      .select("id").as[Long].collect().toSet
-    val single = Similarity.annTopK(df, "vec_id", "embedding", q, 10, planes = 5)
-      .select("id").as[Long].collect().toSet
-    val multi = Similarity.annTopKMultiProbe(df, "vec_id", "embedding", q, 10, planes = 5)
-      .select("id").as[Long].collect().toSet
-    assert(single.contains(42L) && multi.contains(42L)) // self-recall
-    assert((multi intersect brute).size >= (single intersect brute).size)
-  }
-
-  test("IVF index + probe: identical vector found with nProbe=1, full recall at nProbe=k") {
-    val dims = 8
-    val vecs = (0 until 120).map { i =>
-      (i.toLong, Array.tabulate(dims)(d => (math.sin(i * 31 + d) + (i % 3) * 4).toFloat))
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val (indexed, centers) = Similarity.ivfIndex(df, "embedding", k = 3)
-    assert(centers.length == 3 && centers.head.length == dims)
-    val q = vecs(11)._2.map(_.toDouble).toSeq
-    val hit = Similarity.ivfTopK(indexed, "vec_id", "embedding", centers, q, 1, nProbe = 1).head()
-    assert(hit.getLong(0) == 11L && approx(hit.getDouble(1), 1.0, 1e-6))
-    // nProbe = k degrades to exact brute force: must match bruteForceTopK
-    val ivfAll = Similarity.ivfTopK(indexed, "vec_id", "embedding", centers, q, 5, nProbe = 3)
-      .select("id").as[Long].collect().toSeq
-    val brute = Similarity.bruteForceTopK(df, "vec_id", "embedding", q, 5)
-      .select("id").as[Long].collect().toSeq
-    assert(ivfAll == brute)
-  }
-
   test("dedup-apply never force-broadcasts the kept-id relation (anti-join on losers)") {
     val docs = Seq((1L, base), (2L, nearDup), (3L, unrelated)).toDF("doc_id", "text")
     val kept = Dedup.applyNearDupDedup(docs, "text", "doc_id",
