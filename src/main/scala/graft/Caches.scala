@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Lifetimes for DataFrames an operator persists mid-plan (e.g. the
-  * shingle stage inside Dedup.nearDupMinhash) and for session-lifetime
-  * pinned artifacts.
+  * shingle stage inside Dedup.nearDupMinhash), for the RDDs behind
+  * [[graft.ops.Plans.checkpoint]], and for session-lifetime pinned
+  * artifacts.
   *
   * CONTRACT — scope-only: an operator [[register]]s the frames it
   * persists; the innermost [[scoped]] block of the registering thread
@@ -21,9 +22,10 @@ import org.apache.spark.sql.DataFrame
   * on a shared thread) can see each other's frames.
   */
 object Caches {
-  private[graft] type Scopes = List[scala.collection.mutable.ListBuffer[DataFrame]]
+  /** A scope holds one release action per registered frame or RDD. */
+  private[graft] type Scopes = List[scala.collection.mutable.ListBuffer[() => Unit]]
   private val scopes = ThreadLocal.withInitial[Scopes](() => Nil)
-  private var held = 0 // frames tracked by live scopes
+  private var held = 0 // frames and RDDs tracked by live scopes
 
   /** Track a persisted frame in the calling thread's innermost [[scoped]]
     * block; returns it for inline use. Outside any scope it is untracked.
@@ -42,16 +44,27 @@ object Caches {
       case r: Ready => r.df eq df
       case _ => false
     }
-    if (!isPin) scopes.get() match {
-      case innermost :: _ =>
-        innermost += df
-        held += 1
-      case Nil =>
-    }
+    if (!isPin) track(() => df.unpersist(false))
     df
   }
 
-  /** Number of frames held by live scopes (test/diagnostic hook). */
+  /** Track a persisted or locally checkpointed RDD like [[register]]
+    * tracks a frame: the scope exit unpersists it, which for a local
+    * checkpoint drops the blocks its lineage now reads.
+    */
+  def register[T](rdd: org.apache.spark.rdd.RDD[T]): rdd.type = {
+    synchronized(track(() => rdd.unpersist(false)))
+    rdd
+  }
+
+  private def track(release: () => Unit): Unit = scopes.get() match {
+    case innermost :: _ =>
+      innermost += release
+      held += 1
+    case Nil =>
+  }
+
+  /** Number of frames and RDDs held by live scopes (test/diagnostic hook). */
   def registeredCount: Int = synchronized(held)
 
   /** Query lifetime: frames this thread (or a [[Par]] task it runs)
@@ -66,14 +79,14 @@ object Caches {
     * which its pid-stability contract forbids).
     */
   def scoped[T](body: => T): T = {
-    val mine = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    val mine = scala.collection.mutable.ListBuffer.empty[() => Unit]
     val outer = scopes.get()
     scopes.set(mine :: outer)
     try body
     finally {
       scopes.set(outer)
       synchronized {
-        mine.foreach(_.unpersist(false))
+        mine.foreach(_())
         held -= mine.size
       }
     }

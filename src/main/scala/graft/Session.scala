@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every main (Bench, Verify, the tools) and the test harness build their
   * session here, so the config is decided once: graft's native functions,
   * UTC, the nanos-as-long read of `events.parquet`, storage-partitioned
-  * joins, and as many shuffle partitions as cores.
+  * joins, as many shuffle partitions as cores, and a codegen cache sized
+  * for the registered queries.
   */
 object Session {
 
@@ -28,6 +29,13 @@ object Session {
       // a scan opts into reporting (graft-avro: .option("graft.spj"))
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      // Spark's codegen cache keeps 100 compiled classes by default and
+      // thrashes: one pass over every registered query at sf0.001
+      // compiles 5,840 distinct classes, and at 100 entries the warm pass
+      // recompiled 9,564 (at 6000, 267; graft.tools.Profile counts them).
+      // A static conf: it takes effect in the session that first compiles
+      // code in the JVM.
+      .config("spark.sql.codegen.cache.maxEntries", "6000")
       .getOrCreate()
 
   /** Evaluate every output row of `df`'s exact physical plan, in one job,

@@ -124,9 +124,12 @@ object Models {
       include: Set[String] = Set("decision_tree", "random_forest", "gbt")): DataFrame = {
     val (train, test) = split(assembled)
     train.cache(); test.cache()
+    // the class count only shapes the GBT arm (binary or one-vs-rest):
+    // without that arm its countDistinct query is not run
     val numClasses =
-      if (isClassification) train.select(countDistinct(col("label"))).head().getLong(0).toInt
-      else 0
+      if (isClassification && include("gbt"))
+        train.select(countDistinct(col("label"))).head().getLong(0).toInt
+      else 2
     val models: Seq[(String, PipelineStage)] =
       (if (isClassification) classifiers(numClasses, rfTrees, gbtIter)
        else regressors(rfTrees, gbtIter)).filter(m => include(m._1))
@@ -138,7 +141,8 @@ object Models {
     }
     train.unpersist(); test.unpersist()
     import spark.implicits._
-    rows.toDF("model", "metric", "value").orderBy("model", "metric")
+    // a handful of rows: sorted here, not by a range-sampled orderBy
+    rows.sortBy(r => (r._1, r._2)).toDF("model", "metric", "value")
   }
 
   /** M6, the random-forest arm (`DIH.py:73-76`): 3-fold CrossValidator

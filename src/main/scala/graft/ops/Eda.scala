@@ -21,6 +21,10 @@ object Eda {
 
   /** E1 — equal-width histogram: bin counts over [min, max] with the
     * max value clamped into the last bin (numpy right-closed edge rule).
+    *
+    * Single partition: the final aggregate and the sort by bin, ≤ bins
+    * rows. A global `orderBy` paid a range-boundary sampling job and a
+    * range exchange for them.
     */
   def histogram(df: DataFrame, c: String, bins: Int): DataFrame = {
     val mm = df.agg(min(col(c)).cast("double").as("__lo"), max(col(c)).cast("double").as("__hi"))
@@ -28,7 +32,7 @@ object Eda {
       .crossJoin(broadcast(mm))
       .select(binOf(col(c), col("__lo"), col("__hi"), bins).as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("cnt"))
-      .orderBy("bin")
+      .coalesce(1).sortWithinPartitions("bin")
   }
 
   /** Equal-width bin index with numpy edge semantics: max value is clamped
@@ -75,6 +79,9 @@ object Eda {
   /** E4 — 2-D density histogram: `bins x bins` equal-width grid counts over
     * non-null (x, y) pairs; per-axis range = that column's min/max
     * (numpy `histogram2d` semantics, right-most bin closed).
+    *
+    * Single partition: the final aggregate and the sort by (bx, by),
+    * ≤ bins² rows (as [[histogram]]).
     */
   def histogram2d(df: DataFrame, xc: String, yc: String, bins: Int): DataFrame = {
     val nn = df.where(col(xc).isNotNull && col(yc).isNotNull)
@@ -86,7 +93,7 @@ object Eda {
     nn.crossJoin(broadcast(mm))
       .select(bucket(xc, "__xlo", "__xhi").as("bx"), bucket(yc, "__ylo", "__yhi").as("by"))
       .groupBy("bx", "by").agg(count(lit(1)).as("cnt"))
-      .orderBy("bx", "by")
+      .coalesce(1).sortWithinPartitions("bx", "by")
   }
 
   /** Approx tier of the box/quantile stats for corpus scale: t-digest

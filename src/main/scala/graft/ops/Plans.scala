@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Plan-shaping helpers shared across operators. */
 object Plans {
@@ -48,6 +49,43 @@ object Plans {
     * stages. The `LogicalRDD` declares no output partitioning, so an
     * operator over the pin that needs a distribution plans its own
     * exchange.
+    *
+    * Pin or [[checkpoint]]? Pin when the stage above `df`'s last exchange
+    * is light next to a write of its rows (Clean's numbered carry input,
+    * the prefix-sum CDF kernel, Eda's Pareto frontier, Pack's prefix
+    * sum, Dedup's already checkpointed label jump): recomputing it per
+    * consumer costs less than storing it. Checkpoint when that stage is
+    * heavy and every consumer re-runs it, or when `df` has no exchange and
+    * each consumer would re-read its sources.
     */
   def pin(df: DataFrame): DataFrame = df.sparkSession.createDataFrame(df.rdd, df.schema)
+
+  /** Eager local checkpoint, released with the enclosing scope: `df` runs
+    * once, now, and its rows are stored as Spark blocks (memory, spilling
+    * to disk), one block per partition of `df`'s RDD. The returned frame
+    * reads those blocks, so every consumer sees exactly `df`'s partitions
+    * and row order (a float aggregate over it sums in the same order as
+    * over a [[pin]]), and nothing below is planned or run again.
+    *
+    * Storage is `df`'s full row count: use it for a frame whose heavy
+    * last stage several consumers would each recompute (the fill windows
+    * under zscore's statistics and projection), or whose source parse
+    * several passes would each repeat. Where the recomputed stage is
+    * light, a [[pin]] costs less than the write.
+    *
+    * The checkpointed RDD is registered with [[graft.Caches]], so the
+    * innermost `Caches.scoped` block unpersists it on exit; the returned
+    * frame must not be read after that. Like [[pin]], the frame is a
+    * `LogicalRDD` without origin constraints or partitioning:
+    * `Dataset.localCheckpoint` alone keeps the constraints, and an
+    * aliased self-join over it can crash constraint rewriting.
+    */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = true)
+    cp.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => graft.Caches.register(r.rdd)
+      case _ =>
+    }
+    pin(cp)
+  }
 }

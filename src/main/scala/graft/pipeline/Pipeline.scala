@@ -17,10 +17,26 @@ object Pipeline {
 
   /** `process_data` (DIH.py:26-33): coerce strings to numeric, scrub ±inf,
     * interpolate, forward-fill, drop all-null columns.
+    *
+    * The coerced input is materialized once, eagerly, with
+    * [[graft.ops.Plans.checkpoint]] (storage: `df`'s rows, in `df`'s
+    * partitions; released when the enclosing `Caches.scoped` block exits).
+    * Three passes read it: the all-null probe, the fill's range-boundary
+    * sample and the range exchange's map stage. Unmaterialized, each of
+    * them parsed the sources and ran `try_cast` and the ±inf scrub again.
+    *
+    * The output is sorted within its partitions by (`partitionCols`,
+    * `orderCol`). The fill windows leave each (group, range partition)
+    * block in descending order, and the range boundaries move between
+    * runs (RangePartitioner seeds its sample with rdd.id), so the row
+    * order, and with it the last bits of a float aggregate such as
+    * zscore's statistics, changed from run to run in one JVM. Sorted, an
+    * output of one partition (AQE coalesces small fills into one) has
+    * one order.
     */
   def process(df: DataFrame, orderCol: String,
       partitionCols: Seq[String] = Nil): DataFrame = {
-    val coerced = Clean.scrubInf(Clean.coerceNumeric(df))
+    val coerced = Plans.checkpoint(Clean.scrubInf(Clean.coerceNumeric(df)))
     // C5 runs BEFORE the fills (reference statement order is C3,C4,C5):
     // interpolation/ffill only propagate existing values, so a column is
     // all-null after filling iff it was all-null before — the output is
@@ -49,6 +65,7 @@ object Pipeline {
     // statement order) stays hash-green. Direct Clean.ffill callers are
     // unaffected.
     Clean.interpolate(pruned, fillable, orderCol, partitionCols)
+      .sortWithinPartitions((partitionCols :+ orderCol).map(col): _*)
   }
 
   /** `preprocess_data` (DIH.py:36-52): z-score numeric columns, label-encode
@@ -92,21 +109,23 @@ object Pipeline {
     * stable across retries/re-partitioning, which would break deterministic
     * verification.
     *
-    * Plan shape: `process`'s output is pinned at the RDD level
-    * ([[graft.ops.Plans.pin]]) before `preprocess`. zscore reads its input
-    * twice, once for the mean/std aggregate and once for the scaled
-    * projection, and the two reads prune different columns, so without
-    * the pin each planned, compiled and ran its own copy of the fills
-    * (scan, coerce, range exchange, carries, windows). Over the pin both
-    * read one fill output, and so does every query over the returned
-    * frame: the fill's exchanges run once, when the pin is built, and
-    * later plans start at a `LogicalRDD` leaf. Nothing is persisted: the
-    * statistics aggregate reads the fill's output partitions directly, as
-    * in the unpinned composition, and PipelineSpec checks the output
-    * equals `preprocess(process(...))` bit for bit.
+    * Plan shape: `process`'s output is materialized once, eagerly, with
+    * [[graft.ops.Plans.checkpoint]] before `preprocess`. zscore reads its
+    * input twice, once for the mean/std aggregate and once for the scaled
+    * projection; over an RDD pin each read re-ran the fill windows above
+    * the pin's last shuffle. Over the checkpoint the fills (range
+    * exchange, carries, windows) run once, and every query over the
+    * returned frame starts at a `LogicalRDD` leaf. Storage is one copy of
+    * the processed fact rows, in the partitions and the order `process`
+    * produced, so the statistics aggregate sums in the same order as the
+    * unmaterialized composition; together with `process`'s checkpoint of
+    * the coerced input, a `run` holds two fact-sized copies until the
+    * enclosing `Caches.scoped` block exits and releases them. The
+    * returned frame must be consumed inside that block. PipelineSpec
+    * checks the output equals `preprocess(process(...))` bit for bit.
     */
   def run(dfs: Seq[DataFrame], orderKey: DataFrame => org.apache.spark.sql.Column): DataFrame = {
-    val processed = Plans.pin(process(unionSources(dfs, orderKey), OrdCol,
+    val processed = Plans.checkpoint(process(unionSources(dfs, orderKey), OrdCol,
       partitionCols = Seq(SrcCol)))
     preprocess(processed, excludeCols = Set(SrcCol, OrdCol))
   }

@@ -3,8 +3,10 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev utility: profile registered queries in one session. Usage:
   *   runMain graft.tools.Profile <sfDir> <q1,q2,...>
@@ -15,9 +17,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Per run it prints wall seconds, rows, jobs, stages and tasks, the
   * slowest jobs by description, the slowest stages by the RDD scope names
-  * of their operators, and the cached storage left once the scope has
-  * closed. The `graft_*` observed counts go to the log. Plans are
-  * PlanDump's.
+  * of their operators, the classes Janino compiled and the milliseconds
+  * it took (a warm rerun compiles only what the codegen cache evicted),
+  * and the cached storage left once the scope has closed. The `graft_*`
+  * observed counts go to the log. Plans are PlanDump's.
   */
 object Profile {
 
@@ -27,9 +30,11 @@ object Profile {
   final case class Report(name: String, seconds: Double, rows: Long,
       failure: Option[String], jobs: Int, stages: Int, tasks: Int,
       topJobs: Seq[(Double, String)], topStages: Seq[(Double, Int, String)],
+      compiledClasses: Long, compileMs: Double,
       persistentRdds: Int, cachedMb: Double)
 
   private val Top = 12
+  private def compiles = CodegenMetrics.METRIC_COMPILATION_TIME
 
   /** Folds the scheduler events of one run; [[take]] resets it. */
   private final class Recorder extends SparkListener {
@@ -74,18 +79,23 @@ object Profile {
     try names.map { name =>
       GraftListenerBus.drain(sc)
       rec.take()
+      // JVM-wide codegen counters: every compile (driver or local
+      // executor thread) adds one histogram sample and its nanoseconds
+      val (classes0, compileNs0) = (compiles.getCount, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       val result =
         try Right(graft.Caches.scoped(
           graft.Session.materialize(graft.SparkEntry.queries(name)(spark, sfDir))))
         catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
       val sec = (System.nanoTime() - t0) / 1e9
+      val (classes, compileMs) = (compiles.getCount - classes0,
+        (CodeGenerator.compileTime - compileNs0) / 1e6)
       GraftListenerBus.drain(sc)
       val (jobs, stages, tasks) = rec.take()
       val storage = sc.getRDDStorageInfo
       Report(name, sec, result.getOrElse(-1L), result.swap.toOption,
         jobs.size, stages.size, tasks, jobs.sortBy(-_._1).take(Top),
-        stages.sortBy(-_._1).take(Top), sc.getPersistentRDDs.size,
+        stages.sortBy(-_._1).take(Top), classes, compileMs, sc.getPersistentRDDs.size,
         storage.map(r => r.memSize + r.diskSize).sum / (1024.0 * 1024.0))
     } finally sc.removeSparkListener(rec)
   }
@@ -113,6 +123,7 @@ object Profile {
       r.topStages.foreach { case (s, n, ops) =>
         println(f"[profile]   stage $s%7.2f s  tasks=$n%-4d $ops")
       }
+      println(f"[profile]   codegen: classes=${r.compiledClasses} compile=${r.compileMs}%.0f ms")
       println(f"[profile]   storage: persistentRDDs=${r.persistentRdds} cached=${r.cachedMb}%.1f MB")
     }
     val failed = reports.count(_.failure.isDefined)

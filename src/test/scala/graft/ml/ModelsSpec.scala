@@ -61,6 +61,25 @@ class ModelsSpec extends SparkSpec {
     mae.foreach(v => assert(v >= 0.0))
   }
 
+  test("M7/M8 the metrics frame is sorted on the driver: same rows as a global sort, no Exchange") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val reg = (0 until 120).map(i => (i / 10.0, 2.0 * i / 10.0 + math.sin(i * 1.7)))
+      .toDF("x", "y")
+    Seq(Models.assemble(clfData, "label") -> true, Models.assemble(reg, "y") -> false)
+      .foreach { case (asm, isClassification) =>
+        val metrics = Models.trainModels(spark, asm, isClassification,
+          include = Set("decision_tree", "random_forest"), rfTrees = 3)
+        val rows = metrics.collect().toSeq
+        assert(rows.map(_.getString(0)).distinct == Seq("decision_tree", "random_forest"))
+        assert(rows === metrics.orderBy("model", "metric").collect().toSeq, isClassification)
+        val dt = Models.trainModels(spark, asm, isClassification,
+          include = Set("decision_tree"))
+        assert(dt.collect().toSeq === rows.filter(_.getString(0) == "decision_tree"))
+        assert(allNodes(dt.queryExecution.executedPlan).forall(!_.isInstanceOf[Exchange]),
+          dt.queryExecution.executedPlan)
+      }
+  }
+
   test("M7/M8 one metrics object per frame equals the per-metric evaluators exactly") {
     import org.apache.spark.ml.classification.DecisionTreeClassifier
     import org.apache.spark.ml.evaluation.{MulticlassClassificationEvaluator, RegressionEvaluator}

@@ -111,6 +111,103 @@ class PipelineSpec extends SparkSpec {
     }, "a range exchange is planned above the pin")
   }
 
+  /** Per completed stage: the RDD scope (operator) names of its RDDs, the
+    * names of its RDDs and the shuffle records its tasks read.
+    */
+  private final class StageLog extends org.apache.spark.scheduler.SparkListener {
+    val stages = scala.collection.mutable.ArrayBuffer.empty[(Seq[String], Seq[String], Long)]
+    override def onStageCompleted(
+        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = synchronized {
+      val i = e.stageInfo
+      stages += ((i.rddInfos.flatMap(_.scope.map(_.name)).toSeq, i.rddInfos.map(_.name).toSeq,
+        Option(i.taskMetrics).fold(0L)(_.shuffleReadMetrics.recordsRead)))
+    }
+  }
+
+  /** [[driftedSources]] written to parquet and read back, so each source
+    * pass is a file scan.
+    */
+  private def parquetSources(): Seq[org.apache.spark.sql.DataFrame] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_run_sources").toString
+    driftedSources().zipWithIndex.map { case (df, i) =>
+      df.write.parquet(s"$dir/s$i.parquet")
+      spark.read.parquet(s"$dir/s$i.parquet")
+    }
+  }
+
+  test("run scans each source once and runs the fill windows in one stage") {
+    val sc = spark.sparkContext
+    val dfs = parquetSources()
+    val log = new StageLog
+    sc.addSparkListener(log)
+    // collect runs zscore's statistics aggregate and its scaled projection
+    try assert(Pipeline.run(dfs, _ => col("id")).collect().length == 1200)
+    finally {
+      org.apache.spark.GraftListenerBus.drain(sc)
+      sc.removeSparkListener(log)
+    }
+    val stages = log.synchronized(log.stages.toList)
+    val scans = stages.map(_._2.count(_ == "FileScanRDD")).sum
+    assert(scans == dfs.size, s"sources scanned $scans times, want ${dfs.size}:\n" +
+      stages.mkString("\n"))
+    // the fill stage: the interpolation's ascending and descending windows
+    // over every fact row, read from the exchange on (source, pid)
+    val fills = stages.count { case (scopes, _, shuffled) =>
+      scopes.count(_ == "Window") == 2 && shuffled == 1200
+    }
+    assert(fills == 1, s"fill windows ran in $fills stages:\n" + stages.mkString("\n"))
+  }
+
+  test("run releases its materialized stages when the scope exits") {
+    val sc = spark.sparkContext
+    val dfs = driftedSources()
+    val persisted = sc.getPersistentRDDs.keySet
+    def rddIds = org.apache.spark.BlockProbe.rddBlocks(sc).collect {
+      case b: org.apache.spark.storage.RDDBlockId => b.rddId
+    }.toSet
+    val blocks = rddIds
+    def added = sc.getPersistentRDDs.keySet -- persisted
+    val n = graft.Caches.scoped {
+      val out = Pipeline.run(dfs, _ => col("id"))
+      assert(added.size >= 2) // the coerced input and the processed frame
+      out.count()
+    }
+    assert(n == 1200L)
+    assert(added.isEmpty, added)
+    // block removal is asynchronous
+    val deadline = System.nanoTime() + 30e9.toLong
+    while ((rddIds -- blocks).nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert((rddIds -- blocks).isEmpty, "RDD blocks left after the scope exited")
+  }
+
+  test("an aliased self-join over run's output plans and runs") {
+    val out = Pipeline.run(driftedSources(), _ => col("id"))
+    // the materialized leaves carry no origin constraints to rewrite
+    val leaves = out.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }
+    assert(leaves.nonEmpty && leaves.forall(_.constraints.isEmpty), leaves.map(_.constraints))
+    val next = out.select(col(Pipeline.SrcCol), (col(Pipeline.OrdCol) - 1).as("prev"),
+      col("amount").as("next_amount"))
+    val joined = out.as("a").join(next.as("b"),
+      col(s"a.${Pipeline.SrcCol}") === col(s"b.${Pipeline.SrcCol}") &&
+        col(s"a.${Pipeline.OrdCol}") === col("b.prev"))
+    // each source of 400 rows has 399 (row, next row) pairs
+    assert(joined.count() == 3 * 399L)
+  }
+
+  test("run gives the same bits on every run in one session") {
+    // 3,000 rows in one input partition: RangePartitioner samples them
+    // with a seed that changes from run to run, so the range boundaries
+    // (and the fill's block order) move; zscore's sums must not
+    val src = (0 until 3000).map { i =>
+      (i.toLong, if (i % 7 == 0) None else Some(math.sin(i) * 100.0))
+    }.toDF("id", "amount").coalesce(1)
+    val runs = (0 until 3).map(_ => exactRows(Pipeline.run(Seq(src), _ => col("id"))))
+    assert(runs.head.size == 3000)
+    assert(runs.distinct.size == 1)
+  }
+
   test("ingest rejects empty inputs with an explicit error") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_empty").toString
     Seq.empty[(Long, String)].toDF("id", "s").write.mode("overwrite").parquet(s"$tmp/empty.parquet")

@@ -18,6 +18,13 @@ class ProfileSpec extends SparkSpec {
       assert(r.topJobs.nonEmpty && r.topStages.nonEmpty, r)
     }
     assert(reports.map(_.rows).distinct.size == 1 && reports.head.rows >= 1L)
+    // every compile takes some time; the warm rerun hits the codegen cache
+    reports.foreach { r =>
+      assert(r.compiledClasses >= 0L && r.compileMs >= 0.0, r)
+      assert((r.compiledClasses == 0L) == (r.compileMs == 0.0), r)
+    }
+    val Seq(cold, warm) = reports
+    assert(warm.compiledClasses <= cold.compiledClasses, reports)
     // the listener is gone and the session still runs
     assert(ListenerBusProbe.listeners(sc).size == before)
     assert(!sc.isStopped)
