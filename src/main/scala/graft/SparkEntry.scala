@@ -1444,7 +1444,7 @@ object SparkEntry {
       Similarity.bruteForceTopK(T(s, dir, "embeddings"), "vec_id", "embedding",
         queryVec(s, dir), 10)),
     "q_sim_topk_native" -> ((s, dir) =>
-      Similarity.bruteForceTopKNative(T(s, dir, "embeddings"), "vec_id", "embedding",
+      Similarity.bruteForceTopK(T(s, dir, "embeddings"), "vec_id", "embedding",
         queryVec(s, dir), 10)),
     "q_sim_ann_lsh" -> ((s, dir) =>
       Similarity.annTopK(T(s, dir, "embeddings"), "vec_id", "embedding",

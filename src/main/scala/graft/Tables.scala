@@ -10,14 +10,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Natural unique key per table, used by the fan-out exchange below so
+  /** Tables eligible for fan-out, keyed by their natural unique key, so
     * downstream keyed operations (groupBy/join on the same key) can reuse
     * the partitioning instead of exchanging a second time.
-    */
-  /** Tables eligible for fan-out, keyed by their natural unique key.
     *
-    * DEFAULT = the CPU-heavy payload tables only (text / vectors): for
-    * those, per-row work (tokenize, shingle, hash, decode, dot products)
+    * Only the CPU-heavy payload tables (text / vectors): for those,
+    * per-row work (tokenize, shingle, hash, decode, dot products)
     * dwarfs the one narrow exchange and the measured wins are 4-14x
     * (winnow 5.6→0.9 s, scenecut 13→0.9, kmeans 5.6→1.2, langid
     * 2.8→0.7). The NUMERIC fact tables are deliberately excluded after a
@@ -27,20 +25,9 @@ object Tables {
     * spearman 2.2 vs 4.0, boxstats 1.8 vs 3.1, impute 1.8 vs 2.8, MAD
     * 2.5 vs 3.7) and wins only on a handful of projection-heavy scans
     * (coerce, minmax) — net ~12 s against, across the suite.
-    * GRAFT_FANOUT_TABLES overrides the table list for experiments.
     */
-  private val fanKeys: Map[String, String] = {
-    val default = Map("documents" -> "doc_id", "embeddings" -> "vec_id")
-    val full = default ++ Map(
-      "region" -> "r_regionkey", "nation" -> "n_nationkey",
-      "customer" -> "c_custkey", "supplier" -> "s_suppkey",
-      "part" -> "p_partkey", "orders" -> "o_orderkey",
-      "lineitem" -> "l_orderkey", "events" -> "event_id")
-    sys.env.get("GRAFT_FANOUT_TABLES") match {
-      case Some(list) => full.view.filterKeys(list.split(',').toSet).toMap
-      case None => default
-    }
-  }
+  private val fanKeys: Map[String, String] =
+    Map("documents" -> "doc_id", "embeddings" -> "vec_id")
 
   /** Fan a low-parallelism scan out to the session's full parallelism.
     *

@@ -14,11 +14,10 @@ import org.apache.spark.sql.functions._
   * never plans a single-task window over raw rows: rows are
   * range-partitioned on (partitionCols, orderCols), each physical
   * partition computes its local running sum, and only the per-partition
-  * totals of groups that STRADDLE a partition boundary (at most one row
-  * per boundary per side, regardless of group cardinality) flow through
-  * the tiny global offset window — the same boundary-carry shape as
-  * `Clean.orderedWithCarry` / `prefixSumCdf`, so the plan survives both
-  * the empty-partitionCols global ordering AND a skewed group at 100 TB.
+  * totals of groups that STRADDLE a partition boundary are folded into
+  * offsets — `graft.ops.Plans.rangeCarry`, the carry kernel under the
+  * fills and the exact CDF, so the plan survives both the
+  * empty-partitionCols global ordering AND a skewed group at 100 TB.
   *
   * Reference behavior: the reference app has no sharding step (its
   * pandas frames are single-machine); this is north-star extension
@@ -26,73 +25,30 @@ import org.apache.spark.sql.functions._
   */
 object Pack {
 
-  private val PidCol = "__graft_pk_pid"
-  private val LocCol = "__graft_pk_loc"
-  private val OffCol = "__graft_pk_off"
-
   /** Adds `outCol` = exclusive running sum of `weightCol` (null-as-0)
     * over rows ordered by `orderCols` within each `partitionCols` group
     * (empty `partitionCols` = one global order). `weightCol` must be
-    * integral; the sum is carried as LongType.
+    * integral; the sum is carried as LongType: a local running sum per
+    * range partition plus the Σ of the group's earlier partitions
+    * (`graft.ops.Plans.rangeCarry`).
     *
-    * The local sums and the per-partition totals must observe the SAME
-    * physical partition ids. The ranged frame is pinned at the RDD level
-    * (createDataFrame over one RDD instance — same contract as
-    * `Clean.orderedWithCarry`): the range exchange materializes once and
-    * both consumers share its shuffle stages, with no storage write.
-    * ReuseExchange alone cannot be trusted here — the two consumers
-    * prune different columns, so their exchange subplans don't
-    * canonicalize equal, and RangePartitioner's boundary sampling is
-    * seeded by rdd.id, so two independent exchanges would pick DIFFERENT
-    * boundaries and silently disagree on pids. The pin is unconditional
-    * — it is not a cache, just a shared-lineage anchor (the former
-    * `cacheIntermediate` parameter, which gated a MEMORY_AND_DISK
-    * persist, is gone: it had become a silent no-op).
-    *
-    * `orderCols` must be a total order (add a unique tie-break key):
-    * the final sort+window stage above the pinned shuffle is recomputed
-    * per consumer, and equal keys could otherwise reorder between the
-    * two computations (as well as land on either side of a range
-    * boundary, making the result order-dependent).
+    * `orderCols` must be a total order (add a unique tie-break key): the
+    * local window above the kernel's pin is recomputed per consumer, and
+    * equal keys could otherwise reorder between the two computations (as
+    * well as land on either side of a range boundary, making the result
+    * order-dependent).
     */
   def prefixSum(df: DataFrame, weightCol: String, orderCols: Seq[Column],
       partitionCols: Seq[String], outCol: String = "cum_before"): DataFrame = {
-    val grp = partitionCols.map(col)
-    val grpPid = grp :+ col(PidCol)
-    val spark = df.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val ranged0 = df
-      .repartitionByRange(nPart, grp ++ orderCols: _*)
-      .withColumn(PidCol, spark_partition_id())
-    val ranged = graft.ops.Plans.pin(ranged0)
-
-    val wLoc = Window.partitionBy(grpPid: _*).orderBy(orderCols: _*)
+    import graft.ops.Plans
+    val w = coalesce(col(weightCol), lit(0L)).cast("long")
+    val ranged = Plans.rangeCarry(df, partitionCols, orderCols,
+      Seq(Plans.Carry("__graft_off", sum(w), Plans.Fold.Sum(lit(0L))))).rows
+    val wLoc = Window.partitionBy((partitionCols :+ Plans.PidCol).map(col): _*)
+      .orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val local = ranged.withColumn(LocCol,
-      coalesce(sum(coalesce(col(weightCol), lit(0L)).cast("long")).over(wLoc),
-        lit(0L)))
-
-    // Per-(group, pid) totals; only groups spanning >1 physical partition
-    // need a carried offset, so this frame holds at most two rows per
-    // partition boundary — broadcast-safe at any group cardinality.
-    val totals = ranged.groupBy(grpPid: _*)
-      .agg(sum(coalesce(col(weightCol), lit(0L)).cast("long")).as("__psum"))
-    val straddling = totals
-      .withColumn("__npid", count(lit(1)).over(Window.partitionBy(grp: _*)))
-      .where(col("__npid") > 1)
-    val wOff = Window.partitionBy(grp: _*).orderBy(col(PidCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = straddling
-      .withColumn(OffCol, coalesce(sum(col("__psum")).over(wOff), lit(0L)))
-      .select(partitionCols.map(k => col(k).as(s"__graft_pk_$k")) ++
-        Seq(col(PidCol).as("__graft_opid"), col(OffCol)): _*)
-
-    val cond = (partitionCols.map(k => col(k) <=> col(s"__graft_pk_$k")) :+
-      (col(PidCol) === col("__graft_opid"))).reduce(_ && _)
-    local.join(broadcast(offs), cond, "left")
-      .withColumn(outCol, col(LocCol) + coalesce(col(OffCol), lit(0L)))
-      .drop(partitionCols.map("__graft_pk_" + _) ++
-        Seq("__graft_opid", PidCol, LocCol, OffCol): _*)
+    ranged.withColumn(outCol, coalesce(sum(w).over(wLoc), lit(0L)) + col("__graft_off"))
+      .drop(Plans.PidCol, "__graft_off")
   }
 
   /** Shard assignment by token budget: documents laid out in `orderCols`

@@ -108,14 +108,16 @@ object Similarity {
       .orderBy("label", "pos")
 
   /** Exact cosine top-k against one query vector (given as a literal —
-    * e.g. the embedding of a probe document). TakeOrderedAndProject plan:
-    * each partition keeps a k-heap, driver merges k*numPartitions rows.
+    * e.g. the embedding of a probe document), scored by the native
+    * `graft_cos` expression (GraftExtensions must be registered).
+    * TakeOrderedAndProject plan: each partition keeps a k-heap, driver
+    * merges k*numPartitions rows.
     */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int): DataFrame = {
     val q = typedLit(query)
     df.select(col(idCol).as("id"),
-      round(VectorOps.cosine(col(vecCol), q), 6).as("cos"))
+      round(VectorOps.cosineNative(col(vecCol), q), 6).as("cos"))
       .orderBy(col("cos").desc, col("id"))
       .limit(k)
   }
@@ -292,19 +294,6 @@ object Similarity {
     val best = nearestCentroid(e, cents)
     df.select(col(idCol).as("id"), best.getField("cid").as("cluster_id"),
       (round(best.getField("d2"), 6) + lit(0.0)).as("dist2"))
-  }
-
-  /** Same top-k, but scoring through the codegen'd native `graft_dot`
-    * Catalyst expression (GraftExtensions must be registered). Values are
-    * bit-identical to [[bruteForceTopK]]; only the execution tier differs.
-    */
-  def bruteForceTopKNative(df: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Double], k: Int): DataFrame = {
-    val q = typedLit(query)
-    df.select(col(idCol).as("id"),
-      round(VectorOps.cosineNative(col(vecCol), q), 6).as("cos"))
-      .orderBy(col("cos").desc, col("id"))
-      .limit(k)
   }
 
   /** ANN variant: same query, but only candidates in the query's LSH bucket

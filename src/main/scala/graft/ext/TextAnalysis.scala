@@ -184,18 +184,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** Approx tier of corpus term statistics: HyperLogLog document
-    * frequencies (fixed-size sketch per term instead of a countDistinct
-    * shuffle of (term, doc_id) pairs). rsd 0.01 ≈ 1% relative error —
-    * the right trade when doc_freq feeds idf-style weights at 100 TB.
-    */
-  def termStatsApprox(df: DataFrame, textCol: String, docIdCol: String,
-      rsd: Double = 0.01): DataFrame =
-    df.select(col(docIdCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
-      .groupBy("term")
-      .agg(count(lit(1)).as("occurrences"),
-        approx_count_distinct(col("doc_id"), rsd).as("doc_freq"))
-
   // Tiny built-in stopword lists per language family for the language-ID
   // heuristic and stopword-ratio quality metric. Deterministic and mirrored
   // verbatim in the oracle SQL.

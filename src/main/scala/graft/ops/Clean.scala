@@ -57,119 +57,41 @@ object Clean {
     when(c === lit(Double.PositiveInfinity) || c === lit(Double.NegativeInfinity),
       lit(null).cast(DoubleType)).otherwise(c)
 
-  private val PidCol = "__graft_pid"
   private val RnCol  = "__graft_rn"
   private val OffCol = "__graft_off"
   private val TbCol  = "__graft_tb"
 
-  /** Shared distributed-order core of [[interpolate]] and [[ffill]]: returns
-    * `df` range-partitioned on (partitionCols, orderCol) — each task sorts
-    * only its own slice — with per-row local positions and per-partition
-    * boundary carries attached:
-    *   - `__graft_pid`: physical partition id (pinned by a registered
-    *     persist so every consumer sees ONE partitioning — same contract as
-    *     [[prefixSumCdf]]);
-    *   - `__graft_rn`: row number within (partitionCols, pid);
-    *   - `__graft_off`: global row offset of this pid within its group, so
+  /** Shared distributed-order core of [[interpolate]] and [[ffill]]: `df`
+    * through [[Plans.rangeCarry]] on (partitionCols, orderCol), with
+    *   - `__graft_rn`: row number within (partitionCols, pid), computed
+    *     inside the pin so every consumer reads one numbering;
+    *   - `__graft_off`: rows of the group in earlier partitions, so
     *     `rn + off` is the group-global pandas position;
     *   - `__cprev_c` (+ `__cnext_c` when `needNext`): struct(p, v) of the
     *     nearest non-null value of column c BEFORE (resp. AFTER) this
     *     physical partition, with its group-global position.
     *
-    * Cross-partition state never touches fact-table rows: a per-(group, pid)
-    * aggregate (map-side combined; each (group, pid) lives wholly in pid, so
-    * partial aggregation already yields final rows) is filtered to the groups
-    * that actually STRADDLE a partition boundary — at most ~2 rows per
-    * physical partition regardless of group cardinality, because range
-    * partitioning keeps each group's pids contiguous — and the carries are
-    * windowed over that tiny table and broadcast-joined back (null-safely:
-    * a null grouping key is a legitimate group). Groups contained in one
-    * partition take offset 0 and null carries through the left join.
+    * Rows order by (orderCol, tb), `tb` a monotonically increasing id
+    * taken BELOW the range exchange: the numbering above the pin is
+    * recomputed per consumer, and this total order keeps equal orderCol
+    * values from reordering between the two computations. Callers with a
+    * natural unique key should order by it instead of relying on ties.
     */
   private def orderedWithCarry(df: DataFrame, valueCols: Seq[String],
       orderCol: String, partitionCols: Seq[String],
       needNext: Boolean): DataFrame = {
-    val grp = partitionCols.map(col)
-    val grpPid = (partitionCols :+ PidCol).map(col)
-    // The bounds aggregate and the row-level fill must read IDENTICAL
-    // (pid, rn) assignments. This used to pin them with a MEMORY_AND_DISK
-    // persist of the full fact slice — a write+read pass that dominated
-    // interpolate/ffill cost (r9 perf task). ReuseExchange can NOT be
-    // trusted here: the two consumers prune different columns, so their
-    // range-exchange subplans don't canonicalize equal, each exchange
-    // materializes separately, and RangePartitioner's boundary sampling
-    // is seeded by rdd.id — two independent exchanges sample DIFFERENT
-    // boundaries and silently disagree on pids (observed: 2-row oracle
-    // mismatch at partition boundaries). Instead the numbered frame is
-    // pinned at the RDD level (createDataFrame over the same RDD
-    // instance): the range exchange and every shuffle below it
-    // materialize once and are stage-reuse-shared by both passes, with
-    // no storage write. The final (sort + row_number) stage above the
-    // last shuffle IS recomputed per consumer, which is exactly why the
-    // sort key carries a monotonically_increasing_id tie-break computed
-    // BELOW the exchange: (orderCol, tb) is a total order, so the two
-    // recomputations cannot reorder equal orderCol values.
-    // CLUSTER RETRY CAVEAT: mono-id is stable per computed partition, but
-    // if the input itself contains an upstream shuffle, an executor-loss
-    // recomputation of that MAP stage can reassign ids — two consumers
-    // could then disagree on ties between equal orderCol values. The
-    // exposure window (map-stage retry between the two consumer passes)
-    // is the same one the old persist had under block loss; callers with
-    // a natural unique key should order by it instead of relying on ties.
-    val spark = df.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val wLoc = Window.partitionBy(grpPid: _*)
+    import Plans.{Carry, Fold}
+    val wLoc = Window.partitionBy((partitionCols :+ Plans.PidCol).map(col): _*)
       .orderBy(col(orderCol), col(TbCol))
-    val withRn0 = df
-      .withColumn(TbCol, monotonically_increasing_id())
-      .repartitionByRange(nPart, (partitionCols :+ orderCol).map(col): _*)
-      .withColumn(PidCol, spark_partition_id())
-      .withColumn(RnCol, row_number().over(wLoc).cast(LongType))
-    val withRn = Plans.pin(withRn0)
-
-    val boundAggs = count(lit(1)).as("__cnt") +: valueCols.flatMap { c =>
+    val carries = Carry(OffCol, count(lit(1)), Fold.Sum(lit(0L))) +: valueCols.flatMap { c =>
       val tag = when(col(c).isNotNull, struct(col(RnCol).as("p"), col(c).as("v")))
-      max(tag).as(s"__last_$c") ::
-        (if (needNext) min(tag).as(s"__first_$c") :: Nil else Nil)
-    }
-    val bounds = withRn.groupBy(grpPid: _*).agg(boundAggs.head, boundAggs.tail: _*)
-
-    // keep only groups spanning >1 physical partition; each group has at
-    // most #partitions bounds rows, so this window is never single-task
-    // over anything bigger than the aggregate itself
-    val straddling = bounds
-      .withColumn("__npid", count(lit(1)).over(Window.partitionBy(grp: _*)))
-      .where(col("__npid") > 1)
-
-    val wPrevPid = Window.partitionBy(grp: _*).orderBy(col(PidCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wNextPid = Window.partitionBy(grp: _*).orderBy(col(PidCol).desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // local (p, v) bounds shifted to group-global positions, all columns in
-    // one select; then every column's carry in one more, so the carry table
-    // plans one Window per sort direction however many columns there are
-    def globalPos(s: Column): Column =
-      when(s.isNotNull, struct((s.getField("p") + col(OffCol)).as("p"),
-        s.getField("v").as("v")))
-    val withOff = straddling
-      .withColumn(OffCol, coalesce(sum(col("__cnt")).over(wPrevPid), lit(0L)))
-    val shifted = withOff.select(col("*") +: valueCols.flatMap { c =>
-      globalPos(col(s"__last_$c")).as(s"__lastg_$c") ::
-        (if (needNext) globalPos(col(s"__first_$c")).as(s"__firstg_$c") :: Nil else Nil)
-    }: _*)
-    val carryCols = valueCols.flatMap { c =>
-      last(col(s"__lastg_$c"), ignoreNulls = true).over(wPrevPid).as(s"__cprev_$c") ::
-        (if (needNext)
-          last(col(s"__firstg_$c"), ignoreNulls = true).over(wNextPid).as(s"__cnext_$c") :: Nil
+      Carry(s"__cprev_$c", max(tag), Fold.Last(OffCol)) ::
+        (if (needNext) Carry(s"__cnext_$c", min(tag), Fold.First(OffCol)) :: Nil
         else Nil)
     }
-    val sel = partitionCols.map(k => col(k).as(s"__graft_k_$k")) ++
-      (col(PidCol).as("__graft_opid") :: col(OffCol) :: Nil) ++ carryCols
-    val cond = (partitionCols.map(k => col(k) <=> col(s"__graft_k_$k")) :+
-      (col(PidCol) === col("__graft_opid"))).reduce(_ && _)
-    withRn.join(broadcast(shifted.select(sel: _*)), cond, "left")
-      .withColumn(OffCol, coalesce(col(OffCol), lit(0L)))
-      .drop(partitionCols.map("__graft_k_" + _) :+ "__graft_opid": _*)
+    Plans.rangeCarry(df.withColumn(TbCol, monotonically_increasing_id()), partitionCols,
+      Seq(col(orderCol)), carries,
+      _.withColumn(RnCol, row_number().over(wLoc).cast(LongType))).rows
   }
 
   /** Replaces every value column of `df` by its fill expression over
@@ -181,7 +103,7 @@ object Clean {
     */
   private def fillSelect(df: DataFrame, joined: DataFrame,
       partitionCols: Seq[String], fills: Map[String, Column]): DataFrame =
-    joined.repartition((partitionCols :+ PidCol).map(col): _*)
+    joined.repartition((partitionCols :+ Plans.PidCol).map(col): _*)
       .withColumns(fills)
       .select(df.columns.toIndexedSeq.map(col): _*)
 
@@ -215,7 +137,7 @@ object Clean {
     if (valueCols.isEmpty) return df
     val joined = orderedWithCarry(df, valueCols, orderCol, partitionCols,
       needNext = true)
-    val grpPid = (partitionCols :+ PidCol).map(col)
+    val grpPid = (partitionCols :+ Plans.PidCol).map(col)
     val wPrev = Window.partitionBy(grpPid: _*).orderBy(col(RnCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNextRev = Window.partitionBy(grpPid: _*).orderBy(col(RnCol).desc)
@@ -252,7 +174,7 @@ object Clean {
     if (valueCols.isEmpty) return df
     val joined = orderedWithCarry(df, valueCols, orderCol, partitionCols,
       needNext = false)
-    val wPrev = Window.partitionBy((partitionCols :+ PidCol).map(col): _*)
+    val wPrev = Window.partitionBy((partitionCols :+ Plans.PidCol).map(col): _*)
       .orderBy(col(RnCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     fillSelect(df, joined, partitionCols, valueCols.map { c =>
@@ -489,81 +411,25 @@ object Clean {
 
   /** Shared distributed-prefix-sum core of [[valueCdf]]/[[weightedCdf]]:
     * takes the pre-aggregated (keys, __val, measure) table and appends
-    * `__cum`, the per-key running sum of `measure` in __val order.
-    *
-    * Shape: range-partition (keys, __val) → per-partition local cumsums
-    * in PARALLEL windows → per-partition totals (rows = partition count)
-    * prefix-summed and broadcast back as offsets. No single-task window
-    * even when one key's distinct set is corpus-sized.
-    *
-    * The partition ids MUST be identical for the offset aggregation and
-    * the local cumsum. The ranged frame is pinned AT THE RDD LEVEL
-    * (createDataFrame over one RDD instance — the same contract as
-    * [[orderedWithCarry]] and Pack.prefixSum): the range exchange and
-    * everything below it materialize once as shared shuffle stages, with
-    * no storage write (this replaced the r7-era MEMORY_AND_DISK persist,
-    * a full write+read pass per query). Exchange-reuse canonicalization
-    * is deliberately NOT relied on: it only fires when both consumers
-    * need the identical below-exchange column set, an invariant that held
-    * by accident here and would break silently if a future passthrough
-    * column were consumed by only one side (each consumer would then plan
-    * its own exchange, RangePartitioner's rdd.id-seeded sampler would
-    * pick different boundaries, and __cum would mis-offset). The pin
-    * makes pid agreement structural instead of optimizer-dependent, for
-    * the weighted (decimal) path as well as the counted one. Rows are
-    * (keys, __val)-DISTINCT, so the per-consumer sort above the pinned
-    * shuffle is a total order and cannot reorder between passes.
+    * `__cum`, the per-key running sum of `measure` in __val order: a
+    * local cumsum per range partition plus the Σ of the key's earlier
+    * partitions, carried by [[Plans.rangeCarry]]. Rows are
+    * (keys, __val)-DISTINCT, so the local window's order is total. The
+    * per-key totals sum the collected per-partition parts, with no
+    * second pass over the CDF.
     */
   private def prefixSumCdf(perValue: DataFrame, keyCols: Seq[String],
       measure: String, zero: Column): (DataFrame, DataFrame) = {
-    val spark = perValue.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val ranged0 = perValue
-      .repartitionByRange(nPart, (keyCols :+ "__val").map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-    val ranged = Plans.pin(ranged0)
-    val pidTotals = ranged.groupBy((keyCols :+ "__pid").map(col): _*)
-      .agg(sum(col(measure)).as("__pt"))
-    // r21 (guide §2.4 — remove shuffles outright): ONE aggregate over the
-    // pid-totals yields BOTH the per-key grand totals and the straddle
-    // offsets. This replaces two window passes (a count-per-key straddle
-    // filter + the running-sum offsets, each clustering by keys) plus a
-    // separate keyTotals aggregate — two exchanges and two sorts fewer
-    // per CDF consumer. Bounded by the straddle argument: range
-    // partitioning keeps each key's pids contiguous, so Σ(|pids|−1) over
-    // keys ≤ nPart and the collected (pid, pt) array totals at most
-    // ~(|keys| + nPart) entries across all rows — never |keys| × |pids|;
-    // the slice-sum inside `transform` is quadratic only in ONE key's pid
-    // count, which is ≤ nPart.
-    val perKey = pidTotals.groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__pt")).as("__tot"),
-        sort_array(collect_list(struct(col("__pid"), col("__pt")))).as("__pp"))
-    val keyTotals = perKey.select(keyCols.map(col) :+ col("__tot"): _*)
-    // Only keys that STRADDLE a partition boundary need offsets (keys
-    // absent from the offsets table take offset `zero` through the left
-    // join); element i's offset = Σ __pt of that key's earlier pids —
-    // value-identical to the old running-sum window (empty slice →
-    // `aggregate` returns `zero`, matching the old coalesce). Offset keys
-    // renamed + joined null-SAFELY: a null grouping key is a legitimate
-    // group, and a plain equi-join here would silently drop its entire CDF.
-    val offsets = perKey.where(size(col("__pp")) > 1)
-      .select(keyCols.map(col) :+ explode(transform(col("__pp"),
-        (x, i) => struct(x.getField("__pid").as("__opid"),
-          aggregate(slice(col("__pp"), lit(1), i), zero,
-            (acc, y) => acc + y.getField("__pt")).as("__off")))).as("__o"): _*)
-      .select(keyCols.map(k => col(k).as(s"__graft_k_$k")) ++
-        Seq(col("__o.__opid").as("__opid"), col("__o.__off").as("__off")): _*)
-    val wLocal = Window.partitionBy((keyCols :+ "__pid").map(col): _*)
+    val Plans.RangeCarry(ranged, groups) = Plans.rangeCarry(perValue, keyCols,
+      Seq(col("__val")), Seq(Plans.Carry("__off", sum(col(measure)), Plans.Fold.Sum(zero))))
+    val keyTotals = groups.select(keyCols.map(col) :+ aggregate(col(Plans.PartsCol), zero,
+      (acc, y) => acc + y.getField("__off")).as("__tot"): _*)
+    val wLocal = Window.partitionBy((keyCols :+ Plans.PidCol).map(col): _*)
       .orderBy("__val")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joinCond = (keyCols.map(k => col(k) <=> col(s"__graft_k_$k")) :+
-      (col("__pid") === col("__opid"))).reduce(_ && _)
     val cdf = ranged
-      .withColumn("__lcum", sum(col(measure)).over(wLocal))
-      .join(broadcast(offsets), joinCond, "left")
-      .withColumn("__cum", col("__lcum") + coalesce(col("__off"), zero))
-      .drop(keyCols.map("__graft_k_" + _) ++
-        Seq("__opid", "__pid", "__lcum", "__off"): _*)
+      .withColumn("__cum", sum(col(measure)).over(wLocal) + col("__off"))
+      .drop(Plans.PidCol, "__off")
     (cdf, keyTotals)
   }
 

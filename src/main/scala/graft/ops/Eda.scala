@@ -96,22 +96,6 @@ object Eda {
       .coalesce(1).sortWithinPartitions("bx", "by")
   }
 
-  /** Approx tier of the box/quantile stats for corpus scale: t-digest
-    * approximate percentiles (bounded-memory sketch, mergeable across
-    * partitions — no distinct-value map) with a configurable accuracy.
-    * Exact `boxStats` is the oracle-checkable variant; this is what runs
-    * at 100 TB when quantiles feed thresholds rather than reports.
-    */
-  def boxStatsApprox(df: DataFrame, valueCol: String, groupCol: String,
-      accuracy: Int = 10000): DataFrame = {
-    val v = col(valueCol)
-    df.groupBy(col(groupCol))
-      .agg(approx_percentile(v, array(lit(0.25), lit(0.5), lit(0.75)), lit(accuracy)).as("__pct"))
-      .select(col(groupCol),
-        col("__pct")(0).as("q1"), col("__pct")(1).as("med"), col("__pct")(2).as("q3"))
-      .orderBy(col(groupCol))
-  }
-
   /** E5 — Pearson correlation matrix over the given columns, computed as a
     * single aggregate pass of all pairwise `corr` expressions, reshaped to
     * long form (col_a, col_b, r). Pairs with i < j only; the diagonal is 1
@@ -587,8 +571,8 @@ object Eda {
     * Scale shape — never the quadratic dominance join: (1) one
     * wordcount-shaped aggregate keeps max(y) per distinct x; (2) a
     * distributed prefix-max over x order — range partition, per-partition
-    * running max in PARALLEL windows, plus a broadcast per-partition
-    * offset (the same decomposition as the exact-quantile CDF); (3) a
+    * running max in PARALLEL windows, plus the max of the earlier
+    * partitions carried by [[Plans.rangeCarry]]; (3) a
     * point survives iff its y strictly exceeds the prefix-max of all
     * strictly-smaller x. Equal-x ties collapse in step 1; an equal-y at
     * larger x is dominated and correctly dropped by the STRICT compare.
@@ -596,30 +580,17 @@ object Eda {
     * @return the frontier points (xCol, yCol as doubles), ordered by x
     */
   def paretoFrontier2d(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val perX = df
       .where(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).cast("double").as("__x"))
       .agg(max(col(yCol).cast("double")).as("__y"))
-    val ranged0 = perX.repartitionByRange(nPart, col("__x"))
-      .withColumn("__pid", spark_partition_id())
-    // pin the pid (the prefixSumCdf convention): a re-optimization must
-    // not move rows after the pid was observed
-    val ranged = Plans.pin(ranged0)
-    val pidMax = ranged.groupBy("__pid").agg(max(col("__y")).as("__pm"))
-    // offsets: prefix-max of the ≤nPart partition maxima — a bounded
-    // single-partition window over partition-count rows, broadcast back
-    val wOff = Window.orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = pidMax
-      .withColumn("__off", max(col("__pm")).over(wOff))
-      .select(col("__pid").as("__opid"), col("__off"))
-    val wLocal = Window.partitionBy("__pid").orderBy("__x")
+    // one global order: the carry is the max of the earlier partitions
+    val ranged = Plans.rangeCarry(perX, Nil, Seq(col("__x")),
+      Seq(Plans.Carry("__off", max(col("__y")), Plans.Fold.Max))).rows
+    val wLocal = Window.partitionBy(Plans.PidCol).orderBy("__x")
       .rowsBetween(Window.unboundedPreceding, -1)
     ranged
       .withColumn("__lmax", max(col("__y")).over(wLocal))
-      .join(broadcast(offsets), col("__pid") === col("__opid"), "left")
       .withColumn("__pmax", greatest(
         coalesce(col("__lmax"), lit(Double.NegativeInfinity)),
         coalesce(col("__off"), lit(Double.NegativeInfinity))))

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions._
 
 class HitsSpec extends SparkSpec {
@@ -45,5 +46,17 @@ class HitsSpec extends SparkSpec {
     val a = Graph.hitsBipartite(e.repartition(1)).collect().toSeq
     val b = Graph.hitsBipartite(e.repartition(9)).collect().toSeq
     assert(a === b)
+  }
+
+  private val planEdges = (1 to 300).map(i =>
+    ((i % 40).toLong, ((i * 13) % 37 + 50).toLong)).toDF("src", "dst")
+
+  test("plan: hitsBipartite iterations are equi-joins — no cartesian") {
+    graft.Caches.scoped {
+      val q = Graph.hitsBipartite(planEdges)
+      q.collect()
+      assert(!allNodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[CartesianProductExec]),
+        "hitsBipartite planned a cartesian product")
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions._
 
 class LinkPredSpec extends SparkSpec {
@@ -56,5 +57,15 @@ class LinkPredSpec extends SparkSpec {
     val a = Graph.adamicAdar(edges.repartition(1)).collect().toSeq
     val b = Graph.adamicAdar(edges.repartition(7)).collect().toSeq
     assert(a === b)
+  }
+
+  private val planEdges = (1 to 300).map(i =>
+    ((i % 40).toLong, ((i * 13) % 37 + 50).toLong)).toDF("src", "dst")
+
+  test("plan: adamicAdar wedge join is equi-keyed — no cartesian product") {
+    val q = Graph.adamicAdar(planEdges)
+    q.collect()
+    assert(!allNodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[CartesianProductExec]),
+      "adamicAdar planned a cartesian product")
   }
 }

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.functions._
 
 class LpaSpec extends SparkSpec {
@@ -42,5 +43,17 @@ class LpaSpec extends SparkSpec {
     val a = Graph.labelPropagation(e.repartition(1)).collect().toSeq
     val b = Graph.labelPropagation(e.repartition(8)).collect().toSeq
     assert(a === b)
+  }
+
+  private val planEdges = (1 to 300).map(i =>
+    ((i % 40).toLong, ((i * 13) % 37 + 50).toLong)).toDF("src", "dst")
+
+  test("plan: labelPropagation rounds are equi-joins — no cartesian") {
+    graft.Caches.scoped {
+      val q = Graph.labelPropagation(planEdges, iters = 2)
+      q.collect()
+      assert(!allNodes(q.queryExecution.executedPlan).exists(_.isInstanceOf[CartesianProductExec]),
+        "labelPropagation planned a cartesian product")
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 class EvalSpec extends SparkSpec {
@@ -294,5 +295,21 @@ class EvalSpec extends SparkSpec {
     // n_calib must still report the REAL calibration count even though
     // the rank filter matched nothing (regression: it used to be null)
     assert(r.getAs[Long]("n_calib") === 4L)
+  }
+
+  test("plan: aucExact's rank prefix sum is pid-keyed, not one global window") {
+    val df = (1 to 400).map(i => (math.sin(i), i % 3 == 0)).toDF("s", "y")
+    val q = Eval.aucExact(df, "s", col("y"))
+    q.collect()
+    val nodes = allNodes(q.queryExecution.executedPlan)
+    val wins = nodes.collect { case w: WindowExec => w }
+    val unkeyed = wins.filter(_.partitionSpec.isEmpty)
+    // the CDF's offsets fold the collected per-partition totals, so the
+    // corpus-sized rows go through the pid-KEYED local window only and no
+    // unpartitioned window is planned (one would be a data-sized sort)
+    assert(unkeyed.isEmpty,
+      s"auc rank computation fell back to a global window: $unkeyed")
+    assert(wins.exists(_.partitionSpec.nonEmpty),
+      "expected a pid-keyed local cumsum window")
   }
 }

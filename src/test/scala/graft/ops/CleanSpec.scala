@@ -102,6 +102,50 @@ class CleanSpec extends SparkSpec {
     assert(ff == refFfill(vals))
   }
 
+  test("carries keep a null group key apart across range partitions (fills, Pack, CDF)") {
+    // two 10k-row groups, the null key first in range order: over the
+    // 4-partition session both groups straddle partition boundaries, so
+    // every consumer of Plans.rangeCarry must join the null group's
+    // carries back null-safely and keep them off the other group
+    val n = 20000
+    val rows = (1 to n).map { i =>
+      (if (i <= n / 2) None else Some("a"), i.toLong,
+        if (i % 997 == 0) Some(i.toDouble) else None, (i % 7).toLong,
+        (i * 7919 % 20011).toDouble)
+    }
+    val df = rows.toDF("g", "idx", "v", "w", "x")
+    val groups = Seq(None, Some("a")).map(g => rows.filter(_._1 == g))
+    graft.Caches.scoped {
+      val parts = Plans.rangeCarry(df, Seq("g"), Seq(col("idx")),
+        Seq(Plans.Carry("n", count(lit(1)), Plans.Fold.Sum(lit(0L))))).groups
+        .select(size(col(Plans.PartsCol))).as[Int].collect()
+      assert(parts.length == 2 && parts.forall(_ > 1), s"partitions per group: ${parts.toSeq}")
+
+      def fetch(out: org.apache.spark.sql.DataFrame, c: String) =
+        out.orderBy(col("g").asc_nulls_first, col("idx")).select(c).collect().toSeq
+      val vals = groups.map(_.map(_._3).toIndexedSeq)
+      val interp = fetch(Clean.interpolate(df, Seq("v"), "idx", Seq("g")), "v")
+        .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+      assert(sameFill(interp, vals.flatMap(refInterpolate)))
+      val ff = fetch(Clean.ffill(df, Seq("v"), "idx", Seq("g")), "v")
+        .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+      assert(ff == vals.flatMap(refFfill))
+      val cum = fetch(graft.ext.Pack.prefixSum(df, "w", Seq(col("idx")), Seq("g")),
+        "cum_before").map(_.getLong(0))
+      assert(cum == groups.flatMap(g => g.map(_._4).scanLeft(0L)(_ + _).init))
+
+      val cdf = Clean.valueCdf(df, "x", Seq("g"))
+        .orderBy(col("g").asc_nulls_first, col("__val")).collect()
+        .map(r => (Option(r.getString(0)), r.getDouble(1), r.getLong(3))).toSeq
+      val exp = groups.flatMap { g =>
+        val counts = g.groupBy(_._5).view.mapValues(_.size.toLong).toSeq.sortBy(_._1)
+        counts.map(_._1).zip(counts.map(_._2).scanLeft(0L)(_ + _).tail)
+          .map { case (x, c) => (g.head._1, x, c) }
+      }
+      assert(cdf == exp)
+    }
+  }
+
   test("C3/C4 fused kernel keeps each column's carries apart (4 columns, 20k rows)") {
     // one select fills every column, so each column's tags, windows and
     // boundary carries must stay its own: the four null layouts differ
@@ -301,17 +345,6 @@ class CleanSpec extends SparkSpec {
     assert(rows("v").isNullAt(rows("v").fieldIndex("top")))
     assert(rows("s").getAs[String]("top") == "x")
     assert(rows("s").getAs[Long]("cnt") == 3L)
-  }
-
-  test("approx tiers track exact within tolerance (boxStatsApprox, termStatsApprox)") {
-    val df = (1 to 2000).map(i => ("g", i.toDouble)).toDF("k", "v")
-    val exact = Eda.boxStats(df, "v", "k").head()
-    val approxR = Eda.boxStatsApprox(df, "v", "k").head()
-    assert(math.abs(exact.getAs[Double]("med") - approxR.getAs[Double]("med")) < 5.0)
-    val docs = (1L to 200L).map(i => (i, s"alpha beta w$i")).toDF("doc_id", "text")
-    val ts = graft.ext.TextAnalysis.termStatsApprox(docs, "text", "doc_id")
-      .where(col("term") === "alpha").head()
-    assert(math.abs(ts.getAs[Long]("doc_freq") - 200L) <= 6L) // ~1% rsd
   }
 
   test("C6 string describe: top is most frequent, ties break lexicographically") {

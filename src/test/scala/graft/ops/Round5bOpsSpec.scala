@@ -258,11 +258,10 @@ class Round5bOpsSpec extends SparkSpec {
     val q = graft.SparkEntry.queries("q_stats_gini")(spark, "/root/testdata/sf0.001")
     val plan = q.queryExecution.executedPlan.toString
     // every Window node ORDERED BY the value column must be partitioned by
-    // __pid (the local cumsum); only the tiny per-pid offsets window — which
-    // never touches __val — may be keyless
+    // the range partition id (the local cumsum)
     val valWindows = plan.split("\n").filter(l => l.contains("Window") && l.contains("__val"))
     assert(valWindows.nonEmpty, s"expected a window over __val:\n$plan")
-    assert(valWindows.forall(_.contains("__pid")),
+    assert(valWindows.forall(_.contains(Plans.PidCol)),
       s"found a value-ordered window without pid partitioning:\n${valWindows.mkString("\n")}")
   }
 

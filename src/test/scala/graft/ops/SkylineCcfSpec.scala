@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 class SkylineCcfSpec extends SparkSpec {
@@ -71,5 +73,21 @@ class SkylineCcfSpec extends SparkSpec {
     val b = Resample.crossCorrelation(df.repartition(7), "ts", "event_type",
       "click", "purchase").collect().toSeq
     assert(a === b)
+  }
+
+  test("plan: paretoFrontier2d has no unpartitioned window over the data") {
+    val pts = (1 to 500).map(i =>
+      ((i * 37 % 101).toDouble, (i * 53 % 89).toDouble)).toDF("x", "y")
+    val q = Eda.paretoFrontier2d(pts, "x", "y")
+    q.collect()
+    val nodes = allNodes(q.queryExecution.executedPlan)
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),
+      "paretoFrontier2d planned a cartesian product")
+    // the per-x running max is keyed by the range-partition pid, and the
+    // max of the earlier partitions is a fold over the collected
+    // per-partition maxima: no unpartitioned window at all
+    val wins = nodes.collect { case w: WindowExec => w }
+    val unkeyed = wins.filter(_.partitionSpec.isEmpty)
+    assert(unkeyed.isEmpty, s"global window: ${unkeyed.mkString("\n")}")
   }
 }
