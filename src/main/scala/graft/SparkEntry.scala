@@ -5250,7 +5250,7 @@ object SparkEntry {
     }),
 
     // -- compaction EXECUTION (r18): 8 small containers rewrite into one
-    // through the manifest commit protocol (Layout.compact); the oracle
+    // through graft-avro's file-set swap (Layout.compact); the oracle
     // is the PRE-compaction table — data identity is the gate, so a
     // dropped, duplicated, or corrupted row in the rewrite
     // hash-mismatches. File-count/idempotence/crash specs live in

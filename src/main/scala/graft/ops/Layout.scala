@@ -73,9 +73,8 @@ object Layout {
   /** Small-file compaction EXECUTION (r18): rewrites each multi-file
     * bin of a graft-avro table's [[compactionPlan]]-style assignment
     * into one ≈`targetBytes` container (per partition directory, stats
-    * sidecars regenerated, unbinned files byte-identical), through a
-    * manifest-recovery commit protocol that a re-run repairs after any
-    * crash. The remedy for the streaming sink's one-container-per-
+    * sidecars regenerated, unbinned files byte-identical), committing
+    * every bin in one all-or-nothing file-set swap. The remedy for the streaming sink's one-container-per-
     * epoch×task accumulation. Returns the number of bins rewritten.
     */
   def compact(dir: String, targetBytes: Long): Int =

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericRecord}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 import scala.jdk.CollectionConverters._
@@ -23,34 +22,24 @@ import scala.jdk.CollectionConverters._
   * plan's bin count (single-file bins are no-ops and stay untouched: a
   * rewrite that changes nothing but bytes-identity is pure churn).
   *
-  * CRASH CONTRACT (no transaction log, deterministic-name + manifest
-  * recovery — the streaming sink's discipline applied to rewrites):
-  *  1. the bin's rows stream into an invisible dot-temp;
-  *  2. a MANIFEST (`.graft-cmp-<digest>.manifest.json`: final name +
-  *     source list; digest = md5 of the sorted source names) is written;
-  *  3. the temp renames to `compact-<digest>.avro` + sidecar — THE
-  *     commit point;
-  *  4. the sources (+ sidecars) are deleted;
-  *  5. the manifest is deleted.
-  * A crash before (3) aborts on the next `compact` (manifest with no
-  * final file ⇒ delete temp + manifest; sources untouched). A crash
-  * after (3) leaves the compacted file AND its sources visible —
-  * duplicate rows until the next `compact` runs its RECOVERY sweep,
-  * which finishes (4)+(5); the manifest makes that repair exact. This
-  * is the honest no-log trade: commit is atomic per bin, and the only
-  * inconsistent window (post-rename, pre-delete) is repairable and
-  * detectable, never silent — and since r19 it is closed for READERS
-  * entirely: [[AvroDsv2.listFiles]] masks a committed manifest's
-  * sources out of every listing, so the duplicates are never served
-  * even before the next compact() runs the physical sweep.
+  * COMMIT: every bin of one compaction commits in ONE file-set swap
+  * ([[AvroRlo.commitReplace]], whose doc holds the crash contract): the
+  * adds are the bins' outputs (`compact-<digest>-<opId>.avro`, digest =
+  * md5 of the bin's sorted source names), the removes are all their
+  * sources. A plain table commits through the swap's `.graft-rlo-`
+  * manifest — all-or-nothing, readers masked exactly at every instant,
+  * a crashed swap rolled back or finished by the next mutation; a
+  * VERSIONED table commits ONE fenced log version (sources retained for
+  * time travel), and a concurrent writer fails loudly
+  * ([[AvroVersions.ConcurrentWriteException]]) instead of interleaving.
+  * Bins rewrite into invisible `.graft-cmp-<digest>.avro.tmp` dot-temps
+  * first; orphans of a crashed rewrite are swept when the next
+  * compaction starts.
   *
-  * CONCURRENCY CONTRACT (r19): single writer per table for this no-log
-  * protocol — a compaction racing another mutation can sweep the other
-  * writer's temps. Enable the manifest log ([[AvroVersions.enable]])
-  * for claim-fenced commits: a versioned compact() commits ONE fenced
-  * log version (sources retained for time travel) and a concurrent
-  * writer fails loudly ([[AvroVersions.ConcurrentWriteException]])
-  * instead of interleaving.
+  * CONCURRENCY CONTRACT (r19): single writer per plain table — a
+  * compaction racing another mutation can sweep the other writer's
+  * temps. Enable the manifest log ([[AvroVersions.enable]]) for
+  * claim-fenced commits.
   */
 object AvroCompact {
 
@@ -64,31 +53,20 @@ object AvroCompact {
     */
   private final case class Bin(dir: String, sources: Seq[String]) {
     def digest: String = md5Hex(sources.sorted.mkString("\n")).take(16)
-    def finalName: String = s"compact-$digest.avro"
-    def manifestName: String = s".graft-cmp-$digest.manifest.json"
   }
 
-  /** Execute compaction under `dir`: recovery sweep, plan bins (per
-    * partition directory, compactionPlan's next-fit-decreasing rule),
-    * rewrite every multi-file bin, commit each through the manifest
-    * protocol. Returns the number of bins rewritten. Idempotent: a
-    * second run finds no multi-file bins (or finishes a crashed one)
-    * and rewrites nothing.
+  /** Execute compaction under `dir`: plan bins over the current file set
+    * (per partition directory, compactionPlan's next-fit-decreasing
+    * rule), rewrite every multi-file bin, commit them all in one swap.
+    * Returns the number of bins rewritten. Idempotent: a second run
+    * finds no multi-file bins and rewrites nothing.
     */
   def compact(dir: String, targetBytes: Long,
       blockRows: Option[Int] = None): Int = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val conf = AvroSink.driverConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    // a VERSIONED table compacts against its manifest file set and
-    // commits through the log (below) — the .graft-cmp manifest
-    // protocol is the no-log table's substitute commit layer
-    val versioned = AvroVersions.isVersioned(fs, root)
-    if (!versioned) recover(fs, root)
-    val current =
-      if (versioned) AvroVersions.resolveFiles(dir, conf).get
-      else AvroDsv2.listFiles(dir, conf)
+    val current = AvroVersions.resolveFiles(dir, conf)
+      .getOrElse(AvroDsv2.listFiles(dir, conf))
     // candidacy: only files SMALLER than the target are compaction
     // input — a container already at/above target is done (rewriting it
     // into an ever-bigger monolith is pure churn, and excluding it is
@@ -97,132 +75,22 @@ object AvroCompact {
     val bins = planBins(current.filter(_._2 < targetBytes), targetBytes)
       .filter(_.sources.size >= 2)
     if (bins.isEmpty) return 0
-    // rewrite phase: dot-temps only (sources untouched); distributed one
-    // bin per task when a session is active
-    val written: Seq[(Bin, String, Array[Byte])] = try {
-      org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(ss) if bins.size > 1 =>
-          ss.sparkContext.parallelize(bins,
-            math.min(bins.size, math.max(1, ss.sparkContext.defaultParallelism)))
-            .map(b => (b, rewriteBin(b, blockRows)))
-            .collect().toSeq.map { case (b, (t, s)) => (b, t, s) }
-        case _ => bins.map { b =>
-          val (t, s) = rewriteBin(b, blockRows); (b, t, s)
-        }
-      }
-    } catch {
-      case t: Throwable =>
-        AvroSink.tempSweep(fs, root, ".graft-cmp-")
-        throw t
+    // rewrite phase: dot-temps only (sources untouched); one bin per task
+    val written = AvroRewrite.fanout(dir, conf, bins, ".graft-cmp-") { b =>
+      val (temp, stats) = rewriteBin(b, blockRows); (b, temp, stats)
     }
-    // versioned commit (r19): rename every bin's output to a fresh
-    // unique name (sidecar first), then swap sources for outputs in ONE
-    // fenced log commit; sources stay on disk for time travel. A crash
-    // before the log commit leaves only unreferenced fresh-name files
-    // (expire's orphan pass reclaims them)
-    if (versioned) {
-      // compacted bins CONCATENATE sorted sources (no merge-sort): the
-      // every-file-sorted invariant is gone — break the marker's claim
-      // BEFORE any output becomes visible (r19 review)
-      AvroSortMarker.clear(dir, conf)
-      val opId = java.util.UUID.randomUUID().toString.take(8)
-      AvroVersions.commitSwap(fs, root,
-        written.map { case (bin, tempPath, stats) =>
-          (tempPath, new Path(new Path(bin.dir),
-            s"compact-${bin.digest}-$opId.avro").toString, stats)
-        },
-        written.flatMap(_._1.sources), "compact")
-      return written.size
-    }
+    // compacted bins CONCATENATE sorted sources (no merge-sort): the
+    // every-file-sorted invariant is gone — break the marker's claim
+    // BEFORE any output becomes visible
     AvroSortMarker.clear(dir, conf)
-    // commit phase, per bin: manifest (atomic temp+rename — a torn
-    // manifest must be impossible, recovery parses it) → SIDECAR →
-    // rename (= the commit point; the sidecar lands first because a
-    // sidecar without its container is inert to readers, while a
-    // container that crash-lost its sidecar would lose pushdown/pruning
-    // FOREVER — compacted files sit at/above target and never re-enter
-    // compaction) → source deletes → manifest delete
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    written.foreach { case (bin, tempPath, stats) =>
-      val dirPath = new Path(bin.dir)
-      val manifest = om.createObjectNode()
-      manifest.put("final", bin.finalName)
-      val arr = manifest.putArray("sources")
-      bin.sources.foreach(arr.add)
-      val mPath = new Path(dirPath, bin.manifestName)
-      val mTmp = new Path(dirPath, s"${bin.manifestName}.tmp")
-      val mOut = fs.create(mTmp, true)
-      try mOut.write(om.writeValueAsBytes(manifest)) finally mOut.close()
-      fs.delete(mPath, false)
-      require(fs.rename(mTmp, mPath),
-        s"graft-avro compact: manifest rename $mTmp -> $mPath failed")
-      val sOut = fs.create(new Path(dirPath, s"${bin.finalName}.stats.json"), true)
-      try sOut.write(stats) finally sOut.close()
-      val dst = new Path(dirPath, bin.finalName)
-      require(fs.rename(new Path(tempPath), dst),
-        s"graft-avro compact: rename $tempPath -> $dst failed")
-      bin.sources.foreach { s =>
-        fs.delete(new Path(s), false)
-        fs.delete(new Path(s"$s.stats.json"), false)
-      }
-      fs.delete(mPath, false)
-    }
-    written.size
-  }
-
-  /** Recovery sweep (see class doc): finish or abort every bin whose
-    * manifest survived a crash.
-    */
-  private def recover(fs: org.apache.hadoop.fs.FileSystem, root: Path): Unit = {
-    if (!fs.exists(root)) return
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val it = fs.listFiles(root, true)
-    val manifests = Seq.newBuilder[Path]
-    val manifestTemps = Seq.newBuilder[Path]
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (n.startsWith(".graft-cmp-") && n.endsWith(".manifest.json"))
-        manifests += st.getPath
-      else if (n.startsWith(".graft-cmp-") && n.endsWith(".manifest.json.tmp"))
-        manifestTemps += st.getPath // torn pre-commit write: plain abort
-    }
-    manifestTemps.result().foreach(p => fs.delete(p, false))
-    manifests.result().foreach { m =>
-      val dirPath = m.getParent
-      // the digest is in the NAME, so the final path is derivable even
-      // from an unreadable manifest (committed manifests are written
-      // atomically, but a foreign/hand-torn file must not brick every
-      // later compact() — the r18 review's repair-contract finding)
-      val digest = m.getName.stripPrefix(".graft-cmp-")
-        .stripSuffix(".manifest.json")
-      val finalPath = new Path(dirPath, s"compact-$digest.avro")
-      val node = try {
-        val in = fs.open(m)
-        try Some(om.readTree(in: java.io.InputStream)) finally in.close()
-      } catch { case _: Throwable => None }
-      if (fs.exists(finalPath)) {
-        // crashed AFTER the commit point: finish the source deletes —
-        // this needs the source list, so an unreadable manifest here
-        // (impossible under the atomic-write protocol) fails LOUDLY
-        // rather than leaving silent duplicates
-        val sources = node.flatMap(n => Option(n.get("sources"))).getOrElse(
-          throw new IllegalStateException(
-            s"graft-avro compact: unreadable committed manifest $m — " +
-              s"cannot determine which sources to retire (duplicates " +
-              s"visible until resolved)"))
-        sources.asScala.foreach { s =>
-          fs.delete(new Path(s.asText), false)
-          fs.delete(new Path(s"${s.asText}.stats.json"), false)
-        }
-      } else {
-        // crashed BEFORE: abort — also retire the orphan sidecar the
-        // commit may have written ahead of the rename
-        fs.delete(new Path(dirPath, s"compact-$digest.avro.stats.json"), false)
-      }
-      fs.delete(m, false)
-    }
-    AvroSink.tempSweep(fs, root, ".graft-cmp-")
+    val opId = AvroRlo.newOpId()
+    AvroRlo.commitReplace(conf, dir, opId,
+      written.map { case (bin, temp, stats) =>
+        (temp, new Path(new Path(bin.dir),
+          s"compact-${bin.digest}-$opId.avro").toString, stats)
+      },
+      bins.flatMap(_.sources), "compact")
+    bins.size
   }
 
   /** compactionPlan's assignment, driver-side over the metadata-scale

@@ -218,25 +218,20 @@ private[sources] object AvroDsv2 {
     * partitioned layout (`dir/lang=en/part-*.avro`) lists its leaf
     * containers; flat layouts are unchanged.
     *
-    * MANIFEST MASKING (r19, the r18 ADVICE medium): a crash between a
-    * compaction bin's commit rename and its source deletes — or between
-    * a row-level replace's add renames and its remove deletes — leaves
-    * the new container(s) AND their sources visible simultaneously.
-    * Rather than serving duplicate rows until the next mutation runs
-    * its physical recovery sweep, the listing itself consults any
-    * surviving commit manifests as EXCLUSION MASKS:
-    *  - `.graft-cmp-<digest>.manifest.json` with its `compact-<digest>
-    *    .avro` present ⇒ the bin committed: its sources are excluded
-    *    (the next compact() finishes their physical deletion);
-    *    final file absent ⇒ pre-commit crash: the sources stand and
-    *    nothing is masked (the temp is a dot-file, invisible anyway).
-    *  - `.graft-rlo-<id>.manifest.json` (row-level SQL UPDATE / MERGE /
-    *    DELETE, r19): ALL listed adds present ⇒ committed, the removes
-    *    are excluded; any add missing ⇒ pre-commit, the ADDS are
-    *    excluded (a partially-renamed add set must read as the old
-    *    snapshot, not a mix).
-    * A COMMITTED manifest that cannot be parsed fails LOUDLY — serving
-    * known-duplicated rows would be silent corruption. The happy path
+    * MANIFEST MASKING (r19, the r18 ADVICE medium): a crash inside a
+    * plain table's file-set swap ([[AvroRlo.commitReplace]] — a
+    * compaction, or a row-level SQL UPDATE / MERGE / DELETE) leaves a
+    * `.graft-rlo-<id>.manifest.json` at the table root next to a
+    * partial or complete add set. Rather than serving a mix until the
+    * next mutation runs the physical recovery sweep, the listing
+    * consults every surviving manifest as an EXCLUSION MASK: ALL listed
+    * adds present ⇒ committed, the removes are excluded; any add
+    * missing ⇒ pre-commit, the ADDS are excluded (a partially-renamed
+    * add set must read as the old snapshot, not a mix).
+    * A manifest that cannot be parsed fails LOUDLY — serving
+    * known-duplicated rows would be silent corruption — and so does a
+    * `.graft-cmp-*.manifest.json`, the per-bin compaction manifest of
+    * older code, which this code no longer resolves. The happy path
     * (no manifests — they exist only mid-commit or after a crash) costs
     * one name check per directory entry, nothing more.
     */
@@ -257,8 +252,14 @@ private[sources] object AvroDsv2 {
           fs.listStatus(st.getPath).toSeq
             .flatMap { s =>
               val n = s.getPath.getName
-              if (s.isFile && n.endsWith(".manifest.json") &&
-                  (n.startsWith(".graft-cmp-") || n.startsWith(".graft-rlo-"))) {
+              val manifest = s.isFile && n.endsWith(".manifest.json")
+              if (manifest && n.startsWith(".graft-cmp-"))
+                throw new IllegalStateException(
+                  s"graft-avro: ${s.getPath} is a per-bin compaction " +
+                    s"manifest left by a crash of older graft-avro code; " +
+                    s"finish or roll back that compaction by hand, then " +
+                    s"remove the manifest")
+              else if (manifest && n.startsWith(".graft-rlo-")) {
                 manifests += s.getPath; Seq.empty
               } else if (n.startsWith(".") || n.startsWith("_")) Seq.empty
               else walk(s)
@@ -307,34 +308,14 @@ private[sources] object AvroDsv2 {
           s"graft-avro: unreadable commit manifest $m — cannot decide " +
             s"its commit state; repair or remove it")
       }
-    // compaction manifests store ABSOLUTE source paths (r18 format);
-    // row-level manifests store paths RELATIVE to the table root the
-    // manifest sits in (they may span partition subdirectories)
-    def qualify(dir: Path, nameOrPath: String): String = {
-      val child = new Path(nameOrPath)
-      fs.makeQualified(
-        if (child.isAbsolute || nameOrPath.contains(":/")) child
-        else new Path(dir, nameOrPath)).toString
-    }
+    // paths are RELATIVE to the table root the manifest sits in (they
+    // may span partition subdirectories)
+    def qualify(dir: Path, rel: String): String =
+      fs.makeQualified(new Path(dir, rel)).toString
     val out = Set.newBuilder[String]
     manifests.foreach { m =>
       val dir = m.getParent
-      val name = m.getName
-      if (name.startsWith(".graft-cmp-")) {
-        val digest = name.stripPrefix(".graft-cmp-").stripSuffix(".manifest.json")
-        val finalPath = fs.makeQualified(
-          new Path(dir, s"compact-$digest.avro")).toString
-        if (listedSet.contains(finalPath)) parse(m) match {
-          case None => return None // commit finished mid-walk: re-list
-          case Some(node) =>
-            val sources = Option(node.get("sources")).getOrElse(
-              throw new IllegalStateException(
-                s"graft-avro: committed compaction manifest $m carries " +
-                  s"no sources — cannot mask its retired files; repair " +
-                  s"or remove it"))
-            sources.asScala.foreach(s => out += qualify(dir, s.asText))
-        }
-      } else parse(m) match { // .graft-rlo-
+      parse(m) match {
         case None => return None // commit finished mid-walk: re-list
         case Some(node) =>
           val adds = Option(node.get("adds")).map(_.asScala.toSeq)
@@ -1192,30 +1173,18 @@ private[sources] class AvroTable(schema: StructType, pathStr: String,
           s"over the table's columns; got " +
           s"${filters.mkString("[", ", ", "]")}")
     val conf = AvroSink.driverConf()
-    val root = new Path(pathStr)
-    val fs = root.getFileSystem(conf)
-    val versioned = AvroVersions.isVersioned(fs, root)
-    // a VERSIONED table never unlinks physically here: whole-file
-    // deletes drop the files from the next manifest (time travel keeps
-    // the bytes until expire), fenced by the log's claim protocol
-    def dropFromManifest(doomed: Seq[String], op: String): Unit = {
-      val parentV = AvroVersions.latestVersion(fs, root).getOrElse(0L)
-      val parent = if (parentV == 0L) IndexedSeq.empty[(String, Long)]
-        else AvroVersions.readManifest(fs, root, parentV)
-      val gone = doomed.map(p => fs.makeQualified(new Path(p)).toString).toSet
-      AvroVersions.commit(fs, root,
-        parent.filterNot(f => gone.contains(f._1)), op, parentV)
-      ()
-    }
-    // unconditional delete: every file unlinks (or drops out of the
-    // manifest), zero reads
+    // whole-file tiers: a removes-only swap — unlinks on a plain table,
+    // drops the files from the next manifest on a versioned one (time
+    // travel keeps the bytes until expire)
+    def drop(doomed: Seq[String]): Unit =
+      AvroRlo.commitReplace(conf, pathStr, AvroRlo.newOpId(), Seq.empty,
+        doomed, "delete")
+    // unconditional delete: every file goes, zero reads
     val effective = filters.filterNot(_ ==
       org.apache.spark.sql.sources.AlwaysTrue)
     if (effective.isEmpty) {
-      val all = AvroVersions.resolveFiles(pathStr, conf)
-        .getOrElse(AvroDsv2.listFiles(pathStr, conf)).map(_._1)
-      if (versioned) dropFromManifest(all, "delete")
-      else AvroRewrite.unlinkWithDirs(fs, root, all)
+      drop(AvroVersions.resolveFiles(pathStr, conf)
+        .getOrElse(AvroDsv2.listFiles(pathStr, conf)).map(_._1))
       return
     }
     // partition conjuncts evaluate exactly per file from its path; the
@@ -1224,29 +1193,14 @@ private[sources] class AvroTable(schema: StructType, pathStr: String,
     val (candidates, dataFilters, targets) =
       AvroRewrite.splitAndPrune(pathStr, conf, effective, partSpec)
     if (dataFilters.isEmpty) {
-      // pure partition delete: whole-file unlink, zero container reads
-      if (versioned) dropFromManifest(candidates, "delete")
-      else AvroRewrite.unlinkWithDirs(fs, root, candidates)
+      drop(candidates) // pure partition delete: zero container reads
       return
     }
     // rewrite fan-out (orphan-temp sweep, one task per may-match file,
-    // abort-sweep on failure), then commit: every swap keeps the
-    // visible table correct at every instant (AvroRewrite doc);
-    // emptied files unlink whole. Versioned tables commit the outcome
-    // set as ONE manifest swap instead (originals retained).
+    // abort-sweep on failure), then the commit shared with UPDATE
     val outcomes = AvroRewrite.cowFanout(pathStr, conf, targets, partSpec,
       ".graft-del-", (p, pv) => AvroRewrite.deleteRewrite(p, pv, effective))
-    if (versioned) {
-      AvroRewrite.commitOutcomesVersioned(conf, pathStr, outcomes, "delete")
-      return
-    }
-    outcomes.foreach {
-      case AvroRewrite.Rewritten(p, temp, stats, _, _) =>
-        AvroRewrite.swapInPlace(conf, temp, p, stats)
-      case _ => ()
-    }
-    AvroRewrite.unlinkWithDirs(fs, root,
-      outcomes.collect { case AvroRewrite.Emptied(p, _) => p })
+    AvroRewrite.commitOutcomes(conf, pathStr, outcomes, "delete")
   }
   override def schema(): StructType = schema
   override def capabilities(): java.util.Set[TableCapability] =

@@ -10,43 +10,46 @@ import org.apache.spark.sql.sources.Filter
 import scala.jdk.CollectionConverters._
 
 /** Copy-on-write container REWRITE for graft-avro (r18) — the machinery
-  * behind row-level DELETE ([[AvroTable.deleteWhere]] with data-column
-  * predicates) and compaction execution ([[graft.ops.Layout.compact]]).
+  * behind the row-level DELETE and UPDATE tiers ([[AvroTable.deleteWhere]]
+  * with data-column predicates, [[AvroSink.updateWhere]]), plus the
+  * fan-out and container writer that compaction ([[AvroCompact]]) shares.
   *
   * The design contract, shared with the public lakehouse formats
-  * (Delta/Iceberg rewrite-on-delete): a data-column delete rewrites ONLY
-  * the files whose zone maps / blooms say a row MAY match, leaves every
-  * other container byte-identical, and regenerates the rewritten files'
-  * sidecars (file stats + intra-file blocks) so pruning and aggregate
-  * pushdown stay exact afterwards. At 100 TB a `DELETE WHERE
+  * (Delta/Iceberg rewrite-on-delete): a data-column mutation rewrites
+  * ONLY the files whose zone maps / blooms say a row MAY match, leaves
+  * every other container byte-identical, and regenerates the rewritten
+  * files' sidecars (file stats + intra-file blocks) so pruning and
+  * aggregate pushdown stay exact afterwards. At 100 TB a `DELETE WHERE
   * fingerprint IN (dup set)` therefore reads and rewrites the handful
   * of may-match containers, not the table.
   *
-  * CRASH SAFETY without a transaction log: every rewrite lands in an
-  * invisible dot-temp first; the per-file swap is ordered so that at
-  * every instant the visible table is CORRECT (possibly conservative):
-  *   1. delete the file's sidecar — stale stats must never describe the
-  *      new contents (a stale row count would poison count(*) pushdown);
-  *   2. rename the temp OVER the original in one overwrite-rename
-  *      ([[FileContext]] `Options.Rename.OVERWRITE` — atomic on POSIX
-  *      and HDFS), so there is no instant where the file is absent;
-  *   3. write the regenerated sidecar.
-  * A crash after (1) or (2) leaves a readable, correct file without a
-  * sidecar — reads stay exact (pruning is conservative on missing
-  * sidecars) and re-running the same delete completes the work
-  * (idempotence: the rewrite drops no row twice). A failure BEFORE any
-  * swap aborts by sweeping the `.graft-del-` temps; originals are
-  * untouched.
-  *
-  * CONCURRENCY CONTRACT (r19): the crash-ordering above keeps every
-  * instant correct for READERS; it does NOT serialize WRITERS. Two
-  * concurrent mutations of one non-versioned table are OUT OF CONTRACT
-  * — they can sweep each other's temps and interleave per-file swaps.
-  * A table that needs multi-writer safety should enable the manifest
-  * log ([[AvroVersions.enable]]): every mutation then commits through
-  * a claim-fenced log version ([[commitOutcomesVersioned]]) and a
-  * losing concurrent writer fails LOUDLY
-  * ([[AvroVersions.ConcurrentWriteException]]) instead of interleaving.
+  * Every rewrite lands in an invisible dot-temp first (a failure before
+  * the commit sweeps the temps; originals are untouched), and
+  * [[commitOutcomes]] commits the outcome set:
+  *  - VERSIONED table: the rewritten files take fresh names and ONE
+  *    file-set swap ([[AvroRlo.commitReplace]]) retires the originals —
+  *    a claim-fenced log version, so a losing concurrent writer fails
+  *    LOUDLY ([[AvroVersions.ConcurrentWriteException]]).
+  *  - plain table: each rewritten file swaps IN PLACE, keeping its name
+  *    (the filename-watermark stream and the delete specs rely on "no
+  *    file appears or vanishes"), ordered so that at every instant the
+  *    visible table is CORRECT (possibly conservative):
+  *      1. delete the file's sidecar — stale stats must never describe
+  *         the new contents (a stale row count would poison count(*)
+  *         pushdown);
+  *      2. rename the temp OVER the original in one overwrite-rename
+  *         ([[FileContext]] `Options.Rename.OVERWRITE` — atomic on
+  *         POSIX and HDFS), so there is no instant where the file is
+  *         absent;
+  *      3. write the regenerated sidecar.
+  *    A crash after (1) or (2) leaves a readable, correct file without
+  *    a sidecar — reads stay exact (pruning is conservative on missing
+  *    sidecars) and re-running the same mutation completes the work
+  *    (idempotence: the rewrite drops no row twice). Emptied files
+  *    unlink whole through the swap. This ordering keeps READERS
+  *    correct; it does NOT serialize WRITERS — two concurrent mutations
+  *    of one plain table are out of contract (they can sweep each
+  *    other's temps).
   */
 private[graft] object AvroRewrite {
 
@@ -270,38 +273,28 @@ private[graft] object AvroRewrite {
     (candidates, dataFilters, targets)
   }
 
-  /** Shared copy-on-write FAN-OUT: sweep orphan `tempPrefix` dot-temps
-    * (a hard crash's leftovers), run `rewrite(path, partVals)` one Spark
-    * task per target file (driver-local without a session), sweep temps
-    * and rethrow on any failure. The caller commits the outcomes per
-    * its tier (swap / unlink). Documented caveat: two CONCURRENT
-    * mutations of one table would sweep each other's temps; concurrent
-    * mutations are outside this source's contract.
+  /** Shared rewrite FAN-OUT: sweep orphan `tempPrefix` dot-temps (a
+    * hard crash's leftovers), run `rewrite` one Spark task per item
+    * (driver-local without a session, or for a single item), sweep
+    * temps and rethrow on any failure. The caller commits the results.
+    * Documented caveat: two CONCURRENT mutations of one table would
+    * sweep each other's temps; concurrent mutations are outside this
+    * source's contract.
     */
-  private[sources] def cowFanout(pathStr: String, conf: Configuration,
-      targets: Seq[String], partSpec: Seq[(String, String)],
-      tempPrefix: String,
-      rewrite: (String, Map[String, Any]) => Outcome): Seq[Outcome] = {
-    if (targets.isEmpty) return Seq.empty
+  private[sources] def fanout[A: scala.reflect.ClassTag,
+      B: scala.reflect.ClassTag](pathStr: String, conf: Configuration,
+      items: Seq[A], tempPrefix: String)(rewrite: A => B): Seq[B] = {
+    if (items.isEmpty) return Seq.empty
     val root = new Path(pathStr)
     val fs = root.getFileSystem(conf)
     AvroSink.tempSweep(fs, root, tempPrefix)
-    val partNameSet = partSpec.map(_._1).toSet
-    val partValsOf: String => Map[String, Any] = p => {
-      val raw = AvroPartitions.rawValuesOf(p, partNameSet)
-      partSpec.map { case (n, t) =>
-        n -> raw.get(n).map(AvroPartitions.typed(_, t)).orNull
-      }.toMap
-    }
     try {
       org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(ss) if targets.size > 1 =>
-          val work = targets.map(p => (p, partValsOf(p)))
-          ss.sparkContext.parallelize(work,
-            math.min(work.size, math.max(1, ss.sparkContext.defaultParallelism)))
-            .map { case (p, pv) => rewrite(p, pv) }
-            .collect().toSeq
-        case _ => targets.map(p => rewrite(p, partValsOf(p)))
+        case Some(ss) if items.size > 1 =>
+          ss.sparkContext.parallelize(items,
+            math.min(items.size, math.max(1, ss.sparkContext.defaultParallelism)))
+            .map(rewrite).collect().toSeq
+        case _ => items.map(rewrite)
       }
     } catch {
       case t: Throwable =>
@@ -310,13 +303,27 @@ private[graft] object AvroRewrite {
     }
   }
 
+  /** [[fanout]] over container files: `rewrite(path, partVals)` per
+    * target, the file's path-borne partition values typed per the spec.
+    */
+  private[sources] def cowFanout(pathStr: String, conf: Configuration,
+      targets: Seq[String], partSpec: Seq[(String, String)],
+      tempPrefix: String,
+      rewrite: (String, Map[String, Any]) => Outcome): Seq[Outcome] = {
+    val partNameSet = partSpec.map(_._1).toSet
+    val work = targets.map { p =>
+      val raw = AvroPartitions.rawValuesOf(p, partNameSet)
+      (p, partSpec.map { case (n, t) =>
+        n -> raw.get(n).map(AvroPartitions.typed(_, t)).orNull
+      }.toMap)
+    }
+    fanout(pathStr, conf, work, tempPrefix) { case (p, pv) => rewrite(p, pv) }
+  }
+
   /** Driver orchestration for the UPDATE tier (DELETE's lives in
     * [[AvroTable.deleteWhere]], whose whole-file fast path has no
-    * UPDATE analogue): prune, fan out, swap every `Rewritten` outcome
-    * in place — or, on a VERSIONED table, commit the outcome set
-    * through the manifest log ([[commitOutcomesVersioned]]), leaving
-    * the originals untouched for time travel. Unchanged files stay
-    * byte-identical either way.
+    * UPDATE analogue): prune, fan out, commit ([[commitOutcomes]]).
+    * Unchanged files stay byte-identical.
     */
   private[sources] def runUpdate(pathStr: String,
       conf: Configuration, filters: Array[Filter],
@@ -331,42 +338,38 @@ private[graft] object AvroRewrite {
     val (_, _, targets) = splitAndPrune(pathStr, conf, filters, partSpec)
     val outcomes = cowFanout(pathStr, conf, targets, partSpec, ".graft-upd-",
       (p, pv) => updateRewrite(p, pv, filters, assignments))
-    if (AvroVersions.isVersioned(pathStr, conf))
-      commitOutcomesVersioned(conf, pathStr, outcomes, "update")
-    else outcomes.foreach {
-      case Rewritten(p, temp, stats, _, _) =>
-        swapInPlace(conf, temp, p, stats)
-      case _ => ()
-    }
+    commitOutcomes(conf, pathStr, outcomes, op = "update")
   }
 
-  /** Versioned commit of a COW outcome set (r19): every `Rewritten`
-    * temp renames to a FRESH visible name (`part-cow-<op>-<k>.avro`,
-    * sidecar first — inert without its container), then ONE manifest
-    * commit swaps the rewritten and emptied originals out of the file
-    * set — the commit point, fenced by the log's claim protocol. The
-    * originals stay on disk: older versions still reference them
-    * (time travel); [[AvroVersions.expire]] reclaims. A crash before
-    * the manifest commit leaves only unreferenced fresh-name files —
-    * invisible to versioned readers, swept by expire's orphan pass.
+  /** Commit a COW outcome set (class doc), shared by the DELETE and
+    * UPDATE row tiers, through the one file-set swap. VERSIONED table:
+    * every `Rewritten` temp takes a FRESH visible name
+    * (`part-cow-<op>-<k>.avro`) and the swap retires the rewritten and
+    * emptied originals (retained on disk for time travel;
+    * [[AvroVersions.expire]] reclaims). Plain table: each `Rewritten`
+    * file swaps in place ([[swapInPlace]]) and the swap unlinks the
+    * `Emptied` ones.
     */
-  private[sources] def commitOutcomesVersioned(conf: Configuration,
+  private[sources] def commitOutcomes(conf: Configuration,
       pathStr: String, outcomes: Seq[Outcome], op: String): Unit = {
-    val root = new Path(pathStr)
-    val fs = root.getFileSystem(conf)
-    val opId = java.util.UUID.randomUUID().toString.take(8)
-    val adds = outcomes.zipWithIndex.collect {
-      case (Rewritten(p, temp, stats, _, _), k) =>
-        (temp, new Path(new Path(p).getParent,
-          f"part-cow-$opId-$k%05d.avro").toString, stats)
+    val opId = AvroRlo.newOpId()
+    val emptied = outcomes.collect { case Emptied(p, _) => p }
+    val (adds, removes) = if (AvroVersions.isVersioned(pathStr, conf)) {
+      val rewritten = outcomes.zipWithIndex.collect {
+        case (Rewritten(p, temp, stats, _, _), k) =>
+          (p, (temp, new Path(new Path(p).getParent,
+            f"part-cow-$opId-$k%05d.avro").toString, stats))
+      }
+      (rewritten.map(_._2), rewritten.map(_._1) ++ emptied)
+    } else {
+      outcomes.foreach {
+        case Rewritten(p, temp, stats, _, _) =>
+          swapInPlace(conf, temp, p, stats)
+        case _ => ()
+      }
+      (Seq.empty, emptied)
     }
-    val removes = outcomes.collect {
-      case Rewritten(p, _, _, _, _) => p
-      case Emptied(p, _) => p
-    }
-    if (adds.isEmpty && removes.isEmpty) return // nothing matched
-    AvroVersions.commitSwap(fs, root, adds, removes, op)
-    ()
+    AvroRlo.commitReplace(conf, pathStr, opId, adds, removes, op)
   }
 
   /** Unlink a container + its sidecar and retire newly-empty partition

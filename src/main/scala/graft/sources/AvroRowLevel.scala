@@ -37,7 +37,7 @@ import scala.jdk.CollectionConverters._
   *    ordinary [[AvroWriterFactory]] dot-temp protocol (partition layout
   *    preserved — an UPDATE that changes a partition column simply
   *    routes the row to its new directory); the driver commits through
-  *    the `.graft-rlo-` MANIFEST protocol ([[AvroRlo]]).
+  *    graft-avro's one file-set swap ([[AvroRlo]]).
   *
   * At 100 TB: a selective `UPDATE ... WHERE id = k` reads and rewrites
   * only the bloom/zone-map-positive containers, one task per split.
@@ -193,8 +193,8 @@ private[sources] class AvroCowScan(op: AvroRowLevelOperation,
 }
 
 /** The replace-groups write: ordinary dot-temp task writes, committed
-  * by swapping the scanned files for the new ones through the
-  * `.graft-rlo-` manifest ([[AvroRlo.commitReplace]]).
+  * by swapping the scanned files for the new ones
+  * ([[AvroRlo.commitReplace]]).
   */
 private[sources] class AvroCowWrite(op: AvroRowLevelOperation,
     schema: StructType, pathStr: String, queryId: String,
@@ -241,8 +241,13 @@ private[sources] class AvroCowWrite(op: AvroRowLevelOperation,
         (tempPath, new Path(temp.getParent, finalName).toString, stats)
       }
     }.toSeq
+    // replacement rows arrive in the rewrite query's order, not the
+    // committed sort order — break the marker's claim BEFORE any file
+    // becomes visible (a clear after the renames would leave a window
+    // where a reader sees unsorted files under a live sorted claim)
+    if (adds.nonEmpty) AvroSortMarker.clear(pathStr, AvroSink.driverConf())
     AvroRlo.commitReplace(AvroSink.driverConf(), pathStr, queryId.take(8),
-      adds, removes)
+      adds, removes, "replace")
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -253,14 +258,21 @@ private[sources] class AvroCowWrite(op: AvroRowLevelOperation,
   }
 }
 
-/** The `.graft-rlo-` replace-commit protocol — the crash discipline of
-  * [[AvroCompact]]'s bin manifests generalized to an {adds, removes}
-  * file-set swap, with the SAME read-side guarantee: at every instant a
-  * reader's [[AvroDsv2.listFiles]] masks the manifest into exactly-once
-  * content (all adds present ⇒ removes excluded; any add missing ⇒ adds
-  * excluded).
+/** The ONE file-set swap of graft-avro: every mutation that replaces a
+  * set of files — SQL UPDATE / MERGE / rewrite-shaped DELETE
+  * ([[AvroCowWrite]]), compaction ([[AvroCompact]]), whole-file deletes
+  * and the versioned row tier ([[AvroRewrite.commitOutcomes]]) — commits
+  * an {adds, removes} pair here, and this is the only place that picks
+  * the commit route:
+  *  - VERSIONED table: [[AvroVersions.commitSwap]] — the adds rename to
+  *    their fresh names, ONE fenced log version swaps the file set, and
+  *    the removes stay on disk for time travel.
+  *  - plain table: the `.graft-rlo-` manifest, with the read-side
+  *    guarantee that at every instant [[AvroDsv2.listFiles]] masks it
+  *    into exactly-once content (all adds present ⇒ removes excluded;
+  *    any add missing ⇒ adds excluded).
   *
-  * Commit order per operation:
+  * Plain commit order per operation:
   *   1. sweep orphan rlo manifests of prior crashes ([[recover]]);
   *   2. write the manifest (root-level, paths RELATIVE to the table
   *      root, atomic temp+rename) — removes-only commits skip it and
@@ -275,34 +287,34 @@ private[sources] class AvroCowWrite(op: AvroRowLevelOperation,
   *   5. delete the manifest.
   * Crash before the last rename ⇒ recovery aborts (deletes renamed
   * adds + orphan sidecars; originals untouched). Crash after ⇒ recovery
-  * finishes (4)+(5). Readers are exact throughout via the mask.
+  * finishes (4)+(5). Readers are exact throughout via the mask. The
+  * swap is all-or-nothing on both routes: a multi-file add set (every
+  * bin of one compaction) commits at one point.
+  *
+  * The swap never touches the sort marker: the callers whose adds break
+  * the every-file-sorted invariant (compaction, [[AvroCowWrite]], an
+  * update assigning a sort column) clear it BEFORE they call here;
+  * deletes keep it.
   */
 private[graft] object AvroRlo {
 
+  /** A fresh short id naming one mutation's manifest and added files. */
+  def newOpId(): String = java.util.UUID.randomUUID().toString.take(8)
+
   def commitReplace(conf: Configuration, rootStr: String, opId: String,
       adds: Seq[(String, String, Array[Byte])], // (temp, finalAbs, stats)
-      removes: Seq[String]): Unit = {
+      removes: Seq[String], op: String): Unit = {
     val root = new Path(rootStr)
     val fs = root.getFileSystem(conf)
     if (adds.isEmpty && removes.isEmpty) return
-    // VERSIONED table (r19): the manifest log is the commit point —
-    // rename the adds to their final names (sidecar first), then swap
-    // the file set in ONE fenced log commit; removes stay on disk for
-    // time travel, no rlo manifest needed
     if (AvroVersions.isVersioned(fs, root)) {
-      // replacement rows arrive in the rewrite query's order, not the
-      // committed sort order — break the marker's claim BEFORE any file
-      // becomes visible (r19 review: clear-after-rename left a window
-      // where a reader saw unsorted files under a live sorted claim)
-      AvroSortMarker.clear(rootStr, conf)
-      AvroVersions.commitSwap(fs, root, adds, removes, "replace")
+      AvroVersions.commitSwap(fs, root, adds, removes, op)
       return
     }
     recover(fs, root)
-    AvroSortMarker.clear(rootStr, conf)
     if (adds.isEmpty) {
-      // delete-everything-scanned, nothing to add: plain unlink (the
-      // same per-file atomicity as the metadata DELETE tier)
+      // nothing to add: plain unlink (per-file atomic, like the
+      // metadata DELETE tier)
       AvroRewrite.unlinkWithDirs(fs, root, removes)
       return
     }

@@ -238,10 +238,10 @@ object AvroVersions {
     } finally fs.delete(claim, false)
   }
 
-  /** The ONE versioned file-set swap all mutation tiers commit through
-    * (r19 review: three hand-rolled copies of this crash-critical
-    * ordering could drift): per add, stats sidecar FIRST (inert without
-    * its container), then rename the dot-temp to its fresh visible name
+  /** The versioned route of graft-avro's one file-set swap
+    * ([[AvroRlo.commitReplace]], its only caller): per add, stats
+    * sidecar FIRST (inert without its container), then rename the
+    * dot-temp to its fresh visible name
     * — invisible to versioned readers until the fenced manifest commit
     * swaps `removes` out and the adds in. Removes stay on disk for time
     * travel; a crash before the log commit leaves only unreferenced

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 class DimReduceSpec extends SparkSpec {
   import spark.implicits._
@@ -85,5 +86,15 @@ class DimReduceSpec extends SparkSpec {
     val r = DimReduce.pcaProject(df, "id", "embedding", comps).head()
     assert(r.getDouble(1) == 3.0)
     assert(approx(r.getDouble(2), 0.6 * 3 + 0.8 * 4, 1e-6))
+  }
+
+  test("plan: JL projection is a pure narrow map — zero exchanges") {
+    val emb = (1 to 50).map(i => (i.toLong, Array.tabulate(8)(j => (i + j).toFloat)))
+      .toDF("vec_id", "embedding")
+    val q = DimReduce.randomProject(emb, "vec_id", "embedding", 8, 4)
+    q.collect()
+    val nodes = allNodes(q.queryExecution.executedPlan)
+    assert(!nodes.exists(_.isInstanceOf[Exchange]),
+      "randomProject introduced a shuffle")
   }
 }

@@ -3,6 +3,7 @@ package graft.ext
 import graft.SparkSpec
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 
 class RetrievalSubstringSpec extends SparkSpec {
   import spark.implicits._
@@ -224,5 +225,25 @@ class RetrievalSubstringSpec extends SparkSpec {
     assert(out.find(_._1 == 20L).get._3 === 2L)
     // k truncates deterministically
     assert(Retrieval.rrfFuse(Seq(a, b), "id", k = 2).count() === 2L)
+  }
+
+  // ---- plan shape -----------------------------------------------------
+
+  // 200 docs; every third shares a long run with its neighbor -> real
+  // spans (the plan-shape tests' input)
+  private val planDocs = (1 to 200).map { i =>
+    val base = s"alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi pi run$i"
+    (i.toLong, if (i % 3 == 0) base.replace(s"run$i", s"run${i - 1}") else base)
+  }.toDF("doc_id", "text")
+
+  test("plan: substring dedup joins on gram hash — no cartesian product anywhere") {
+    val nodes = graft.Caches.scoped {
+      val q = SubstringDedup.removeDuplicateSpans(planDocs, "text", "doc_id",
+        gramTokens = 5, minDocFreq = 2)
+      q.collect()
+      allNodes(q.queryExecution.executedPlan)
+    }
+    assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]),
+      "substring dedup planned a cartesian product")
   }
 }

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** r18: compaction execution — multi-file bins rewrite into one
-  * container each through the manifest commit protocol; data identity,
-  * file-count-equals-plan, idempotence, and both crash-recovery paths.
+  * container each, all committed in one file-set swap; data identity,
+  * file-count-equals-plan, idempotence, and both crash-recovery paths
+  * of the swap's `.graft-rlo-` manifest.
   */
 class AvroCompactSpec extends SparkSpec {
   import spark.implicits._
@@ -107,46 +108,94 @@ class AvroCompactSpec extends SparkSpec {
     assert(back.where(col("v") === col("id") * 2).count() === 50L)
   }
 
+  /** A crashed swap's root-level manifest: root-relative adds/removes. */
+  private def writeRlo(dir: String, opId: String, adds: Seq[String],
+      removes: Seq[String]): org.apache.hadoop.fs.Path = {
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val m = om.createObjectNode()
+    val aArr = m.putArray("adds"); adds.foreach(a => aArr.add(a))
+    val rArr = m.putArray("removes"); removes.foreach(r => rArr.add(r))
+    val mp = new org.apache.hadoop.fs.Path(dir,
+      s".graft-rlo-$opId.manifest.json")
+    val o = fs.create(mp, true); o.write(om.writeValueAsBytes(m)); o.close()
+    mp
+  }
+
+  private def copyAs(src: String, dir: String, rel: String)
+      : org.apache.hadoop.fs.Path = {
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val dst = new org.apache.hadoop.fs.Path(dir, rel)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(src),
+      fs, dst, false, conf)
+    dst
+  }
+
   test("crash recovery: both manifest paths repair exactly") {
     val dir = tempDir()
     AvroSink.write(spark.range(400).select(col("id")).repartition(4), dir,
       overwrite = true)
     val before = contents(dir)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    // crash BEFORE the commit point: manifest + temp, no final file
+    val files = AvroDsv2.listFiles(dir, conf).map(_._1)
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    // crash AFTER the commit point: every add renamed in (a copy of
+    // source 0 standing in for its bin's output), the source undeleted
+    val committedAdd = copyAs(files(0), dir, "compact-cafebabe-post0001.avro")
+    val m1 = writeRlo(dir, "post0001", Seq(committedAdd.getName),
+      Seq(name(files(0))))
+    // crash BEFORE the commit point: one of two adds renamed in, plus
+    // the bin's orphan rewrite temp
+    val partialAdd = copyAs(files(1), dir, "compact-deadbeef-pre00001.avro")
+    val m2 = writeRlo(dir, "pre00001",
+      Seq(partialAdd.getName, "compact-0badf00d-pre00001.avro"),
+      Seq(name(files(1)), name(files(2))))
     val orphanTemp = new org.apache.hadoop.fs.Path(dir,
       ".graft-cmp-deadbeef.avro.tmp")
     fs.create(orphanTemp, true).close()
-    val m1 = om.createObjectNode()
-    m1.put("final", "compact-deadbeef.avro")
-    m1.putArray("sources") // empty: nothing to delete
-    val m1p = new org.apache.hadoop.fs.Path(dir,
-      ".graft-cmp-deadbeef.manifest.json")
-    val o1 = fs.create(m1p, true); o1.write(om.writeValueAsBytes(m1)); o1.close()
-    // crash AFTER the commit point: final exists, one source undeleted.
-    // Simulate by compacting a COPY of one source into a "final" file:
-    // here the final is a real readable container (a copy of source 0)
-    val files = AvroDsv2.listFiles(dir, conf)
-    val src0 = files.head._1
-    val finalP = new org.apache.hadoop.fs.Path(dir, "compact-cafebabe.avro")
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(src0),
-      fs, finalP, false, conf)
-    val m2 = om.createObjectNode()
-    m2.put("final", "compact-cafebabe.avro")
-    val arr = m2.putArray("sources"); arr.add(src0)
-    val m2p = new org.apache.hadoop.fs.Path(dir,
-      ".graft-cmp-cafebabe.manifest.json")
-    val o2 = fs.create(m2p, true); o2.write(om.writeValueAsBytes(m2)); o2.close()
-    // recovery runs at the START of compact (huge target -> also compacts)
-    graft.ops.Layout.compact(dir, Long.MaxValue / 4)
-    assert(!fs.exists(orphanTemp), "pre-commit crash: temp must be swept")
-    assert(!fs.exists(m1p) && !fs.exists(m2p), "manifests must be consumed")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(src0)),
-      "post-commit crash: the undeleted source must be removed")
-    // the table's CONTENT is exactly the original rows (the copied final
-    // replaced src0 one-for-one; recovery removed the duplicate source)
+    assert(contents(dir) === before, "readers are exact in both windows")
+    // the next compaction finishes one swap, rolls back the other, and
+    // compacts (huge target -> one bin over the masked listing)
+    assert(graft.ops.Layout.compact(dir, Long.MaxValue / 4) === 1)
+    assert(!fs.exists(orphanTemp), "orphan rewrite temp must be swept")
+    assert(!fs.exists(m1) && !fs.exists(m2), "manifests must be consumed")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(files(0))),
+      "post-commit crash: the pending remove must be finished")
+    assert(!fs.exists(partialAdd),
+      "pre-commit crash: the partial add set must be rolled back")
+    assert(AvroDsv2.listFiles(dir, conf).size === 1)
     assert(contents(dir) === before,
       "recovery must converge to exactly-once content")
+  }
+
+  test("a torn multi-bin compaction reads as the old table; the next compact rolls back, then compacts") {
+    val dir = tempDir()
+    val df = spark.range(600).select(col("id"),
+      concat(lit("L"), (col("id") % 2).cast("string")).as("lang"))
+    AvroSink.writePartitioned(df.where(col("id") < 300), dir, Seq("lang"),
+      overwrite = true)
+    AvroSink.writePartitioned(df.where(col("id") >= 300), dir, Seq("lang"))
+    val files = AvroDsv2.listFiles(dir, conf).map(_._1)
+    assert(files.size === 4, files.toString)
+    val before = contents(dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    def rel(p: String) = AvroVersions.relativize(fs, root, p)
+    // two bins (one per partition directory) committing in one swap;
+    // only the FIRST bin's add got renamed in before the crash
+    val l0 = files.filter(_.contains("lang=L0"))
+    val firstAdd = copyAs(l0.head, dir, "lang=L0/compact-aaaa-torn0001.avro")
+    val m = writeRlo(dir, "torn0001",
+      Seq("lang=L0/compact-aaaa-torn0001.avro",
+        "lang=L1/compact-bbbb-torn0001.avro"),
+      files.map(rel))
+    assert(contents(dir) === before,
+      "a partial add set must read as the pre-compaction table")
+    assert(graft.ops.Layout.compact(dir, Long.MaxValue / 4) === 2)
+    assert(!fs.exists(firstAdd) && !fs.exists(m),
+      "the torn swap must be rolled back")
+    val after = AvroDsv2.listFiles(dir, conf).map(_._1)
+    assert(after.size === 2 && after.forall(_.contains("compact-")), after.toString)
+    assert(contents(dir) === before)
   }
 }

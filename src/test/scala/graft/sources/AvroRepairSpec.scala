@@ -4,10 +4,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** r19 (the r18 ADVICE queue): read-side manifest masking — a reader
-  * hitting the post-commit duplicate window sees exactly-once rows
-  * without waiting for the next compact(); the rewrite tier's STRICT
-  * filter evaluator; sidecar self-repair on the Untouched rewrite path;
-  * and block-granularity inference so tuned layouts survive rewrites.
+  * hitting a crashed swap's post-commit duplicate window sees
+  * exactly-once rows without waiting for the next mutation, and a
+  * leftover manifest of the retired per-bin protocol fails loudly; the
+  * rewrite tier's STRICT filter evaluator; sidecar self-repair on the
+  * Untouched rewrite path; and block-granularity inference so tuned
+  * layouts survive rewrites.
   */
 class AvroRepairSpec extends SparkSpec {
 
@@ -16,38 +18,44 @@ class AvroRepairSpec extends SparkSpec {
 
   private val conf = new org.apache.hadoop.conf.Configuration()
 
+  private def writeRlo(dir: String, opId: String, adds: Seq[String],
+      removes: Seq[String]): org.apache.hadoop.fs.Path = {
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val m = om.createObjectNode()
+    val aArr = m.putArray("adds"); adds.foreach(a => aArr.add(a))
+    val rArr = m.putArray("removes"); removes.foreach(r => rArr.add(r))
+    val mp = new org.apache.hadoop.fs.Path(dir,
+      s".graft-rlo-$opId.manifest.json")
+    val o = fs.create(mp, true); o.write(om.writeValueAsBytes(m)); o.close()
+    mp
+  }
+
   test("reader masks a committed compaction manifest: no duplicate rows") {
     val dir = tempDir()
     AvroSink.write(spark.range(400).select(col("id")).repartition(4), dir,
       overwrite = true)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    // simulate a crash AFTER the commit rename, BEFORE the source
-    // deletes: final container (copy of source 0) + manifest + source
+    // simulate a compaction's swap crashing AFTER its commit rename,
+    // BEFORE the source deletes: output (copy of source 0) + manifest +
+    // source
     val src0 = AvroDsv2.listFiles(dir, conf).head._1
-    val finalP = new org.apache.hadoop.fs.Path(dir, "compact-cafebabe.avro")
+    val finalP = new org.apache.hadoop.fs.Path(dir,
+      "compact-cafebabe-0000aaaa.avro")
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(src0),
       fs, finalP, false, conf)
-    val m = om.createObjectNode()
-    m.put("final", "compact-cafebabe.avro")
-    m.putArray("sources").add(src0)
-    val mp = new org.apache.hadoop.fs.Path(dir,
-      ".graft-cmp-cafebabe.manifest.json")
-    val o = fs.create(mp, true); o.write(om.writeValueAsBytes(m)); o.close()
+    val mp = writeRlo(dir, "0000aaaa", Seq(finalP.getName),
+      Seq(new org.apache.hadoop.fs.Path(src0).getName))
     // the source file is still on disk, but the LISTING masks it
     assert(fs.exists(new org.apache.hadoop.fs.Path(src0)))
     val listed = AvroDsv2.listFiles(dir, conf).map(_._1)
     assert(!listed.contains(src0), "committed manifest must mask its sources")
-    assert(listed.exists(_.endsWith("compact-cafebabe.avro")))
+    assert(listed.exists(_.endsWith("compact-cafebabe-0000aaaa.avro")))
     assert(spark.read.format("graft-avro").load(dir).count() === 400L,
       "no duplicate rows during the post-commit window")
-    // an UNCOMMITTED manifest (no final file) masks nothing
-    val m2 = om.createObjectNode()
-    m2.put("final", "compact-00000000.avro")
-    m2.putArray("sources").add(listed.head)
-    val mp2 = new org.apache.hadoop.fs.Path(dir,
-      ".graft-cmp-00000000.manifest.json")
-    val o2 = fs.create(mp2, true); o2.write(om.writeValueAsBytes(m2)); o2.close()
+    // an UNCOMMITTED manifest (its add missing) masks no source
+    val mp2 = writeRlo(dir, "0000bbbb", Seq("compact-00000000-0000bbbb.avro"),
+      Seq(new org.apache.hadoop.fs.Path(listed.head).getName))
     assert(spark.read.format("graft-avro").load(dir).count() === 400L)
     fs.delete(mp2, false)
     // an UNREADABLE committed manifest fails loudly, never serves dups
@@ -58,6 +66,32 @@ class AvroRepairSpec extends SparkSpec {
       AvroDsv2.listFiles(dir, conf)
     }
     assert(e.getMessage.contains("unreadable commit manifest"))
+  }
+
+  test("a leftover .graft-cmp manifest fails the listing loudly; rewrite temps stay invisible") {
+    val dir = tempDir()
+    AvroSink.write(spark.range(100).select(col("id")).repartition(2), dir,
+      overwrite = true)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    // an orphan rewrite temp is a dot-file: never listed, never read
+    fs.create(new org.apache.hadoop.fs.Path(dir,
+      ".graft-cmp-cafebabe.avro.tmp"), true).close()
+    assert(AvroDsv2.listFiles(dir, conf).size === 2)
+    assert(spark.read.format("graft-avro").load(dir).count() === 100L)
+    // a per-bin compaction manifest of older code is refused by name
+    val src0 = AvroDsv2.listFiles(dir, conf).head._1
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val m = om.createObjectNode()
+    m.put("final", "compact-cafebabe.avro")
+    m.putArray("sources").add(src0)
+    val mp = new org.apache.hadoop.fs.Path(dir,
+      ".graft-cmp-cafebabe.manifest.json")
+    val o = fs.create(mp, true); o.write(om.writeValueAsBytes(m)); o.close()
+    val e = intercept[IllegalStateException] {
+      AvroDsv2.listFiles(dir, conf)
+    }
+    assert(e.getMessage.contains(".graft-cmp-cafebabe.manifest.json"),
+      e.getMessage)
   }
 
   test("rewrite tier evaluates filters STRICTLY: unhandled shape throws") {

@@ -57,15 +57,27 @@ class AvroSortedScanSpec extends SparkSpec {
     countNodes(p, _.isInstanceOf[
       org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
 
-  test("sort marker lifecycle across the mutation classes") {
+  // the same lifecycle over a plain table and over a versioned one:
+  // every mutation class commits through the one file-set swap, which
+  // must leave the marker to its callers
+  for ((label, versioned) <- Seq("" -> false, " (versioned table)" -> true))
+  test(s"sort marker lifecycle across the mutation classes$label") {
     val dir = tempDir()
     writeClustered(dir, 1000)
+    if (versioned) AvroVersions.enable(dir, conf)
     assert(AvroSortMarker.read(dir, conf) === Seq("id"))
     // an order-matching clustered append keeps it
     writeClustered(dir, 500, overwrite = false)
     assert(AvroSortMarker.read(dir, conf) === Seq("id"))
     // a row-level COW delete preserves record order -> marker survives
     AvroSink.deleteWhere(spark, dir, col("id") === 3L)
+    assert(AvroSortMarker.read(dir, conf) === Seq("id"))
+    // a delete that empties a whole file (the file starting highest)
+    // removes rows only -> marker survives
+    val highest = AvroVersions.resolveFiles(dir, conf)
+      .getOrElse(AvroDsv2.listFiles(dir, conf))
+      .flatMap(f => AvroStats.read(f._1).flatMap(_.cols("id").minL)).max
+    AvroSink.deleteWhere(spark, dir, col("id") >= highest)
     assert(AvroSortMarker.read(dir, conf) === Seq("id"))
     // an update to a NON-sort column preserves per-file sortedness
     AvroSink.updateWhere(spark, dir, col("id") === 5L, Map("v" -> 99L))
